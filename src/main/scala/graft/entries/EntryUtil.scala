@@ -462,10 +462,17 @@ object EntryUtil {
     }
 
   /** The stream-entry harness's ONE memory-sink lifecycle (both the
-    * single- and two-input forms): allocate the next versioned sink name
-    * (dropping the previous run's view — one live sink per prefix),
-    * start the query under the state-store sizing, run `feed` to
-    * completion, stop, return the sink table. */
+    * single- and two-input forms): drop the previous run's view, start
+    * the query under the state-store sizing with the sink named
+    * `prefix` itself, run `feed` to completion, stop, return the sink
+    * table.
+    *
+    * CONTRACT — one sink per prefix, single-threaded: the sink name is
+    * the prefix, not a fresh versioned name, so two concurrent runs of
+    * the same prefix would drop each other's view and collide on the
+    * query name. Callers run a given prefix from one thread at a time
+    * (each stream entry owns its prefix; Verify and Bench run entries
+    * sequentially). Distinct prefixes may run concurrently. */
   private def runSink(spark: SparkSession, prefix: String, out: DataFrame,
       outputMode: String)(
       feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
@@ -922,7 +929,7 @@ object EntryUtil {
     * (TsdbLayout.writeDatabase), a REAL
     * [[graft.streaming.TsdbStream.eventsIngest]] stream delivered
     * Jan 20-30 into the `events_l0` tier, and
-    * [[graft.model.TsdbLayout.compactEventsL0]] claimed days 20-24
+    * [[graft.model.TsdbLayout.compactL0]] (events) claimed days 20-24
     * into the batch layout (watermark Jan 25). A select-events over
     * the canonical window reads THREE provenances — batch,
     * compacted-from-stream, live L0 — through one opened context and
@@ -939,7 +946,8 @@ object EntryUtil {
         df => graft.streaming.TsdbStream.eventsIngest(
           df.withColumn("metric", lit("!log")),
           s"$db/events_l0", s"$db/ev_ingest_ckpt"))
-      graft.model.TsdbLayout.compactEventsL0(spark, db, L0CompactNs)
+      graft.model.TsdbLayout.compactL0(spark, db, L0CompactNs,
+        graft.model.TsdbLayout.Tier.Events)
       val opened = graft.model.TsdbLayout.openDatabase(spark, db)
       new Engine(opened.copy(series = cachedSeries(spark, dir, ctx.series)))
     })
@@ -985,11 +993,13 @@ object EntryUtil {
       // claim EVERYTHING (cutoff past the data), then rotate BOTH
       // halves' epochs — root + checkpoint dropped whole
       graft.model.TsdbLayout.compactL0(spark, db, ToNs)
-      graft.model.TsdbLayout.compactEventsL0(spark, db, ToNs)
+      graft.model.TsdbLayout.compactL0(spark, db, ToNs,
+        graft.model.TsdbLayout.Tier.Events)
       require(graft.model.TsdbLayout.retireIngestRoot(spark, db,
         checkpoint = Some(s"$db/ingest_ckpt")),
         "the fully-compacted samples root must retire")
-      require(graft.model.TsdbLayout.retireEventsIngestRoot(spark, db,
+      require(graft.model.TsdbLayout.retireIngestRoot(spark, db,
+        graft.model.TsdbLayout.Tier.Events,
         checkpoint = Some(s"$db/ev_ingest_ckpt")),
         "the fully-compacted events root must retire")
       val opened = graft.model.TsdbLayout.openDatabase(spark, db)
@@ -1117,11 +1127,11 @@ object EntryUtil {
     * of the catalog lifecycle: compaction claimed every day,
     * [[graft.model.TsdbLayout.foldCatalogL0]] merged the stream
     * registrations into the persisted catalog (new-only, idempotent),
-    * and [[graft.model.TsdbLayout.retireCatalogIngestRoot]] +
-    * [[graft.model.TsdbLayout.retireIngestRoot]] verified and dropped
-    * both epoch roots. The reopened database serves the SAME answers
-    * from the persisted catalog alone — fold and rotation change
-    * storage, never results (one oracle with the live-root twin).
+    * and [[graft.model.TsdbLayout.retireIngestRoot]] (catalog, then
+    * samples) verified and dropped both epoch roots. The reopened
+    * database serves the SAME answers from the persisted catalog
+    * alone — fold and rotation change storage, never results (one
+    * oracle with the live-root twin).
     *
     * Deliberately a SECOND build rather than a copy of
     * [[newSeriesDbFor]]'s directory: a streaming file sink's
@@ -1133,7 +1143,8 @@ object EntryUtil {
       val db = newSeriesDbBuild(spark, dir, "graft_catrot_db", ToNs)
       val folded = graft.model.TsdbLayout.foldCatalogL0(spark, db)
       require(folded > 0, "the stream registered new series to fold")
-      require(graft.model.TsdbLayout.retireCatalogIngestRoot(spark, db,
+      require(graft.model.TsdbLayout.retireIngestRoot(spark, db,
+        graft.model.TsdbLayout.Tier.Catalog,
         checkpoint = Some(s"$db/catalog_ckpt")),
         "the fully-folded catalog root must retire")
       require(graft.model.TsdbLayout.retireIngestRoot(spark, db,
@@ -1203,7 +1214,7 @@ object EntryUtil {
     * [[graft.streaming.TsdbStream.namedEventsIngest]] +
     * [[graft.streaming.TsdbStream.catalogIngest]] over one source
     * delivered Jan 20-30 of EVERY user's log — odd-user event series
-    * registered live — and compactEventsL0 claimed days 20-24. A
+    * registered live — and the events compactL0 claimed days 20-24. A
     * catalog-wide select-events resolves series the database never
     * persisted over three log provenances. */
   def engineNamedEventsDbFor(spark: SparkSession, dir: String): Engine =
@@ -1222,7 +1233,8 @@ object EntryUtil {
           df, s"$db/events_l0", s"$db/ev_ingest_ckpt"),
         df => graft.streaming.TsdbStream.catalogIngest(
           df, s"$db/catalog_l0", s"$db/catalog_ckpt"))
-      graft.model.TsdbLayout.compactEventsL0(spark, db, L0CompactNs)
+      graft.model.TsdbLayout.compactL0(spark, db, L0CompactNs,
+        graft.model.TsdbLayout.Tier.Events)
       val opened = graft.model.TsdbLayout.openDatabase(spark, db)
       new Engine(opened.copy(series = opened.series.cache()))
     })
@@ -1379,7 +1391,7 @@ object EntryUtil {
     * ([[graft.model.TsdbLayout.nextIngestRoot]] → `samples_l0_e1`)
     * streamed Jan 20-24, compaction claimed it whole, epoch 2
     * (`samples_l0_e2`) streamed Jan 25 on and stays LIVE while
-    * [[graft.model.TsdbLayout.retireIngestEpoch]] drops the drained
+    * [[graft.model.TsdbLayout.retireIngestRoot]] drops the drained
     * epoch-1 root + checkpoint behind its per-root guards. The opened
     * database serves three provenances — batch, compacted epoch 1,
     * live epoch 2 — through one union read, and must equal the plain
@@ -1403,8 +1415,8 @@ object EntryUtil {
         Seq("series_id", "ts", "value", "metric"),
         df => graft.streaming.TsdbStream.layoutIngest(
           df, e2, s"$db/ckpt_e2"))
-      require(graft.model.TsdbLayout.retireIngestEpoch(spark, db, 1,
-        checkpoint = Some(s"$db/ckpt_e1")),
+      require(graft.model.TsdbLayout.retireIngestRoot(spark, db,
+        epoch = Some(1), checkpoint = Some(s"$db/ckpt_e1")),
         "the drained epoch-1 root must retire under the live epoch 2")
       val opened = graft.model.TsdbLayout.openDatabase(spark, db)
       new Engine(opened.copy(series = cachedSeries(spark, dir, ctx.series)))

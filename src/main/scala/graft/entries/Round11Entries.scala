@@ -20,7 +20,7 @@ object Round11Entries {
     // LIVE EVENT ingest into the queryable log layout: a REAL
     // Structured Streaming query (TsdbStream.eventsIngest) delivered
     // Jan 20-30 of the event log through the transactional file sink
-    // into the events_l0 tier, compactEventsL0 claimed days 20-24
+    // into the events_l0 tier, the events compactL0 claimed days 20-24
     // into the batch events layout (watermark Jan 25), and this
     // select-events reads THREE provenances — batch, compacted-from-
     // stream, live L0 — through one opened database. Must equal the
@@ -47,7 +47,7 @@ object Round11Entries {
 
     // the LOG half's rotation, through the same database: the rotated
     // fixture streams BOTH halves, compacts both to the end, and
-    // retires both roots (retireEventsIngestRoot) — this select-events
+    // retires both roots (retireIngestRoot per half) — this select-events
     // over the batch-only-again events layout must equal the flat
     // frame. Oracle shared with ts_select_events_regex
     "ts_select_events_rotated_db" -> ((s, dir) =>
@@ -61,7 +61,7 @@ object Round11Entries {
     // added the late slice partition-scoped (events are appends —
     // existing rows kept byte-for-byte, late rows added once,
     // idempotent by (series, ts, body) identity; the remediation an
-    // eventsL0Stragglers alert routes through). Served select-events
+    // events l0Stragglers alert routes through). Served select-events
     // equals the flat frame. Oracle shared with ts_select_events_regex
     "ts_events_upsert" -> ((s, dir) =>
       EntryUtil.usView(EntryUtil.engineEventsUpsertFor(s, dir).execute(
@@ -88,8 +88,8 @@ object Round11Entries {
 
     // the catalog lifecycle's END: compaction claimed every day,
     // foldCatalogL0 merged the stream registrations into the persisted
-    // catalog (new-only, idempotent), and retireCatalogIngestRoot +
-    // retireIngestRoot dropped both epoch roots behind their loud
+    // catalog (new-only, idempotent), and retireIngestRoot (catalog,
+    // then samples) dropped both epoch roots behind their loud
     // guards. The reopened database serves the SAME select from the
     // persisted catalog alone — fold and rotation change storage,
     // never answers (one oracle with the live-root twin)
@@ -103,7 +103,7 @@ object Round11Entries {
     // persisted catalog hold only the even users before the split; a
     // NAMED event stream (TsdbStream.namedEventsIngest + catalogIngest
     // over one source) delivered every user's log from Jan 20 on —
-    // odd-user event series registered live — and compactEventsL0
+    // odd-user event series registered live — and the events compactL0
     // claimed days 20-24. This catalog-wide select-events resolves
     // never-persisted series over three log provenances. Oracle: the
     // regex select-events with the split replayed

@@ -43,7 +43,7 @@ object Round12Entries {
 
     // ZERO-DOWNTIME rotation: epoch 1 (samples_l0_e1) streamed the
     // split window, compaction claimed it whole, epoch 2 went live at
-    // nextIngestRoot, and retireIngestEpoch dropped the drained epoch-1
+    // nextIngestRoot, and retireIngestRoot dropped the drained epoch-1
     // root while epoch 2 kept ingesting (the kill-nothing contract is
     // spec-pinned in StreamingSpec; here the opened database reads
     // batch + compacted-epoch-1 + live-epoch-2 through one union).

@@ -160,20 +160,11 @@ object IndexCatalog {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  private def hfs(p: String): (org.apache.hadoop.fs.FileSystem,
-      org.apache.hadoop.fs.Path) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(hadoopConf) match {
-      // unwrap the client-side-checksum wrapper (LocalFileSystem):
-      // the manifest is an OPERATOR-EDITABLE text file ("manage
-      // indexes by editing storage"), and a .crc sidecar would turn
-      // every hand edit into a ChecksumException at the next read.
-      // HDFS/S3A handle integrity server-side and pass through as-is
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
-    (fs, hp)
-  }
+  /** The catalog's view of `p`: the RAW filesystem (checksum wrapper
+    * unwrapped) — the manifest is an OPERATOR-EDITABLE text file
+    * ("manage indexes by editing storage"), so it must carry no `.crc`
+    * sidecar ([[HadoopFiles.hfs]]). */
+  private def catalogFs(p: String) = HadoopFiles.hfs(hadoopConf, p, raw = true)
 
   /** `dir`-relative entry paths join by string (URI-safe); absolute
     * recorded paths (local `/...` or scheme-qualified `scheme://...`)
@@ -182,15 +173,10 @@ object IndexCatalog {
     if (entryPath.startsWith("/") || entryPath.contains("://")) entryPath
     else s"${dir.stripSuffix("/")}/$entryPath"
 
-  private def deleteTree(p: String): Unit = {
-    val (f, hp) = hfs(p)
-    f.delete(hp, true); ()
-  }
-
   /** An owned binned index's `__day=<N>` storage partitions as
     * (day, path) — empty for an absent or FLAT (legacy) directory. */
   private def listDayPartitions(idxDir: String): Seq[(Long, String)] = {
-    val (f, hp) = hfs(idxDir)
+    val (f, hp) = catalogFs(idxDir)
     if (!f.exists(hp) || f.getFileStatus(hp).isFile) Nil
     else f.listStatus(hp).toSeq.filter(_.isDirectory).flatMap { st =>
       val name = st.getPath.getName
@@ -199,17 +185,6 @@ object IndexCatalog {
           .map(_ -> st.getPath.toString)
       else None
     }
-  }
-
-  /** Write bytes at `dst` via temp + atomic rename (the watermark
-    * discipline — a crashed write leaves no readable half-file). */
-  private def atomicWrite(dst: String, bytes: Array[Byte]): Unit = {
-    val (f, hp) = hfs(dst)
-    val tmp = new org.apache.hadoop.fs.Path(dst + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, hadoopConf)
-      .rename(tmp, hp, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Adopted-storage provenance of LOADED frames: [[load]] records, per
@@ -269,7 +244,8 @@ object IndexCatalog {
     header.put("next_pos", nextPos)
     val lines = (header +: entries.map(entryNode))
       .map(mapper.writeValueAsString)
-    atomicWrite(resolvePath(dir, ManifestName),
+    val (f, hp) = catalogFs(resolvePath(dir, ManifestName))
+    HadoopFiles.atomicWrite(f, hp,
       lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
   }
 
@@ -330,9 +306,9 @@ object IndexCatalog {
     // works identically for local paths and scheme-qualified remote
     // ones (an hdfs:// data path under an hdfs:// catalog dir records
     // relative; across filesystems it records the full qualified URI)
-    val (rf, rp) = hfs(dir)
+    val (rf, rp) = catalogFs(dir)
     val rootUri = rf.makeQualified(rp).toUri.toString.stripSuffix("/") + "/"
-    val (df, dp) = hfs(dataPath)
+    val (df, dp) = catalogFs(dataPath)
     val dataUri = df.makeQualified(dp).toUri.toString
     if (dataUri.startsWith(rootUri)) dataUri.stripPrefix(rootUri)
     else if (dataUri.startsWith("file:")) dataUri.stripPrefix("file:")
@@ -417,7 +393,7 @@ object IndexCatalog {
     * manifest is written LAST, so a crashed save leaves no readable
     * catalog rather than a partial one. */
   def save(ctx: TsdbContext, dir: String): Unit = {
-    val (f, hp) = hfs(dir); f.mkdirs(hp)
+    val (f, hp) = catalogFs(dir); f.mkdirs(hp)
     val staged = flatten(ctx, startPos = 0, dir)
     writeFrames(dir, staged)
     writeManifest(dir, staged.map(_._1), nextPos = staged.size)
@@ -458,7 +434,8 @@ object IndexCatalog {
       s"index catalog at $dir has no entry at pos $pos " +
         s"(present: ${m.entries.map(_.pos).mkString(", ")})")
     writeManifest(dir, rest, m.nextPos)
-    if (hit.head.owned) deleteTree(resolvePath(dir, hit.head.path))
+    if (hit.head.owned)
+      HadoopFiles.deleteRecursive(hadoopConf, resolvePath(dir, hit.head.path))
   }
 
   /** Register an EXISTING index parquet without copying it — typically
@@ -507,7 +484,7 @@ object IndexCatalog {
     }
     require(missing.isEmpty,
       s"adopt (kind $kind) lacks required parameter(s): ${missing.mkString(", ")}")
-    val (df, dp) = hfs(dataPath)
+    val (df, dp) = catalogFs(dataPath)
     require(df.exists(dp) && df.getFileStatus(dp).isDirectory,
       s"adopt: no index data directory at ${df.makeQualified(dp)}")
     val m = parseManifest(dir)
@@ -590,14 +567,10 @@ object IndexCatalog {
 
   private def parseManifest(dir: String): Manifest = {
     val manifest = resolvePath(dir, ManifestName)
-    val (mf, mp) = hfs(manifest)
+    val (mf, mp) = catalogFs(manifest)
     require(mf.exists(mp) && mf.getFileStatus(mp).isFile,
       s"index catalog manifest not found: $manifest")
-    val in = mf.open(mp)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator
+    val lines = HadoopFiles.readText(mf, mp).linesIterator
       .map(_.trim).filter(_.nonEmpty).toSeq
     require(lines.nonEmpty, s"index catalog manifest is empty: $manifest")
 
@@ -941,7 +914,9 @@ object IndexCatalog {
             // the fact days) — defensively route it through the
             // record instead of leaving an unreadable footer-less dir
             if (surviving.isEmpty && aged.nonEmpty) unremovable = true
-            else aged.foreach { case (_, p) => deleteTree(p) }
+            else aged.foreach { case (_, p) =>
+              HadoopFiles.deleteRecursive(hadoopConf, p)
+            }
           }
         case Some(_) => unremovable = true // bins straddle days
         case None => // snapshot kinds: re-derive iff range intersects
@@ -1006,7 +981,7 @@ object IndexCatalog {
     val (recPairs, recFiles) = TsdbLayout.indexDirtySnapshot(spark, dbDir)
     val pairs = touched.getOrElse(recPairs).distinct
     if (pairs.isEmpty) return 0
-    val (mf0, mp0) = hfs(resolvePath(dir, ManifestName))
+    val (mf0, mp0) = catalogFs(resolvePath(dir, ManifestName))
     if (!mf0.exists(mp0)) {
       TsdbLayout.clearIndexDirty(spark, dbDir, pairs, recFiles)
       return 0
@@ -1126,7 +1101,9 @@ object IndexCatalog {
             } else {
               if (outDays.nonEmpty)
                 writeOwned(dir, e, out, dynamicDays = true)
-              stale.foreach { case (_, p) => deleteTree(p) }
+              stale.foreach { case (_, p) =>
+                HadoopFiles.deleteRecursive(hadoopConf, p)
+              }
               if (outDays.nonEmpty || stale.nonEmpty) n += 1
             }
           }
@@ -1168,7 +1145,7 @@ object IndexCatalog {
       // round-trip: a later save re-emits the pointer, never a frozen
       // copy of the live sink
       if (!e.owned) {
-        val (pf, pp) = hfs(resolved)
+        val (pf, pp) = catalogFs(resolved)
         adoptedProvenance.put(frame.queryExecution.logical,
           pf.makeQualified(pp).toUri.toString)
       }
@@ -1205,7 +1182,7 @@ object IndexCatalog {
     require(k > 0 && numPerm > 0 && bands > 0 && numPerm % bands == 0,
       s"corpus index recipe invalid: k=$k numPerm=$numPerm bands=$bands " +
         s"(numPerm must be a positive multiple of bands)")
-    val (f, hp) = hfs(dir); f.mkdirs(hp)
+    val (f, hp) = catalogFs(dir); f.mkdirs(hp)
     writeManifest(dir, Seq(
       IndexCatalogEntry(0, "content_hashes", "hashes",
         idCol = Some(idCol), textCol = Some(textCol)),
@@ -1231,7 +1208,7 @@ object IndexCatalog {
     for (mv <- m; kv <- ksub)
       require(mv > 0 && kv > 0,
         s"embedding index PQ recipe invalid: m=$mv ksub=$kv")
-    val (f, hp) = hfs(dir); f.mkdirs(hp)
+    val (f, hp) = catalogFs(dir); f.mkdirs(hp)
     writeManifest(dir, Seq(
       IndexCatalogEntry(0, "ivf_cells", epochPath,
         idCol = Some(idCol), embCol = Some(embCol),

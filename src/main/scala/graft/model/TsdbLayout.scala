@@ -3,6 +3,9 @@ package graft.model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.HadoopFiles.{atomicWrite, deleteRecursive, exists, hfs,
+  readText}
+
 /** Physical layout of the samples fact table at scale.
   *
   * The reference's NB+tree gives it (a) per-series clustering, (b) time-
@@ -25,11 +28,10 @@ import org.apache.spark.sql.functions._
   * BOTH fact halves get the identical treatment: the metric samples AND
   * the event log are laid out, live-ingested ([[graft.streaming
   * .TsdbStream.layoutIngest]] / [[graft.streaming.TsdbStream
-  * .eventsIngest]]), two-tier-read, compacted ([[compactL0]] /
-  * [[compactEventsL0]]) and rotated ([[retireIngestRoot]] /
-  * [[retireEventsIngestRoot]]) through one shared tier protocol — the
-  * reference ingests events through the exact same WAL/append path as
-  * metrics (stdb/storage/column_store.cc:139-143,
+  * .eventsIngest]]), two-tier-read, compacted ([[compactL0]]) and
+  * rotated ([[retireIngestRoot]]) through one shared protocol over a
+  * [[Tier]] — the reference ingests events through the exact same
+  * WAL/append path as metrics (stdb/storage/column_store.cc:139-143,
   * stdb/protocol/protocolparser.h:131-257), so the Spark layout gives
   * the log half the same lifecycle, not just the same directory shape.
   *
@@ -45,15 +47,21 @@ object TsdbLayout {
 
   // ------------------------------------------------------------- tiers
 
-  /** One two-tier fact half: the live ingest root (`l0Sub`, a streaming
-    * file-sink directory), the settled batch layout (`batchSub`), the
-    * compaction watermark file (`wmFile` — first day still L0-owned)
-    * and the half's canonical column set (`payload` = the one
-    * non-key fact column: samples carry `value`, events carry `body`).
-    * Everything below that takes a Tier works identically on both
-    * halves — one protocol, two instantiations. */
-  private final case class Tier(l0Sub: String, batchSub: String,
-      wmFile: String, payload: String) {
+  /** One ingest half: its live ingest root family (`l0Sub` — a
+    * streaming file-sink directory, plus its `l0Sub_e<N>` epochs). The
+    * lifecycle API ([[nextIngestRoot]], [[retireIngestRoot]],
+    * [[compactL0]], [[l0Watermark]], [[l0Stragglers]]) takes the half
+    * as a parameter — one protocol, three instantiations. */
+  sealed abstract class Tier(val l0Sub: String)
+
+  /** A two-tier FACT half: the live ingest root, the settled batch
+    * layout (`batchSub`), the compaction watermark file (`wmFile` —
+    * first day still L0-owned) and the half's canonical column set
+    * (`payload` = the one non-key fact column: samples carry `value`,
+    * events carry `body`). Everything that takes a FactTier works
+    * identically on both halves. */
+  sealed abstract class FactTier(l0Sub: String, val batchSub: String,
+      val wmFile: String, val payload: String) extends Tier(l0Sub) {
     /** The half's canonical laid-out column set. */
     val cols: Seq[String] = Seq("series_id", "ts", payload, "metric", "ts_day")
     /** Row-identity columns for cross-tier content comparison. `metric`
@@ -63,14 +71,21 @@ object TsdbLayout {
     val rowKey: Seq[String] = Seq("series_id", "ts", payload)
   }
 
-  private val SamplesTier = Tier("samples_l0", "samples", "l0_watermark", "value")
-  private val EventsTier = Tier("events_l0", "events", "events_l0_watermark", "body")
+  object Tier {
+    case object Samples
+        extends FactTier("samples_l0", "samples", "l0_watermark", "value")
+    case object Events
+        extends FactTier("events_l0", "events", "events_l0_watermark", "body")
+    /** The catalog's live-registration root ([[graft.streaming
+      * .TsdbStream.catalogIngest]]). The catalog has no time axis, so
+      * its lifecycle needs no watermark: [[foldCatalogL0]] is the
+      * compaction, fold-completeness the retire guard. */
+    case object Catalog extends Tier("catalog_l0")
 
-  /** The catalog's live-registration root ([[graft.streaming.TsdbStream
-    * .catalogIngest]]) and its canonical column set. The catalog has no
-    * time axis, so its lifecycle needs no watermark: [[foldCatalogL0]]
-    * is the compaction, fold-completeness the retire guard. */
-  private val CatalogL0Sub = "catalog_l0"
+    /** The fact halves, in the order every readout lists them. */
+    val Facts: Seq[FactTier] = Seq(Samples, Events)
+  }
+  import Tier.{Samples, Events, Catalog}
 
   /** Where a curation deployment's [[graft.pipeline.CorpusStore]] sits
     * inside the database directory — the convention that folds the
@@ -87,47 +102,35 @@ object TsdbLayout {
   val EmbSub = "emb"
   private val CatalogCols = Seq("series_id", "name", "metric", "tags", "lon", "lat")
 
-  /** The canonical laid-out samples column set. */
-  private val SampleCols = SamplesTier.cols
-
   // ------------------------------------------- tier metadata (Hadoop FS)
 
-  private def hfs(spark: SparkSession, p: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
-  }
+  private def hconf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
 
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val (f, hp) = hfs(spark, p); f.exists(hp)
-  }
-
-  private def deleteRecursive(spark: SparkSession, p: String): Unit = {
-    val (f, hp) = hfs(spark, p); f.delete(hp, true)
-  }
-
-  private def tierWatermark(spark: SparkSession, dir: String, tier: Tier): Long = {
-    val (f, hp) = hfs(spark, s"$dir/${tier.wmFile}")
+  /** First ts_day still owned by the half's L0 ingest tier (everything
+    * below it has been [[compactL0]]-moved into the batch layout);
+    * Long.MinValue when no compaction has run. */
+  def l0Watermark(spark: SparkSession, dir: String,
+      tier: FactTier = Samples): Long = {
+    val (f, hp) = hfs(hconf(spark), s"$dir/${tier.wmFile}")
     if (!f.exists(hp)) Long.MinValue
-    else {
-      val in = f.open(hp)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
+    else readText(f, hp).trim.toLong
   }
 
-  private def tierHasWatermark(spark: SparkSession, dir: String, tier: Tier): Boolean =
-    pathExists(spark, s"$dir/${tier.wmFile}")
+  private def hasWatermark(spark: SparkSession, dir: String,
+      tier: FactTier): Boolean =
+    exists(hconf(spark), s"$dir/${tier.wmFile}")
 
   /** Single-writer watermark advance: write a temp file, swing it into
-    * place with FileContext's OVERWRITE rename — atomic on local and
-    * HDFS (the filesystems with atomic rename), so no crash window
-    * where the watermark file is simply GONE and every reader silently
-    * double-reads all of L0 until the next compaction heals it. */
-  private def writeTierWatermark(spark: SparkSession, dir: String, tier: Tier,
-      day: Long): Unit =
-    atomicWrite(spark, new org.apache.hadoop.fs.Path(s"$dir/${tier.wmFile}"),
+    * place with FileContext's OVERWRITE rename ([[HadoopFiles
+    * .atomicWrite]]) — no crash window where the watermark file is
+    * simply GONE and every reader silently double-reads all of L0
+    * until the next compaction heals it. */
+  private def writeWatermark(spark: SparkSession, dir: String,
+      tier: FactTier, day: Long): Unit = {
+    val (f, hp) = hfs(hconf(spark), s"$dir/${tier.wmFile}")
+    atomicWrite(f, hp,
       day.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
 
   // ------------------------------------ upsert-touched index record
 
@@ -171,7 +174,7 @@ object TsdbLayout {
     * single-file record is still in place (read/shrink it as one). */
   private def dirtyFiles(spark: SparkSession,
       dir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val (f, hp) = hfs(spark, s"$dir/$IndexDirtyName")
+    val (f, hp) = hfs(hconf(spark), s"$dir/$IndexDirtyName")
     if (!f.exists(hp)) Nil
     else if (f.getFileStatus(hp).isFile) Seq(hp)
     else f.listStatus(hp).toSeq.filter(_.isFile).map(_.getPath)
@@ -180,12 +183,8 @@ object TsdbLayout {
 
   private def readDirtyFile(spark: SparkSession,
       p: org.apache.hadoop.fs.Path): Seq[(String, Long)] = {
-    val (f, _) = hfs(spark, p.toString)
-    val in = f.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
+    val (f, _) = hfs(hconf(spark), p.toString)
+    readText(f, p).linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
       val n = dirtyMapper.readTree(line)
       require(n.path("metric").isTextual && n.path("ts_day").isIntegralNumber,
         s"malformed $IndexDirtyName line: $line")
@@ -225,7 +224,7 @@ object TsdbLayout {
   private[graft] def indexDirtySnapshot(spark: SparkSession,
       dir: String): (Seq[(String, Long)], Seq[DirtyFileId]) = {
     val files = dirtyFiles(spark, dir).map { p =>
-      val (f, _) = hfs(spark, p.toString)
+      val (f, _) = hfs(hconf(spark), p.toString)
       val st = f.getFileStatus(p)
       DirtyFileId(p, st.getModificationTime, st.getLen)
     }
@@ -242,10 +241,10 @@ object TsdbLayout {
       pairs: Seq[(String, Long)]): Option[DirtyFileId] = {
     if (pairs.isEmpty) return None
     val root = s"$dir/$IndexDirtyName"
-    val (f, hp) = hfs(spark, root)
+    val (f, hp) = hfs(hconf(spark), root)
     val written =
       if (f.exists(hp) && f.getFileStatus(hp).isFile) {
-        atomicWrite(spark, hp,
+        atomicWrite(f, hp,
           pairLines((readDirtyFile(spark, hp) ++ pairs).distinct))
         hp
       } else {
@@ -254,7 +253,7 @@ object TsdbLayout {
         // must never see a half-written member (dirtyFiles skips .tmp)
         val name = s"p_${java.util.UUID.randomUUID().toString}"
         val p = new org.apache.hadoop.fs.Path(s"$root/$name")
-        atomicWrite(spark, p, pairLines(pairs.distinct))
+        atomicWrite(f, p, pairLines(pairs.distinct))
         p
       }
     // the identity a recorder that later CLEARS its own pairs scopes
@@ -263,25 +262,12 @@ object TsdbLayout {
     Some(DirtyFileId(written, st.getModificationTime, st.getLen))
   }
 
-  /** Write bytes at `dst` via `dst+".tmp"` + atomic rename — the
-    * watermark discipline, shared by every small-record writer here. */
-  private def atomicWrite(spark: SparkSession,
-      dst: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
-    val (f, _) = hfs(spark, dst.toString)
-    val tmp = new org.apache.hadoop.fs.Path(dst.toString + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** Drop the whole pending record — a FULL [[IndexCatalog.rebuild]]
     * re-derived every canonical owned frame from the corrected facts.
     * (The full rebuild still clears only the pairs it read — see its
     * scaladoc — so this whole-record drop is for operators.) */
   def clearIndexDirty(spark: SparkSession, dir: String): Unit =
-    deleteRecursive(spark, s"$dir/$IndexDirtyName")
+    deleteRecursive(hconf(spark), s"$dir/$IndexDirtyName")
 
   /** Drop exactly `pairs` from the pending record — the OPERATOR form
     * (an explicit touched set corrected out-of-band): each existing
@@ -295,9 +281,9 @@ object TsdbLayout {
     val drop = pairs.toSet
     dirtyFiles(spark, dir).foreach { p =>
       val remaining = readDirtyFile(spark, p).filterNot(drop)
-      val (f, _) = hfs(spark, p.toString)
+      val (f, _) = hfs(hconf(spark), p.toString)
       if (remaining.isEmpty) f.delete(p, false)
-      else atomicWrite(spark, p, pairLines(remaining))
+      else atomicWrite(f, p, pairLines(remaining))
     }
     dropDirtyDirIfEmpty(spark, dir)
   }
@@ -314,13 +300,13 @@ object TsdbLayout {
       pairs: Seq[(String, Long)], files: Seq[DirtyFileId]): Unit = {
     val drop = pairs.toSet
     files.foreach { id =>
-      val (f, _) = hfs(spark, id.path.toString)
+      val (f, _) = hfs(hconf(spark), id.path.toString)
       if (f.exists(id.path)) {
         val st = f.getFileStatus(id.path)
         if (st.getModificationTime == id.mtime && st.getLen == id.len) {
           val remaining = readDirtyFile(spark, id.path).filterNot(drop)
           if (remaining.isEmpty) f.delete(id.path, false)
-          else atomicWrite(spark, id.path, pairLines(remaining))
+          else atomicWrite(f, id.path, pairLines(remaining))
         }
       }
     }
@@ -334,7 +320,7 @@ object TsdbLayout {
     * record's whole design forbids). Non-empty → the delete fails →
     * the directory simply stays, correctly non-empty. */
   private def dropDirtyDirIfEmpty(spark: SparkSession, dir: String): Unit = {
-    val (f, hp) = hfs(spark, s"$dir/$IndexDirtyName")
+    val (f, hp) = hfs(hconf(spark), s"$dir/$IndexDirtyName")
     if (f.exists(hp) && !f.getFileStatus(hp).isFile &&
         f.listStatus(hp).isEmpty)
       try f.delete(hp, false)
@@ -436,13 +422,13 @@ object TsdbLayout {
         "series_id")
       .withColumn("ts_day",
         graft.functions.VectorExpressions.longFloorDiv(col("ts"), NsPerDay))
-      .select(SampleCols.map(col): _*)
+      .select(Samples.cols.map(col): _*)
     val affected = lateKeyed.select("metric", "ts_day").distinct()
       .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
     if (affected.isEmpty) return 0
-    requireNotL0Owned(spark, path, SamplesTier, affected, "upsertSamples")
+    requireNotL0Owned(spark, path, Samples, affected, "upsertSamples")
     val existing = readSamples(spark, path).where(dayPred(affected))
-      .select(SampleCols.map(col): _*)
+      .select(Samples.cols.map(col): _*)
     // replace ONLY keys the late batch names: an anti-join (late keys
     // broadcast — the batch is small by definition) keeps every other
     // on-disk row byte-for-byte, INCLUDING pre-existing duplicate-ts
@@ -451,7 +437,7 @@ object TsdbLayout {
     val lateDedup = lateKeyed
       .groupBy("series_id", "ts", "metric", "ts_day")
       .agg(max(col("value")).as("value"))
-      .select(SampleCols.map(col): _*)
+      .select(Samples.cols.map(col): _*)
     // a DATABASE's samples layout (an index catalog with canonical
     // owned entries sits beside it): record the touched partitions so
     // the staleness window is ALERTED (maintenanceTick / healthCheck
@@ -461,7 +447,7 @@ object TsdbLayout {
     // false-positive pair (the next scoped rebuild re-derives and
     // clears it harmlessly), never corrected facts with a green alert
     val parent = new org.apache.hadoop.fs.Path(path).getParent
-    if (parent != null && pathExists(spark,
+    if (parent != null && exists(hconf(spark),
         s"$parent/indexes/${IndexCatalog.ManifestName}")) {
       val ownedCanonical =
         try IndexCatalog.describe(s"$parent/indexes")
@@ -491,14 +477,14 @@ object TsdbLayout {
     * (all of L0 is reader-visible then, so those and only those would
     * double-read). */
   private def requireNotL0Owned(spark: SparkSession, path: String,
-      tier: Tier, affected: Seq[(String, Long)], op: String): Unit = {
+      tier: FactTier, affected: Seq[(String, Long)], op: String): Unit = {
     val parent = new org.apache.hadoop.fs.Path(path).getParent
     if (parent == null ||
-      epochRoots(spark, parent.toString, tier.l0Sub).isEmpty) return
+      epochRoots(spark, parent.toString, tier).isEmpty) return
     val db = parent.toString
     val owned: Seq[(String, Long)] =
-      if (tierHasWatermark(spark, db, tier)) {
-        val wm = tierWatermark(spark, db, tier)
+      if (hasWatermark(spark, db, tier)) {
+        val wm = l0Watermark(spark, db, tier)
         affected.filter(_._2 >= wm).toSeq
       } else readTierL0(spark, db, tier) match {
         case Some(l0) => l0.where(dayPred(affected))
@@ -515,7 +501,7 @@ object TsdbLayout {
   /** Merge LATE EVENTS into a written events layout, rewriting only
     * the (metric, ts_day) partition directories the late batch touches
     * — the log half's late-data path, and the remediation an
-    * [[eventsL0Stragglers]] alert routes through. Events are APPENDS,
+    * events [[l0Stragglers]] alert routes through. Events are APPENDS,
     * not corrections ([[upsertSamples]]' latest-wins rule has no
     * meaning for log bodies): every row the layout already holds is
     * kept byte-for-byte, and late rows not already present — by
@@ -530,16 +516,16 @@ object TsdbLayout {
     * broadcast catalog. @return partition directories rewritten. */
   def upsertEvents(spark: SparkSession, path: String, late: DataFrame,
       series: DataFrame): Int = {
-    val lateKeyed = keyed(late, series).select(EventsTier.cols.map(col): _*)
+    val lateKeyed = keyed(late, series).select(Events.cols.map(col): _*)
     val affected = lateKeyed.select("metric", "ts_day").distinct()
       .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
     if (affected.isEmpty) return 0
-    requireNotL0Owned(spark, path, EventsTier, affected, "upsertEvents")
+    requireNotL0Owned(spark, path, Events, affected, "upsertEvents")
     val existing = spark.read.parquet(path).where(dayPred(affected))
-      .select(EventsTier.cols.map(col): _*)
+      .select(Events.cols.map(col): _*)
     val toAdd = lateKeyed.distinct()
-      .join(existing, EventsTier.rowKey, "left_anti")
-      .select(EventsTier.cols.map(col): _*)
+      .join(existing, Events.rowKey, "left_anti")
+      .select(Events.cols.map(col): _*)
     val merged = existing.unionByName(toAdd).localCheckpoint()
     sortedPartitionWrite(merged, path, replaceOnlyWritten = true)
     affected.length
@@ -616,7 +602,7 @@ object TsdbLayout {
     * frames are never touched ([[IndexCatalog.markNoncanonical]]). */
   def expire(spark: SparkSession, path: String, cutoffNs: Long): Int = {
     val cutoffDay = Math.floorDiv(cutoffNs, NsPerDay)
-    val (f, root) = hfs(spark, path)
+    val (f, root) = hfs(hconf(spark), path)
     if (!f.exists(root)) return 0
     // retention NEVER runs on an ingest root: the streaming sink's
     // transaction log pins every committed file, so deleting day
@@ -624,11 +610,11 @@ object TsdbLayout {
     // (and would mis-trigger the index heal for days the BATCH tier
     // still holds). Aged live-tier days leave through the lifecycle:
     // compact settled days, then retire the drained root
-    require(!Seq(SamplesTier.l0Sub, EventsTier.l0Sub, CatalogL0Sub)
+    require(!Seq(Samples.l0Sub, Events.l0Sub, Catalog.l0Sub)
         .exists(root.getName.startsWith),
       s"expire: $path is an ingest root — its sink log pins committed " +
         s"files, so dropping day directories would break every reader " +
-        s"of the tier; compact settled days (compactL0 family) and " +
+        s"of the tier; compact settled days (compactL0) and " +
         s"retire the drained root instead")
     val all = f.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("metric="))
@@ -666,8 +652,8 @@ object TsdbLayout {
     // forbids).
     val parent = root.getParent
     val healGate = agedPairs.nonEmpty &&
-      root.getName != EventsTier.batchSub && parent != null &&
-      pathExists(spark, s"$parent/indexes/${IndexCatalog.ManifestName}")
+      root.getName != Events.batchSub && parent != null &&
+      exists(hconf(spark), s"$parent/indexes/${IndexCatalog.ManifestName}")
     val recorded =
       if (healGate) recordIndexDirty(spark, parent.toString, agedPairs)
       else None
@@ -683,7 +669,7 @@ object TsdbLayout {
     // surviving facts (fully-expired bins come out removed). When the
     // drop healed every owned canonical entry, clear exactly the file
     // this call recorded — concurrent recorders' files stay pending.
-    if (healGate && root.getName == SamplesTier.batchSub) {
+    if (healGate && root.getName == Samples.batchSub) {
       val unremovable = IndexCatalog.expireBins(spark, parent.toString,
         cutoffDay)
       if (!unremovable)
@@ -781,12 +767,12 @@ object TsdbLayout {
     * fed by [[graft.streaming.TsdbStream.eventsIngest]]), that half's
     * fact frame is the UNION of the compacted batch layout and the L0
     * days the half's compaction watermark has not claimed yet
-    * ([[compactL0]] / [[compactEventsL0]]) — both sides keep their own
-    * partition pruning, so a range query reads each day from exactly
-    * one tier. A batch events directory in the FLAT form (the
-    * empty-events write, or a pre-layout database) re-keys through the
-    * broadcast catalog so the union still lines up — row-level
-    * filtering instead of pruning on that (small or empty) side. */
+    * ([[compactL0]]) — both sides keep their own partition pruning,
+    * so a range query reads each day from exactly one tier. A batch
+    * events directory in the FLAT form (the empty-events write, or a
+    * pre-layout database) re-keys through the broadcast catalog so the
+    * union still lines up — row-level filtering instead of pruning on
+    * that (small or empty) side. */
   def openDatabase(spark: SparkSession, dir: String): TsdbContext =
     IndexCatalog.load(spark, s"$dir/indexes", openFacts(spark, dir))
 
@@ -805,8 +791,8 @@ object TsdbLayout {
     * that disagree about the same rows. */
   def openFacts(spark: SparkSession, dir: String): TsdbContext = {
     val series = catalogRead(spark, dir)
-    val samples = twoTierRead(spark, dir, SamplesTier, series)
-    val events = twoTierRead(spark, dir, EventsTier, series)
+    val samples = twoTierRead(spark, dir, Samples, series)
+    val events = twoTierRead(spark, dir, Events, series)
     TsdbContext(spark, series, samples, events)
   }
 
@@ -855,15 +841,16 @@ object TsdbLayout {
   /** An ingest root family's LIVE directories under `dir`, epoch
     * order: the un-numbered legacy root (`base`, epoch 0) plus every
     * `base_e<N>` — the scheme that makes rotation ZERO-DOWNTIME: a new
-    * epoch's sink starts at [[nextEpochRoot]] while the previous root
+    * epoch's sink starts at [[nextIngestRoot]] while the previous root
     * drains to compaction, every reader unions all live roots'
-    * committed frames, and the retire family drops roots one at a
+    * committed frames, and [[retireIngestRoot]] drops roots one at a
     * time behind their per-root guards (the reference's sharded,
     * sequenced WAL rotates volumes under writes the same way,
     * stdb/storage/input_log.h:36-80). Driver-side directory listing. */
   private def epochRoots(spark: SparkSession, dir: String,
-      base: String): Seq[(Long, String)] = {
-    val (f, hp) = hfs(spark, dir)
+      tier: Tier): Seq[(Long, String)] = {
+    val base = tier.l0Sub
+    val (f, hp) = hfs(hconf(spark), dir)
     if (!f.exists(hp)) return Nil
     f.listStatus(hp).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName)
@@ -882,46 +869,36 @@ object TsdbLayout {
       .sortBy(_._1)
   }
 
-  /** Numbering is derived from the LIVE roots: it continues past
+  /** Path for the half's NEXT ingest epoch (`<l0Sub>_e<N+1>`, e.g.
+    * `samples_l0_e2`) — point a fresh [[graft.streaming.TsdbStream
+    * .layoutIngest]] / `eventsIngest` / `catalogIngest` (with a fresh
+    * checkpoint) at it while the previous epoch's root drains, and
+    * ingest never stops for a rotation: readers union every live root,
+    * compaction claims days across all of them through the half's one
+    * watermark, and [[retireIngestRoot]] with an `epoch` drops each
+    * drained root individually. Catalog re-seen series re-register
+    * into the new epoch's root and dedup by id on read and fold.
+    *
+    * Numbering is derived from the LIVE roots: it continues past
     * retired epochs while any sibling root exists, and restarts at e1
     * once the whole family is retired — the same reuse contract as
     * the legacy root taking every epoch at its one path. Safe because
     * the root DIRECTORY is the identity (retire requires it to exist
     * and verifies its content), so a reused number can never alias a
     * dropped root. */
-  private def nextEpochRoot(spark: SparkSession, dir: String,
-      base: String): String = {
-    val next = epochRoots(spark, dir, base).map(_._1).maxOption
+  def nextIngestRoot(spark: SparkSession, dir: String,
+      tier: Tier = Samples): String = {
+    val next = epochRoots(spark, dir, tier).map(_._1).maxOption
       .getOrElse(0L) + 1
-    s"$dir/${base}_e$next"
+    s"$dir/${tier.l0Sub}_e$next"
   }
-
-  /** Path for the NEXT samples ingest epoch (`samples_l0_e<N+1>`) —
-    * point a fresh [[graft.streaming.TsdbStream.layoutIngest]] (with a
-    * fresh checkpoint) at it while the previous epoch's root drains,
-    * and ingest never stops for a rotation: readers union every live
-    * root, compaction claims days across all of them through the one
-    * shared watermark, and [[retireIngestEpoch]] drops each drained
-    * root individually. */
-  def nextIngestRoot(spark: SparkSession, dir: String): String =
-    nextEpochRoot(spark, dir, SamplesTier.l0Sub)
-
-  /** [[nextIngestRoot]] for the event-log half (`events_l0_e<N>`). */
-  def nextEventsIngestRoot(spark: SparkSession, dir: String): String =
-    nextEpochRoot(spark, dir, EventsTier.l0Sub)
-
-  /** [[nextIngestRoot]] for the catalog registration half
-    * (`catalog_l0_e<N>`); re-seen series re-register into the new
-    * epoch's root and dedup by id on read and fold. */
-  def nextCatalogIngestRoot(spark: SparkSession, dir: String): String =
-    nextEpochRoot(spark, dir, CatalogL0Sub)
 
   /** The catalog ingest half's frame — the UNION of every live
     * catalog epoch root's committed registrations — or None when no
     * root is committed; same empty-sink tolerance as [[readTierL0]]. */
   private def readCatalogL0(spark: SparkSession, dir: String): Option[DataFrame] =
     unionCommitted(spark,
-      epochRoots(spark, dir, CatalogL0Sub).map(_._2), CatalogCols)
+      epochRoots(spark, dir, Catalog).map(_._2), CatalogCols)
 
   /** One ingest root's committed frame, or None when the root is
     * absent or shows no committed data yet — a freshly-started sink
@@ -945,14 +922,14 @@ object TsdbLayout {
     * this guard enforces instead of assuming. */
   private def readCommittedRoot(spark: SparkSession,
       path: String): Option[DataFrame] = {
-    if (!pathExists(spark, path)) return None
+    if (!exists(hconf(spark), path)) return None
     val df =
       try spark.read.parquet(path)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("Unable to infer schema") => return None
       }
-    val (f, hp) = hfs(spark, path)
+    val (f, hp) = hfs(hconf(spark), path)
     val rootUri = f.makeQualified(hp).toUri.toString.stripSuffix("/") + "/"
     // a log path on a DIFFERENT filesystem (hdfs:// log under a
     // file:// root — the classic cluster-to-laptop copy) cannot even
@@ -972,7 +949,7 @@ object TsdbLayout {
           s"paths outside this root (e.g. ${foreign.head}) — the database " +
           s"directory was copied or moved with a live ingest tier. Sink " +
           s"roots are not relocatable; retire epochs (compact + fold + " +
-          s"retire*IngestRoot) or exportDatabase BEFORE moving a " +
+          s"retireIngestRoot) or exportDatabase BEFORE moving a " +
           s"database, or re-ingest into the new location")
     Some(df)
   }
@@ -998,12 +975,10 @@ object TsdbLayout {
     * Export, verify `dst`, then decommission `src` (or resume ingest
     * at `dst` via the next-epoch roots). */
   def exportDatabase(spark: SparkSession, src: String, dst: String): Unit = {
-    for ((alert, what) <- Seq(
-        (l0Stragglers(spark, src), "samples"),
-        (eventsL0Stragglers(spark, src), "events"))) {
-      val strag = alert.limit(6).collect()
+    for (tier <- Tier.Facts) {
+      val strag = l0Stragglers(spark, src, tier).limit(6).collect()
       require(strag.isEmpty,
-        s"export: $src has $what alert partition(s) " +
+        s"export: $src has ${tier.batchSub} alert partition(s) " +
           s"${strag.map(r => s"(${r.get(0)}, ${r.get(1)})").mkString(", ")} — " +
           s"the opened view mis-serves them (below-watermark stragglers " +
           s"are excluded, pre-watermark tier overlaps double-read), so an " +
@@ -1043,8 +1018,8 @@ object TsdbLayout {
       s"export: $storeDir has $pending staged intent(s) ($pendingKey) — " +
         s"the exported copy would silently lack what they stage; run the " +
         s"heal (maintenanceTick healIndexes = true) first")
-    val (sf, sp) = hfs(spark, storeDir)
-    val (df, dp) = hfs(spark, s"$dst/$sub")
+    val (sf, sp) = hfs(hconf(spark), storeDir)
+    val (df, dp) = hfs(hconf(spark), s"$dst/$sub")
     // re-running a crashed export IS the recovery: an existing target
     // store is replaced whole (FileUtil.copy would otherwise NEST the
     // copy under it — dst/corpus/corpus — and the export would
@@ -1058,12 +1033,12 @@ object TsdbLayout {
   /** Fold stream-registered series ([[graft.streaming.TsdbStream
     * .catalogIngest]]'s `catalog_l0` root) into the persisted `series`
     * parquet — the catalog's compaction step, prerequisite of
-    * [[retireCatalogIngestRoot]]. New-only (anti-join by id) and
-    * IDEMPOTENT: the fresh slice is materialized to a staging
-    * directory first, so a crash between staging and the append
-    * re-runs from scratch, and a crash after the append's job commit
-    * re-computes an empty slice — a registration is never folded
-    * twice. The persisted catalog is never rewritten, only appended
+    * retiring the catalog root ([[retireIngestRoot]]). New-only
+    * (anti-join by id) and IDEMPOTENT: the fresh slice is
+    * materialized to a staging directory first, so a crash between
+    * staging and the append re-runs from scratch, and a crash after
+    * the append's job commit re-computes an empty slice — a
+    * registration is never folded twice. The persisted catalog is never rewritten, only appended
     * (ids are content-hashed, so an entry's row is immutable); no step
     * here scales with anything but the NEW-series count.
     *
@@ -1083,24 +1058,18 @@ object TsdbLayout {
     val staged = spark.read.parquet(staging)
     val n = staged.count()
     if (n > 0) staged.write.mode("append").parquet(basePath)
-    deleteRecursive(spark, staging)
+    deleteRecursive(hconf(spark), staging)
     n
   }
 
   /** [[retireIngestRoot]] for the catalog half: drop a FULLY-FOLDED
     * `catalog_l0` root (and optionally its stream checkpoint — the
     * next epoch's registration dedup state starts clean, which is safe
-    * because re-seen series re-register and dedup by id on read).
-    * Refuses loudly while any registration's ONLY copy lives in this
-    * root (run [[foldCatalogL0]] first) and on a root that exists but
-    * shows no committed data (a freshly-started epoch's live sink, or
-    * an abandoned one — a manual delete, not a lifecycle step).
-    *
-    * @return true when a root was deleted; false when none exists. */
-  def retireCatalogIngestRoot(spark: SparkSession, dir: String,
-      checkpoint: Option[String] = None): Boolean =
-    retireCatalogRoot(spark, dir, s"$dir/$CatalogL0Sub", checkpoint)
-
+    * because re-seen series re-register and dedup by id on read). A
+    * registration is safe to drop when it is folded OR a sibling live
+    * epoch root also carries it; the root refuses loudly while any
+    * registration's ONLY copy lives in it (run [[foldCatalogL0]]
+    * first). */
   private def retireCatalogRoot(spark: SparkSession, dir: String,
       path: String, checkpoint: Option[String]): Boolean =
     retireRoot(spark, path, "catalog ingest root", checkpoint) { cl0 =>
@@ -1108,12 +1077,12 @@ object TsdbLayout {
       // SIBLING live epoch root also carries it (re-seen series
       // re-register per epoch) — only an ONLY-copy refuses
       val qualified = {
-        val (f, hp) = hfs(spark, path)
+        val (f, hp) = hfs(hconf(spark), path)
         f.makeQualified(hp).toString
       }
-      val siblings = epochRoots(spark, dir, CatalogL0Sub).map(_._2)
+      val siblings = epochRoots(spark, dir, Catalog).map(_._2)
         .filter { r =>
-          val (f, hp) = hfs(spark, r)
+          val (f, hp) = hfs(hconf(spark), r)
           f.makeQualified(hp).toString != qualified
         }
       val safeIds = (spark.read.parquet(s"$dir/series")
@@ -1145,12 +1114,12 @@ object TsdbLayout {
     * whose stream is still running passes them — and deleting the sink
     * log (and checkpoint) out from under a running query kills it and
     * loses its in-flight batches. Rotation never needs to retire a
-    * live root: hand ingest to the next epoch ([[nextIngestRoot]]
-    * family), stop the old epoch's stream, THEN retire its root —
+    * live root: hand ingest to the next epoch ([[nextIngestRoot]]),
+    * stop the old epoch's stream, THEN retire its root —
     * ingest continues on the successor throughout (spec-pinned). */
   private def retireRoot(spark: SparkSession, path: String, what: String,
       checkpoint: Option[String])(verify: DataFrame => Unit): Boolean = {
-    if (!pathExists(spark, path)) return false
+    if (!exists(hconf(spark), path)) return false
     readCommittedRoot(spark, path) match {
       case None =>
         throw new IllegalArgumentException(
@@ -1159,8 +1128,8 @@ object TsdbLayout {
             s"abandoned empty sink is a manual delete, not a retire")
       case Some(df) => verify(df)
     }
-    deleteRecursive(spark, path)
-    checkpoint.foreach(deleteRecursive(spark, _))
+    deleteRecursive(hconf(spark), path)
+    checkpoint.foreach(deleteRecursive(hconf(spark), _))
     true
   }
 
@@ -1170,7 +1139,7 @@ object TsdbLayout {
     * the catalog so the two shapes always union. An events batch in
     * the flat EMPTY form with no L0 tier stays flat (the round-9
     * behavior — nothing to union, nothing to prune). */
-  private def twoTierRead(spark: SparkSession, dir: String, tier: Tier,
+  private def twoTierRead(spark: SparkSession, dir: String, tier: FactTier,
       series: DataFrame): DataFrame = {
     val batchRaw = spark.read.parquet(s"$dir/${tier.batchSub}")
     readTierL0(spark, dir, tier) match {
@@ -1181,7 +1150,7 @@ object TsdbLayout {
           else keyed(batchRaw, series)
         batch.select(tier.cols.map(col): _*).unionByName(
           l0.select(tier.cols.map(col): _*)
-            .where(col("ts_day") >= tierWatermark(spark, dir, tier)))
+            .where(col("ts_day") >= l0Watermark(spark, dir, tier)))
     }
   }
 
@@ -1195,9 +1164,9 @@ object TsdbLayout {
     * empty-sink condition is swallowed; any other read problem stays
     * loud. */
   private def readTierL0(spark: SparkSession, dir: String,
-      tier: Tier): Option[DataFrame] =
+      tier: FactTier): Option[DataFrame] =
     unionCommitted(spark,
-      epochRoots(spark, dir, tier.l0Sub).map(_._2), tier.cols)
+      epochRoots(spark, dir, tier).map(_._2), tier.cols)
 
   /** Union the committed frames of the given roots on the family's
     * canonical column set (partition-column order varies per sink). */
@@ -1241,7 +1210,7 @@ object TsdbLayout {
     import org.apache.spark.sql.types._
     val rows = scala.collection.mutable.ListBuffer.empty[Row]
     def jl(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
-    for (tier <- Seq(SamplesTier, EventsTier)) {
+    for (tier <- Tier.Facts) {
       val half = tier.batchSub
       listPartitionDays(spark, s"$dir/${tier.batchSub}")
         .groupBy(_._1).toSeq.sortBy(_._1).foreach { case (m, ds) =>
@@ -1250,7 +1219,7 @@ object TsdbLayout {
             jl(days.distinct.size.toLong), null)
         }
       readTierL0(spark, dir, tier).foreach { l0 =>
-        val wm = tierWatermark(spark, dir, tier)
+        val wm = l0Watermark(spark, dir, tier)
         val agg = l0
           .groupBy(col("metric"), col("ts_day").cast("long").as("d"))
           .agg(count(lit(1)).as("n"))
@@ -1269,8 +1238,8 @@ object TsdbLayout {
       // keeps it so the late-data guard and the next epoch's union
       // read work) — report it whenever the file exists, not only
       // while L0 has committed data
-      if (tierHasWatermark(spark, dir, tier)) {
-        val wm = tierWatermark(spark, dir, tier)
+      if (hasWatermark(spark, dir, tier)) {
+        val wm = l0Watermark(spark, dir, tier)
         rows += Row(half, "watermark", null, jl(wm), jl(wm), null, null)
       }
     }
@@ -1297,7 +1266,7 @@ object TsdbLayout {
     * way Spark escaped them on write (%XX for the reserved chars). */
   private def listPartitionDays(spark: SparkSession,
       root: String): Seq[(String, Long)] = {
-    val (f, hp) = hfs(spark, root)
+    val (f, hp) = hfs(hconf(spark), root)
     if (!f.exists(hp)) return Nil
     val glob = new org.apache.hadoop.fs.Path(s"$root/metric=*/ts_day=*")
     Option(f.globStatus(glob)).map(_.toSeq).getOrElse(Nil).map { st =>
@@ -1312,11 +1281,11 @@ object TsdbLayout {
   /** The periodic MAINTENANCE TICK a deployment crons — the lifecycle
     * steps between ingest and rotation, in their required order, as
     * one operator with one summary: compact both fact halves' settled
-    * days ([[compactL0]] / [[compactEventsL0]], only where an ingest
+    * days ([[compactL0]] per half, only where an ingest
     * tier exists — a tick must not stamp watermarks onto absent
     * tiers), fold stream registrations into the persisted catalog
     * ([[foldCatalogL0]]), then poll the standing alerts
-    * ([[l0Stragglers]] / [[eventsL0Stragglers]], and `index_stale` —
+    * ([[l0Stragglers]] per half, and `index_stale` —
     * the count of upsert-touched (metric, ts_day) partitions whose
     * corrections no owned index serves yet; nonzero until
     * [[IndexCatalog.rebuildScoped]] (or the full rebuild) clears the
@@ -1326,7 +1295,7 @@ object TsdbLayout {
     * pending-stale partition count (nonzero = run the scoped rebuild).
     * Idempotent: a re-run with the same cutoff reports zeros for the
     * actions and unchanged counts for the standing alerts. Rotation
-    * ([[retireIngestRoot]] family) stays a separate, deliberate act —
+    * ([[retireIngestRoot]]) stays a separate, deliberate act —
     * it is the one destructive step and no cron should own it.
     *
     * `healIndexes = true` adds the staleness REMEDY to the tick: after
@@ -1360,12 +1329,9 @@ object TsdbLayout {
     // closed on the embedding half)
     val embDir = s"$dir/${EmbSub}"
     val hasEmb = graft.pipeline.EmbeddingStore.exists(spark, embDir)
-    val rows = Seq(
-      Row("compact_samples",
-        compactTier(spark, dir, SamplesTier, settledCutoffNs).toLong),
-      Row("compact_events",
-        compactTier(spark, dir, EventsTier, settledCutoffNs).toLong),
-      Row("fold_catalog", foldCatalogL0(spark, dir))) ++
+    val rows = Tier.Facts.map(t => Row(s"compact_${t.batchSub}",
+        compactL0(spark, dir, settledCutoffNs, t).toLong)) ++
+      Seq(Row("fold_catalog", foldCatalogL0(spark, dir))) ++
       (if (healIndexes)
         Seq(Row("index_healed",
           IndexCatalog.rebuildScoped(spark, dir).toLong)) ++
@@ -1378,10 +1344,9 @@ object TsdbLayout {
               .map { case (c, n) => Row(c, n) }
           else Nil)
       else Nil) ++
-      Seq(
-        Row("stragglers_samples", l0Stragglers(spark, dir).count()),
-        Row("stragglers_events", eventsL0Stragglers(spark, dir).count()),
-        Row("index_stale", indexDirtyPairs(spark, dir).size.toLong)) ++
+      Tier.Facts.map(t => Row(s"stragglers_${t.batchSub}",
+        l0Stragglers(spark, dir, t).count())) ++
+      Seq(Row("index_stale", indexDirtyPairs(spark, dir).size.toLong)) ++
       (if (hasCorpus)
         graft.pipeline.CorpusStore.health(spark, corpusDir)
           .map { case (c, n) => Row(c, n) }
@@ -1401,8 +1366,8 @@ object TsdbLayout {
     * defines: one `(component, status, n)` row each for
     *
     *   - `samples_stragglers` / `events_stragglers` — affected
-    *     (metric, ts_day) partitions from [[l0Stragglers]] /
-    *     [[eventsL0Stragglers]] (route through the upserts);
+    *     (metric, ts_day) partitions from each half's
+    *     [[l0Stragglers]] (route through the upserts);
     *   - `catalog_unfolded` — stream registrations whose only copy
     *     lives in the catalog ingest root ([[foldCatalogL0]] is due
     *     before its rotation);
@@ -1426,9 +1391,10 @@ object TsdbLayout {
       maxIndexLagNs: Long = NsPerDay): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val counts = scala.collection.mutable.ListBuffer[(String, Long)](
-      "samples_stragglers" -> l0Stragglers(spark, dir).count(),
-      "events_stragglers" -> eventsL0Stragglers(spark, dir).count(),
+    val counts = scala.collection.mutable.ListBuffer.from(
+      Tier.Facts.map(t =>
+        s"${t.batchSub}_stragglers" -> l0Stragglers(spark, dir, t).count()))
+    counts ++= Seq(
       "catalog_unfolded" -> readCatalogL0(spark, dir).fold(0L)(cl0 =>
         cl0.select("series_id").distinct()
           .join(spark.read.parquet(s"$dir/series").select("series_id"),
@@ -1450,7 +1416,7 @@ object TsdbLayout {
       counts ++= graft.pipeline.EmbeddingStore.health(spark, s"$dir/$EmbSub")
     nowNs.foreach { now =>
       val lagging =
-        if (!pathExists(spark,
+        if (!exists(hconf(spark),
             s"$dir/indexes/${IndexCatalog.ManifestName}")) 0L
         else IndexCatalog.freshness(spark, s"$dir/indexes",
             adoptedOnly = true)
@@ -1467,8 +1433,10 @@ object TsdbLayout {
         StructField("status", StringType), StructField("n", LongType))))
   }
 
-  /** Below-watermark L0 content the batch tier does NOT hold —
-    * (metric, ts_day, n), one row per affected partition. Compacted
+  /** Below-watermark L0 content of the `tier` half (default the
+    * samples; the events half compares (series_id, ts, body)) that its
+    * batch tier does NOT hold — (metric, ts_day, n), one row per
+    * affected partition. Compacted
     * days leave their files in the L0 root (the sink log pins them),
     * so "below the watermark" alone is residue, not a problem; a
     * PROBLEM row is one whose (series_id, ts, value) never reached the
@@ -1493,22 +1461,16 @@ object TsdbLayout {
     * batch read is pruned to exactly those days before the anti-join;
     * never a full-history scan. Empty frame when the tier is absent
     * or nothing straggles. */
-  def l0Stragglers(spark: SparkSession, dir: String): DataFrame =
-    tierStragglers(spark, dir, SamplesTier)
-
-  /** [[l0Stragglers]] for the event-log half: below-watermark
-    * `events_l0` content (series_id, ts, body) the batch events layout
-    * does not hold, as (metric, ts_day, n) — or, pre-watermark, the
-    * tier-overlap partitions. Same contracts and scale shape. */
-  def eventsL0Stragglers(spark: SparkSession, dir: String): DataFrame =
-    tierStragglers(spark, dir, EventsTier)
+  def l0Stragglers(spark: SparkSession, dir: String,
+      tier: FactTier = Samples): DataFrame =
+    tierStragglers(spark, dir, tier)
 
   /** `l0Override`: restrict the check to ONE root's committed frame —
     * the per-epoch retire guard asks "does THIS root hold a row's only
     * copy", not "does any live root" (a sibling epoch's stragglers
     * must not block retiring a clean one). None = the whole tier. */
   private def tierStragglers(spark: SparkSession, dir: String,
-      tier: Tier, l0Override: Option[DataFrame] = None): DataFrame = {
+      tier: FactTier, l0Override: Option[DataFrame] = None): DataFrame = {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -1530,9 +1492,9 @@ object TsdbLayout {
         val l0c = l0.select(tier.cols.map(col): _*)
         val batchRaw = spark.read.parquet(s"$dir/${tier.batchSub}")
         val batchLaid = batchRaw.columns.contains("ts_day")
-        if (tierHasWatermark(spark, dir, tier)) {
+        if (hasWatermark(spark, dir, tier)) {
           val below = l0c.where(col("ts_day") <
-            tierWatermark(spark, dir, tier))
+            l0Watermark(spark, dir, tier))
           val days = below.select("metric", "ts_day").distinct()
             .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
           if (days.isEmpty) return empty
@@ -1575,16 +1537,6 @@ object TsdbLayout {
     }
   }
 
-  /** First ts_day still owned by the samples L0 ingest tier (everything
-    * below it has been [[compactL0]]-moved into the batch layout);
-    * Long.MinValue when no compaction has run. */
-  def l0Watermark(spark: SparkSession, dir: String): Long =
-    tierWatermark(spark, dir, SamplesTier)
-
-  /** [[l0Watermark]] for the event-log half ([[compactEventsL0]]). */
-  def eventsL0Watermark(spark: SparkSession, dir: String): Long =
-    tierWatermark(spark, dir, EventsTier)
-
   /** L0 → batch compaction: MOVE every settled ingest day (ts_day in
     * [watermark, cutoff)) from the stream-sink tier into the batch
     * layout, rewritten (series_id, ts)-sorted one file per partition —
@@ -1614,30 +1566,21 @@ object TsdbLayout {
     * drops the root (and optionally its checkpoint) whole, and the
     * next epoch's stream starts a fresh sink at the path.
     *
-    * LATE DATA below the watermark must go through [[upsertSamples]],
-    * not the ingest stream: a stream row landing in a claimed day is
-    * excluded by the reader (its day is batch-owned). Poll
-    * [[l0Stragglers]] to catch and re-route any that slipped through
-    * (spec-pinned end to end in StreamingSpec).
+    * LATE DATA below the watermark must go through [[upsertSamples]]
+    * / [[upsertEvents]], not the ingest stream: a stream row landing
+    * in a claimed day is excluded by the reader (its day is
+    * batch-owned). Poll [[l0Stragglers]] to catch and re-route any
+    * that slipped through (spec-pinned end to end in StreamingSpec).
+    *
+    * `tier` picks the fact half (default the samples); each half has
+    * its own watermark file. A batch directory still in the flat EMPTY
+    * form (an events half written before any events arrived) is
+    * replaced wholesale by the first compaction — the flat file would
+    * otherwise make the root unreadable next to partition directories.
     *
     * @return number of (metric, day) partitions moved. */
-  def compactL0(spark: SparkSession, dir: String, cutoffNs: Long): Int =
-    compactTier(spark, dir, SamplesTier, cutoffNs)
-
-  /** [[compactL0]] for the event-log half: move settled `events_l0`
-    * days into the batch events layout — identical protocol, watermark
-    * file `events_l0_watermark`, same crash recovery and exclusivity
-    * contract (late event data has no upsert path; a below-watermark
-    * event straggler needs a partition-scoped batch rewrite). A batch
-    * events directory still in the flat EMPTY form (a database written
-    * before any events arrived) is replaced wholesale by the first
-    * compaction — the flat file would otherwise make the root
-    * unreadable next to partition directories. */
-  def compactEventsL0(spark: SparkSession, dir: String, cutoffNs: Long): Int =
-    compactTier(spark, dir, EventsTier, cutoffNs)
-
-  private def compactTier(spark: SparkSession, dir: String, tier: Tier,
-      cutoffNs: Long): Int = {
+  def compactL0(spark: SparkSession, dir: String, cutoffNs: Long,
+      tier: FactTier = Samples): Int = {
     // an ABSENT ingest tier (no root at any epoch) is "this half has
     // no live tier", not "nothing settled": stamping a watermark here
     // would activate the L0-owned-day upsert guard (and the describe
@@ -1645,13 +1588,13 @@ object TsdbLayout {
     // but shows no committed data is different — the tier is live,
     // nothing settled yet, and advancing the watermark legitimately
     // claims the days
-    if (epochRoots(spark, dir, tier.l0Sub).isEmpty) return 0
+    if (epochRoots(spark, dir, tier).isEmpty) return 0
     val cutoffDay = Math.floorDiv(cutoffNs, NsPerDay)
-    val wm = tierWatermark(spark, dir, tier)
+    val wm = l0Watermark(spark, dir, tier)
     if (cutoffDay <= wm) return 0
     val l0 = readTierL0(spark, dir, tier) match {
       case Some(f) => f
-      case None => writeTierWatermark(spark, dir, tier, cutoffDay); return 0
+      case None => writeWatermark(spark, dir, tier, cutoffDay); return 0
     }
     val settled = l0
       .select(tier.cols.map(col): _*)
@@ -1661,7 +1604,7 @@ object TsdbLayout {
     val affected = settled.select("metric", "ts_day").distinct()
       .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
     if (affected.isEmpty) {
-      writeTierWatermark(spark, dir, tier, cutoffDay); return 0
+      writeWatermark(spark, dir, tier, cutoffDay); return 0
     }
     val batchPath = s"$dir/${tier.batchSub}"
     val batchRaw = spark.read.parquet(batchPath)
@@ -1675,7 +1618,7 @@ object TsdbLayout {
           s"two-tier compaction needs the laid-out batch " +
           s"(rewrite it through the layout writer first)")
       sortedPartitionWrite(settled, batchPath, replaceOnlyWritten = false)
-      writeTierWatermark(spark, dir, tier, cutoffDay)
+      writeWatermark(spark, dir, tier, cutoffDay)
       return affected.length
     }
     val alreadyThere = batchRaw
@@ -1705,24 +1648,32 @@ object TsdbLayout {
     if (toWrite.nonEmpty)
       sortedPartitionWrite(settled.where(dayPred(toWrite)),
         batchPath, replaceOnlyWritten = true)
-    writeTierWatermark(spark, dir, tier, cutoffDay)
+    writeWatermark(spark, dir, tier, cutoffDay)
     affected.length
   }
 
-  /** Retire a FULLY-COMPACTED samples ingest root — the one
+  /** Retire a FULLY-COMPACTED ingest root of `tier` — the one
     * destructive step of the two-tier lifecycle, as an operator with
-    * the checks a runbook would forget. The streaming file sink's
-    * transaction log pins every file it ever committed, so compacted
-    * days' bytes stay in the L0 root until the whole root is dropped;
-    * this verifies the drop is safe and performs it:
+    * the checks a runbook would forget. `epoch = None` names the
+    * un-numbered root (`samples_l0`), `Some(n)` one rotation epoch
+    * (`samples_l0_e<n>`, see [[nextIngestRoot]]): the zero-downtime
+    * rotation's destructive step, run while the next epoch's stream
+    * keeps writing — THIS root must be drained (a sibling epoch's
+    * state neither blocks nor excuses it). The catalog half's guard is
+    * fold-completeness instead (see `retireCatalogRoot`).
+    *
+    * The streaming file sink's transaction log pins every file it
+    * ever committed, so compacted days' bytes stay in the L0 root
+    * until the whole root is dropped; this verifies the drop is safe
+    * and performs it:
     *
     *   1. every day the root shows rows for lies BELOW the compaction
     *      watermark (fully claimed into the batch layout — readers
     *      already never look at this root); a pre-first-compaction
     *      root (no watermark) always refuses;
-    *   2. [[l0Stragglers]] is empty — a straggler row's ONLY copy
-    *      lives in this root, and deleting it would destroy data the
-    *      alert says to re-route first.
+    *   2. [[l0Stragglers]] over THIS root is empty — a straggler
+    *      row's ONLY copy lives in this root, and deleting it would
+    *      destroy data the alert says to re-route first.
     *
     * Then the root directory (and, when given, the stream's
     * checkpoint directory — the next epoch's sink must start fresh,
@@ -1741,53 +1692,22 @@ object TsdbLayout {
     *         (idempotent re-run — the checkpoint is left untouched in
     *         that case, there being nothing to verify it against). */
   def retireIngestRoot(spark: SparkSession, dir: String,
-      checkpoint: Option[String] = None): Boolean =
-    retireTier(spark, dir, SamplesTier, s"$dir/${SamplesTier.l0Sub}",
-      checkpoint)
+      tier: Tier = Samples, epoch: Option[Long] = None,
+      checkpoint: Option[String] = None): Boolean = {
+    val path = s"$dir/${tier.l0Sub}" + epoch.fold("")(e => s"_e$e")
+    tier match {
+      case t: FactTier => retireTier(spark, dir, t, path, checkpoint)
+      case Catalog => retireCatalogRoot(spark, dir, path, checkpoint)
+    }
+  }
 
-  /** [[retireIngestRoot]] for the event-log half (`events_l0`). */
-  def retireEventsIngestRoot(spark: SparkSession, dir: String,
-      checkpoint: Option[String] = None): Boolean =
-    retireTier(spark, dir, EventsTier, s"$dir/${EventsTier.l0Sub}",
-      checkpoint)
-
-  /** Retire ONE samples ingest epoch (`samples_l0_e<epoch>`) — the
-    * zero-downtime rotation's destructive step: with the next epoch's
-    * stream already writing to [[nextIngestRoot]], this verifies THIS
-    * root is fully drained (its own days all compacted, none of its
-    * rows a straggler — a sibling epoch's state neither blocks nor
-    * excuses it) and drops it while ingest continues uninterrupted
-    * (spec-pinned: the successor's live query survives, answers
-    * unchanged throughout). Same guards, checkpoint handling and
-    * stopped-stream precondition as [[retireIngestRoot]]. */
-  def retireIngestEpoch(spark: SparkSession, dir: String, epoch: Long,
-      checkpoint: Option[String] = None): Boolean =
-    retireTier(spark, dir, SamplesTier,
-      s"$dir/${SamplesTier.l0Sub}_e$epoch", checkpoint)
-
-  /** [[retireIngestEpoch]] for the event-log half
-    * (`events_l0_e<epoch>`). */
-  def retireEventsIngestEpoch(spark: SparkSession, dir: String,
-      epoch: Long, checkpoint: Option[String] = None): Boolean =
-    retireTier(spark, dir, EventsTier,
-      s"$dir/${EventsTier.l0Sub}_e$epoch", checkpoint)
-
-  /** [[retireCatalogIngestRoot]] for one catalog epoch
-    * (`catalog_l0_e<epoch>`): drops the root once every registration
-    * it holds is folded OR also registered by a sibling live root —
-    * only a root holding some registration's ONLY copy refuses. */
-  def retireCatalogIngestEpoch(spark: SparkSession, dir: String,
-      epoch: Long, checkpoint: Option[String] = None): Boolean =
-    retireCatalogRoot(spark, dir, s"$dir/${CatalogL0Sub}_e$epoch",
-      checkpoint)
-
-  private def retireTier(spark: SparkSession, dir: String, tier: Tier,
+  private def retireTier(spark: SparkSession, dir: String, tier: FactTier,
       l0Path: String, checkpoint: Option[String]): Boolean =
     retireRoot(spark, l0Path, "ingest root", checkpoint) { l0 =>
       // no watermark ⇒ wm = Long.MinValue ⇒ every held day is "live"
       // and a non-empty root refuses — a pre-first-compaction root is
       // never safe to drop
-      val wm = tierWatermark(spark, dir, tier)
+      val wm = l0Watermark(spark, dir, tier)
       val live = l0.select("metric", "ts_day")
         .where(col("ts_day") >= wm).distinct().limit(6).collect()
         .map(_.getAs[Number](1).longValue).distinct

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.IndexCatalog
+import graft.model.{HadoopFiles, IndexCatalog}
 
 /** Lifecycle-managed document corpus + its dedup index — the
   * LLM-pipeline half's answer to the TSDB database directory: one root
@@ -97,16 +97,15 @@ object CorpusStore {
 
   // ------------------------------------------------------- filesystem
 
-  // filesystem + staging protocol shared with the embedding store
-  // ([[StagedStore]] — one publish/ordering discipline, never two)
-  private def hfs(spark: SparkSession, p: String) = StagedStore.hfs(spark, p)
-  private def listDirs(spark: SparkSession, root: String, prefix: String) =
-    StagedStore.listDirs(spark, root, prefix)
+  // filesystem: [[graft.model.HadoopFiles]]; staging protocol shared
+  // with the embedding store ([[StagedStore]] — one publish/ordering
+  // discipline, never two)
 
   /** `__batch=` partition values of one storage side — a directory
     * listing, no file opened (the staleness read's whole cost). */
   private def batchesOf(spark: SparkSession, path: String): Set[String] =
-    listDirs(spark, path, s"$BatchCol=").map { p =>
+    HadoopFiles.listDirs(spark.sparkContext.hadoopConfiguration, path,
+        s"$BatchCol=").map { p =>
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(p.getName.stripPrefix(s"$BatchCol="))
     }.toSet
@@ -180,8 +179,7 @@ object CorpusStore {
   def create(spark: SparkSession, dir: String, docs: DataFrame,
       idCol: String, textCol: String, k: Int = 3, numPerm: Int = 32,
       bands: Int = 8): Unit = {
-    val (f, hp) = hfs(spark, s"$dir/$IndexesSub/${IndexCatalog.ManifestName}")
-    require(!f.exists(hp), s"corpus store already exists at $dir")
+    require(!exists(spark, dir), s"corpus store already exists at $dir")
     require(!docs.isEmpty,
       "create: an empty corpus would leave footer-less parquet roots — " +
         "create the store from its first real batch")
@@ -192,14 +190,9 @@ object CorpusStore {
   }
 
   // ---------------------------------------------------------- staging
-
-  /** Staged-record publication and sequencing live in [[StagedStore]]
-    * (an accept re-adding ids a prior takedown removed must land after
-    * it — staging order; single-maintenance-writer discipline, like
-    * every lifecycle mutation). */
-  private def stage(spark: SparkSession, dir: String, prefix: String,
-      payload: DataFrame): String =
-    StagedStore.stage(spark, dir, prefix, payload)
+  // publication and sequencing: [[StagedStore.stage]] (an accept
+  // re-adding ids a prior takedown removed must land after it —
+  // staging order; single-maintenance-writer discipline)
 
   /** Stage an ACCEPTED batch (the record half of [[acceptBatch]]) —
     * the docs enter the corpus and its index at the next [[heal]].
@@ -211,7 +204,7 @@ object CorpusStore {
       batch.columns.contains(r.textCol),
       s"stageBatch: batch lacks the registered document columns " +
         s"(${r.idCol}, ${r.textCol})")
-    stage(spark, dir, "p", batch)
+    StagedStore.stage(spark, dir, "p", batch)
   }
 
   /** Stage a TAKEDOWN (license revocation, removal request): the named
@@ -230,7 +223,7 @@ object CorpusStore {
     require(ids.nonEmpty, "stageTakedown: empty id list")
     val r = recipe(dir)
     requireNotEmptying(spark, dir, r, ids.toSet, "stageTakedown")
-    stage(spark, dir, "t",
+    StagedStore.stage(spark, dir, "t",
       spark.createDataFrame(ids.map(Tuple1(_))).toDF(r.idCol))
   }
 
@@ -285,7 +278,8 @@ object CorpusStore {
     val batches = maxBytes match {
       case None => all
       case Some(b) =>
-        val (f, _) = hfs(spark, docsPath(dir))
+        val (f, _) = HadoopFiles.hfs(spark.sparkContext.hadoopConfiguration,
+          docsPath(dir))
         all.filter { bid =>
           f.getContentSummary(new org.apache.hadoop.fs.Path(
             partitionDir(docsPath(dir), bid))).getLength <= b
@@ -293,7 +287,7 @@ object CorpusStore {
     }
     if (batches.size < 2) return None
     import spark.implicits._
-    val name = stage(spark, dir, "c",
+    val name = StagedStore.stage(spark, dir, "c",
       batches.toSeq.sorted.toDF("src_batch"))
     Some(compactionTarget(name))
   }
@@ -334,7 +328,7 @@ object CorpusStore {
       // extra jobs (no anti-joins, no lineage checkpoint), paying the
       // admission machinery only when something must actually drop
       val oobIds = docsB.select(col(r.idCol).as("cid")).distinct()
-      val tomb = effectiveTombstones(spark, dir, r)
+      val tomb = StagedStore.effectiveTombstones(spark, dir, r.idCol)
       val anyTomb = tomb.exists(t =>
         !t.join(broadcast(oobIds.select(col("cid").as(r.idCol))),
           Seq(r.idCol)).isEmpty)
@@ -356,9 +350,8 @@ object CorpusStore {
         val admitted = fresh.localCheckpoint()
         if (admitted.isEmpty) {
           // nothing admissible: consistent absence on all three sides
-          val (f, _) = hfs(spark, docsPath(dir))
-          f.delete(new org.apache.hadoop.fs.Path(
-            partitionDir(docsPath(dir), bid)), true)
+          HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
+            partitionDir(docsPath(dir), bid))
         } else writeBatch(spark, dir, bid, admitted, r, alsoDocs = true)
       }
       n += 1
@@ -383,55 +376,20 @@ object CorpusStore {
     n
   }
 
-  /** The permanent takedown record — an APPEND-ONLY log of
-    * `(id, seq, op)` rows, never rewritten in place (an in-place clear
-    * would be the one non-crash-safe mutation in a store whose whole
-    * contract is record-before-mutate): [[applyTakedown]] appends
-    * `add` rows BEFORE its rewrites, and a DELIBERATE operator accept
-    * appends `clear` rows for the ids it re-admits (only when any of
-    * its ids are actually tombstoned — routine accepts never touch the
-    * log). `seq` is the LOG's OWN monotonic append counter (current
-    * max + 1, single-writer like every lifecycle mutation) —
-    * deliberately NOT the staging sequence, which resets to 0 whenever
-    * pending drains and would let an old `add` outrank a later
-    * `clear`. Heal applies records in staging order and appends in
-    * apply order, so log order IS causal order, and the effective set
-    * is "ids whose LATEST op is add"; a crashed re-run re-appends the
-    * same op at a higher seq, which changes nothing. STREAM accepts
-    * filter against the effective set so an
-    * at-least-once redelivery cannot resurrect a document removed
-    * while the stream was down (a license revocation must survive the
-    * crash-redelivery race); re-adding after takedown stays an
-    * operator's call, never a replay artifact.
-    *
-    * Scale: the log is TAKEDOWN-HISTORY-sized — legal/ops events,
-    * orders of magnitude rarer than accepts, a few bytes each — so the
-    * per-trigger effective-set read stays trivial at any corpus size. */
-  private def tombstonesPath(dir: String) =
-    StagedStore.tombstonesPath(dir)
-
-  private def appendTombstoneOps(spark: SparkSession, dir: String,
-      r: Recipe, ids: Seq[Long], op: String): Unit =
-    StagedStore.appendTombstoneOps(spark, dir, r.idCol, ids, op)
-
-  /** The currently-tombstoned ids (latest op per id is `add`), or None
-    * when no takedown ever ran. Takedown-history-sized. */
-  private def effectiveTombstones(spark: SparkSession, dir: String,
-      r: Recipe): Option[DataFrame] =
-    StagedStore.effectiveTombstones(spark, dir, r.idCol)
-
   /** One accepted batch lands: docs + index partitions under the
-    * batch's identity ([[acceptBatchId]]). Ids the index already
-    * covers under ANOTHER batch drop first (an operator staging the
-    * same docs twice must not duplicate the corpus) — a crashed re-run
-    * of THIS batch keeps its own rows because the filter excludes its
-    * own partition. Stream records additionally drop TOMBSTONED ids
-    * ([[tombstonesPath]]); operator records un-tombstone theirs. */
+    * batch's identity ([[StagedStore.acceptBatchId]]). Ids the index
+    * already covers under ANOTHER batch drop first (an operator
+    * staging the same docs twice must not duplicate the corpus) — a
+    * crashed re-run of THIS batch keeps its own rows because the
+    * filter excludes its own partition. Stream records additionally
+    * drop TOMBSTONED ids ([[StagedStore.tombstonesPath]]); operator
+    * records un-tombstone theirs (only when any of their ids are
+    * actually tombstoned — routine accepts never touch the log). */
   private def applyAccept(spark: SparkSession, dir: String, record: String,
       staged: DataFrame, r: Recipe): Unit = {
-    val bid = acceptBatchId(record)
+    val bid = StagedStore.acceptBatchId(record)
     val isStream = record.contains("_sb_")
-    val tombstoned = effectiveTombstones(spark, dir, r)
+    val tombstoned = StagedStore.effectiveTombstones(spark, dir, r.idCol)
     val base = tombstoned match {
       case Some(t) if isStream =>
         // broadcast: the set is takedown-history-sized, and the stream
@@ -449,7 +407,8 @@ object CorpusStore {
           Seq(r.idCol))
         .collect().map(_.getLong(0)).toSeq
       if (revived.nonEmpty)
-        appendTombstoneOps(spark, dir, r, revived, "clear")
+        StagedStore.appendTombstoneOps(spark, dir, r.idCol, revived,
+          "clear")
     }
     // broadcast-probe the hashes index by id (index-sized scan of two
     // skinny columns, batch-bounded result) — never a corpus shuffle,
@@ -479,7 +438,7 @@ object CorpusStore {
     * ops on every heal retry, growing the log unboundedly while
     * blocking every later-staged intent — the round-13 ADVICE
     * finding). Every id of an APPLIED takedown lands in the TOMBSTONE
-    * record first ([[tombstonesPath]], before any rewrite —
+    * record first ([[StagedStore.tombstonesPath]], before any rewrite —
     * record-before-mutate), so a stream redelivery racing this
     * takedown cannot resurrect the documents.
     *
@@ -496,7 +455,8 @@ object CorpusStore {
     if (!wouldKeepSome(spark, dir, r, ids)) return false
     // tombstone from the already-collected driver set (request-sized)
     // — no second scan of the staged record
-    appendTombstoneOps(spark, dir, r, ids.toSeq.sorted, "add")
+    StagedStore.appendTombstoneOps(spark, dir, r.idCol, ids.toSeq.sorted,
+      "add")
     val idSeq = ids.toSeq
     // affected batches via the hashes lookup (id-column index scan)
     val affected = spark.read.parquet(hashesPath(dir))
@@ -520,10 +480,8 @@ object CorpusStore {
           .write.option("partitionOverwriteMode", "dynamic")
           .partitionBy(BatchCol).mode("overwrite").parquet(path)
       (affected -- keptBatches).foreach { bid =>
-        val (f, _) = hfs(spark, path)
-        f.delete(new org.apache.hadoop.fs.Path(
-          s"$path/$BatchCol=${org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.escapePathName(bid)}"), true)
+        HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
+          partitionDir(path, bid))
       }
     }
     rewrite(docsPath(dir), r.idCol)
@@ -568,7 +526,8 @@ object CorpusStore {
     // docs LAST: its duplication window is the one readers can observe
     val sides = Seq(hashesPath(dir), bandsPath(dir), docsPath(dir))
     sides.foreach { path =>
-      val (f, _) = hfs(spark, path)
+      val (f, _) = HadoopFiles.hfs(spark.sparkContext.hadoopConfiguration,
+        path)
       val marker = new org.apache.hadoop.fs.Path(
         s"${partitionDir(path, target)}/$CommitMarker")
       if (!f.exists(marker)) {
@@ -592,7 +551,8 @@ object CorpusStore {
     // Docs sources first (closes the reader-visible duplication),
     // index sources after
     Seq(docsPath(dir), hashesPath(dir), bandsPath(dir)).foreach { path =>
-      val (f, _) = hfs(spark, path)
+      val (f, _) = HadoopFiles.hfs(spark.sparkContext.hadoopConfiguration,
+        path)
       sources.foreach { bid =>
         f.delete(new org.apache.hadoop.fs.Path(partitionDir(path, bid)),
           true)
@@ -621,10 +581,9 @@ object CorpusStore {
 
   /** Is there a corpus store at `dir`? (Manifest presence — the same
     * gate the TSDB health composition uses.) */
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val (f, hp) = hfs(spark, s"$dir/$IndexesSub/${IndexCatalog.ManifestName}")
-    f.exists(hp)
-  }
+  def exists(spark: SparkSession, dir: String): Boolean =
+    HadoopFiles.exists(spark.sparkContext.hadoopConfiguration,
+      s"$dir/$IndexesSub/${IndexCatalog.ManifestName}")
 
   /** Incremental dedup of an arriving batch against the store —
     * [[Dedup.dedupAgainstIndex]] with the recipe read from the
@@ -689,11 +648,6 @@ object CorpusStore {
     heal(spark, dir)
     bid
   }
-
-  /** A staged accept's landed `__batch` identity
-    * ([[StagedStore.acceptBatchId]]'s split). */
-  private def acceptBatchId(recordName: String): String =
-    StagedStore.acceptBatchId(recordName)
 
   /** Stage + heal a takedown — see [[stageTakedown]]/[[heal]]. */
   def removeDocuments(spark: SparkSession, dir: String,

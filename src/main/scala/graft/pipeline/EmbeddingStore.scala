@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.IndexCatalog
+import graft.model.{HadoopFiles, IndexCatalog}
 
 /** Lifecycle-managed, CELL-PARTITIONED embedding index — the
   * [[CorpusStore]] pattern pointed at the embedding half: one store
@@ -91,11 +91,9 @@ object EmbeddingStore {
 
   // ------------------------------------------------------- filesystem
 
-  // filesystem + staging protocol shared with the corpus store
-  // ([[StagedStore]] — one publish/ordering discipline, never two)
-  private def hfs(spark: SparkSession, p: String) = StagedStore.hfs(spark, p)
-  private def listDirs(spark: SparkSession, root: String, prefix: String) =
-    StagedStore.listDirs(spark, root, prefix)
+  // filesystem: [[graft.model.HadoopFiles]]; staging protocol shared
+  // with the corpus store ([[StagedStore]] — one publish/ordering
+  // discipline, never two)
 
   private def epochDir(dir: String, r: Recipe) = s"$dir/${r.epoch}"
   private def dataPath(dir: String, r: Recipe) = s"${epochDir(dir, r)}/data"
@@ -134,10 +132,9 @@ object EmbeddingStore {
   }
 
   /** Is there an embedding store at `dir`? (Manifest presence.) */
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val (f, hp) = hfs(spark, s"$dir/$IndexesSub/${IndexCatalog.ManifestName}")
-    f.exists(hp)
-  }
+  def exists(spark: SparkSession, dir: String): Boolean =
+    HadoopFiles.exists(spark.sparkContext.hadoopConfiguration,
+      s"$dir/$IndexesSub/${IndexCatalog.ManifestName}")
 
   /** The epoch's codebook, cell-sorted ([[Similarity.readCodebook]]). */
   def readCenters(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
@@ -231,8 +228,7 @@ object EmbeddingStore {
       idCol: String = "id", embCol: String = "embedding",
       nlist: Int = 16, iters: Int = 2,
       pq: Option[(Int, Int)] = None): Unit = {
-    val (f, hp) = hfs(spark, s"$dir/$IndexesSub/${IndexCatalog.ManifestName}")
-    require(!f.exists(hp), s"embedding store already exists at $dir")
+    require(!exists(spark, dir), s"embedding store already exists at $dir")
     require(!embeddings.isEmpty,
       "create: an empty vector set fits no codebook — create the store " +
         "from its first real corpus")
@@ -333,12 +329,8 @@ object EmbeddingStore {
   }
 
   // ---------------------------------------------------------- staging
-
-  /** Staged-record publication and sequencing live in [[StagedStore]]
-    * — the protocol is the corpus store's, verbatim. */
-  private def stage(spark: SparkSession, dir: String, prefix: String,
-      payload: DataFrame): String =
-    StagedStore.stage(spark, dir, prefix, payload)
+  // publication and sequencing: [[StagedStore.stage]] — the protocol
+  // is the corpus store's, verbatim
 
   /** Stage an ACCEPTED vector batch — enters the index (assigned to
     * the CURRENT epoch's cells, PQ-encoded when the recipe says so) at
@@ -351,7 +343,7 @@ object EmbeddingStore {
       s"stageBatch: batch lacks the registered columns " +
         s"(${r.idCol}, ${r.embCol})")
     requireNoNulls(batch, r, "stageBatch")
-    stage(spark, dir, "p", batch)
+    StagedStore.stage(spark, dir, "p", batch)
   }
 
   /** A NULL id or embedding refuses at ADMISSION: a null vector would
@@ -375,7 +367,7 @@ object EmbeddingStore {
     require(wouldKeepSome(spark, dir, r, ids.toSet),
       s"stageTakedown would empty the embedding index at $dir — " +
         s"removing every vector is \"drop the store\", a deliberate act")
-    stage(spark, dir, "t",
+    StagedStore.stage(spark, dir, "t",
       spark.createDataFrame(ids.map(Tuple1(_))).toDF(r.idCol))
   }
 
@@ -403,7 +395,7 @@ object EmbeddingStore {
   }
 
   /** One accepted batch lands under its landed identity
-    * ([[acceptBatchId]] — stream records land under their
+    * ([[StagedStore.acceptBatchId]] — stream records land under their
     * (streamTag, micro-batch) partition, so redelivery re-overwrites
     * itself); ids the index already covers under ANOTHER batch drop
     * first (re-staging must not duplicate), via a skinny id-column
@@ -509,11 +501,10 @@ object EmbeddingStore {
         .partitionBy(CellCol, BatchCol).mode("overwrite")
         .parquet(dataPath(dir, r))
     (affected -- kept).foreach { case (c, b) =>
-      val (f, _) = hfs(spark, dataPath(dir, r))
-      f.delete(new org.apache.hadoop.fs.Path(
+      HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
         s"${dataPath(dir, r)}/$CellCol=$c/$BatchCol=" +
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .escapePathName(b)), true)
+            .escapePathName(b))
     }
     // refresh the affected batches' drift stats from the post-rewrite
     // data (batch-pruned read over ALL their cells — a batch's
@@ -543,11 +534,10 @@ object EmbeddingStore {
         .partitionBy(BatchCol).mode("overwrite")
         .parquet(statsPath(dir, r))
     (affBatches -- still).foreach { b =>
-      val (f, _) = hfs(spark, statsPath(dir, r))
-      f.delete(new org.apache.hadoop.fs.Path(
+      HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
         s"${statsPath(dir, r)}/$BatchCol=" +
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .escapePathName(b)), true)
+            .escapePathName(b))
     }
     true
   }
@@ -686,10 +676,10 @@ object EmbeddingStore {
     // belong to THIS operation's lineage (single epoch writer) — heal
     // never touches them, so an always-safe heal cannot destroy an
     // epoch a refit is mid-building
-    listDirs(spark, dir, "cells_e")
-      .filter(_.getName != r.epoch).foreach { p =>
-        val (f, _) = hfs(spark, p.toString); f.delete(p, true)
-      }
+    val conf = spark.sparkContext.hadoopConfiguration
+    HadoopFiles.listDirs(conf, dir, "cells_e")
+      .filter(_.getName != r.epoch)
+      .foreach(p => HadoopFiles.deleteRecursive(conf, p.toString))
     val epochN = r.epoch.stripPrefix("cells_e").toIntOption.getOrElse(
       throw new IllegalArgumentException(
         s"embedding store at $dir has unparseable epoch '${r.epoch}'"))
@@ -752,8 +742,7 @@ object EmbeddingStore {
       writeBaseline(spark, dir, nr)
       // THE commit point: one atomic manifest rewrite
       IndexCatalog.setEmbeddingEpoch(s"$dir/$IndexesSub", next)
-      val (f, _) = hfs(spark, epochDir(dir, r))
-      f.delete(new org.apache.hadoop.fs.Path(epochDir(dir, r)), true)
+      HadoopFiles.deleteRecursive(conf, epochDir(dir, r))
     }
     readout
   }

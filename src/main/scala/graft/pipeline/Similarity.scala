@@ -564,10 +564,14 @@ object Similarity {
         topK(base.join(broadcast(q), col("id") =!= col("qid"))
           .select(col("qid"), col("id"),
             cosine(col("qe"), col("ce")).as("cos")), k))
-    } else (
-      knnIvfWith(stale, corpus, queries, k, nprobe, idCol, qidCol, embCol),
-      knnIvfWith(refit, corpus, queries, k, nprobe, idCol, qidCol, embCol),
-      knnBrute(corpus, queries, k, idCol, qidCol, embCol))
+    } else {
+      // the fused branch's corpus filter: a null embedding has no cell,
+      // so it must not take an exact rank the IVF sides can never hit
+      val corpusNN = corpus.where(col(embCol).isNotNull)
+      (knnIvfWith(stale, corpusNN, queries, k, nprobe, idCol, qidCol, embCol),
+        knnIvfWith(refit, corpusNN, queries, k, nprobe, idCol, qidCol, embCol),
+        knnBrute(corpusNN, queries, k, idCol, qidCol, embCol))
+    }
     val exactC = Dedup.scopedCache(exact)
     def recallOf(nn: DataFrame, suffix: String) =
       recallAtK(nn, exactC)

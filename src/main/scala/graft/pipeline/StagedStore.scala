@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.model.HadoopFiles
+
 /** The ONE staged record-before-mutate protocol both lifecycle stores
   * share ([[CorpusStore]], [[EmbeddingStore]]) — extracted so a fix to
   * the publish or ordering rules can never apply to one store and
@@ -44,8 +46,10 @@ private[pipeline] object StagedStore {
     * unknown/huge estimate (e.g. a checkpoint-backed plan with default
     * stats — pass `sizeFrom` with the pre-checkpoint plan instead)
     * leaves the frame untouched rather than forcing a corpus-sized
-    * write through few tasks. `coalesce` only narrows the final stage:
-    * upstream exchanges keep their parallelism. */
+    * write through few tasks. `coalesce` is a NARROW dependency, so it
+    * does not only narrow the final write: it merges the whole narrow
+    * chain back to the previous exchange (or the scan) into the chosen
+    * task count. Exchanges upstream of that keep their parallelism. */
   def sizedForWrite(df: DataFrame, sizeFrom: Option[DataFrame] = None)
       : DataFrame = {
     val target = targetFileBytes(df.sparkSession)
@@ -55,25 +59,15 @@ private[pipeline] object StagedStore {
     else df.coalesce((((est + target - 1) / target) min 4096 max 1).toInt)
   }
 
-  def hfs(spark: SparkSession, p: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
-  }
-
-  def listDirs(spark: SparkSession, root: String,
-      prefix: String): Seq[org.apache.hadoop.fs.Path] = {
-    val (f, hp) = hfs(spark, root)
-    if (!f.exists(hp)) Nil
-    else f.listStatus(hp).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .map(_.getPath)
-  }
+  private def pendingDirs(spark: SparkSession, dir: String,
+      prefix: String): Seq[org.apache.hadoop.fs.Path] =
+    HadoopFiles.listDirs(spark.sparkContext.hadoopConfiguration,
+      s"$dir/$PendingSub", prefix)
 
   /** Next staged sequence number — heal applies staged intents in
     * staging order; single-maintenance-writer discipline. */
   def nextSeq(spark: SparkSession, dir: String): Int =
-    listDirs(spark, s"$dir/$PendingSub", "")
+    pendingDirs(spark, dir, "")
       .flatMap(_.getName.split("_").lift(1)).flatMap(_.toIntOption)
       .maxOption.getOrElse(-1) + 1
 
@@ -83,7 +77,7 @@ private[pipeline] object StagedStore {
       payload: DataFrame): String = {
     val tmp = s"$dir/$PendingSub/.tmp_$name"
     sizedForWrite(payload).write.mode("overwrite").parquet(tmp)
-    val (f, _) = hfs(spark, tmp)
+    val (f, _) = HadoopFiles.hfs(spark.sparkContext.hadoopConfiguration, tmp)
     require(f.rename(new org.apache.hadoop.fs.Path(tmp),
       new org.apache.hadoop.fs.Path(s"$dir/$PendingSub/$name")),
       s"stage: rename failed for $name")
@@ -100,40 +94,46 @@ private[pipeline] object StagedStore {
 
   /** Sweep `.tmp_` stage-crash leftovers. */
   def sweepTmp(spark: SparkSession, dir: String): Unit =
-    listDirs(spark, s"$dir/$PendingSub", ".tmp_").foreach { p =>
-      val (f, _) = hfs(spark, p.toString)
-      f.delete(p, true)
-    }
+    pendingDirs(spark, dir, ".tmp_").foreach(p =>
+      HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
+        p.toString))
 
   /** The staged records pending no heal has applied (the standing
     * `*_pending` alert's count). */
   def pendingCount(spark: SparkSession, dir: String): Long =
-    listDirs(spark, s"$dir/$PendingSub", "")
+    pendingDirs(spark, dir, "")
       .count(p => !p.getName.startsWith(".")).toLong
 
   // ------------------------------------------------------- tombstones
 
   /** The permanent takedown record both stores keep — an APPEND-ONLY
-    * `(idCol, seq, op)` log, never rewritten in place: takedowns
-    * append `add` rows BEFORE their rewrites (record-before-mutate),
-    * deliberate operator accepts append `clear` rows for ids they
-    * re-admit, `seq` is the LOG's own monotonic counter (deliberately
-    * NOT the staging sequence, which resets when pending drains), and
-    * the effective set is "ids whose latest op is add". STREAM accepts
-    * filter against it so an at-least-once redelivery cannot
-    * resurrect an id removed while the stream was down — under the
-    * stores' single-maintenance-writer discipline (heals are
-    * serialized; the log's read-max-then-append is not a concurrent
-    * structure). Takedown-history-sized: legal/ops events, orders of
-    * magnitude rarer than accepts. */
+    * `(idCol, seq, op)` log, never rewritten in place (an in-place
+    * clear would be the one non-crash-safe mutation in stores whose
+    * whole contract is record-before-mutate). Takedowns append `add`
+    * rows BEFORE their rewrites; deliberate operator accepts append
+    * `clear` rows for ids they re-admit. `seq` is the LOG's own
+    * monotonic counter — deliberately NOT the staging sequence, which
+    * resets when pending drains and would let an old `add` outrank a
+    * later `clear`. Heal applies records in staging order and appends
+    * in apply order, so log order IS causal order, and the effective
+    * set is "ids whose latest op is add"; a crashed re-run re-appends
+    * the same op at a higher seq, which changes nothing. STREAM
+    * accepts filter against it so an at-least-once redelivery cannot
+    * resurrect an id removed while the stream was down (a license
+    * revocation must survive the crash-redelivery race; re-adding
+    * after takedown stays an operator's call) — under the stores'
+    * single-maintenance-writer discipline (heals are serialized; the
+    * log's read-max-then-append is not a concurrent structure).
+    * Takedown-history-sized: legal/ops events, orders of magnitude
+    * rarer than accepts. */
   def tombstonesPath(dir: String): String = s"$dir/takedowns"
 
   def appendTombstoneOps(spark: SparkSession, dir: String,
       idCol: String, ids: Seq[Long], op: String): Unit = {
     import spark.implicits._
-    val (f, hp) = hfs(spark, tombstonesPath(dir))
     val seq =
-      if (!f.exists(hp)) 0L
+      if (!HadoopFiles.exists(spark.sparkContext.hadoopConfiguration,
+          tombstonesPath(dir))) 0L
       else {
         val row = spark.read.parquet(tombstonesPath(dir))
           .agg(org.apache.spark.sql.functions.max(
@@ -149,8 +149,8 @@ private[pipeline] object StagedStore {
   def effectiveTombstones(spark: SparkSession, dir: String,
       idCol: String): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, max_by}
-    val (f, hp) = hfs(spark, tombstonesPath(dir))
-    if (!f.exists(hp)) None
+    if (!HadoopFiles.exists(spark.sparkContext.hadoopConfiguration,
+        tombstonesPath(dir))) None
     else Some(spark.read.parquet(tombstonesPath(dir))
       .groupBy(col(idCol))
       .agg(max_by(col("op"), col("seq")).as("__latest"))
@@ -190,7 +190,7 @@ private[pipeline] object StagedStore {
       apply: (String, DataFrame) => Boolean): Int = {
     sweepTmp(spark, dir)
     var n = 0
-    val staged = listDirs(spark, s"$dir/$PendingSub", "")
+    val staged = pendingDirs(spark, dir, "")
       .filterNot(_.getName.startsWith("."))
       .map { p =>
         val seq = p.getName.split("_").lift(1).flatMap(_.toIntOption)
@@ -201,8 +201,8 @@ private[pipeline] object StagedStore {
       }.sortBy(_._1)
     staged.foreach { case (_, p) =>
       if (apply(p.getName, spark.read.parquet(p.toString))) {
-        val (f, _) = hfs(spark, p.toString)
-        f.delete(p, true)
+        HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
+          p.toString)
         n += 1
       }
     }

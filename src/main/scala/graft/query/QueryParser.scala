@@ -771,6 +771,8 @@ object QueryParser {
     val step = positiveDuration(
       TimeUtil.parseDuration(stmt.get("step").asText()),
       "group-aggregate-join.step")
+    if (root.has("group-by-tag") || root.has("group-by") || root.has("pivot-by-tag"))
+      throw new BadQuery("group-aggregate-join doesn't support group-by")
     val (filters, comb) = parseNamedFilters(root)
     GroupAggregateJoinQuery(metrics, AggFunc.fromToken(funcs.head), step,
       parseRange(root), parseWhere(root), filters, comb, parseOrderBy(root),

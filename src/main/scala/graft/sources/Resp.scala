@@ -165,14 +165,4 @@ object Resp {
       .select(xxhash64(col("name")).as("series_id"), col("ts"), col("value"),
         col("name"))
   }
-
-  /** Spark integration: event records of the chunks. */
-  def toEvents(chunks: Dataset[String]): DataFrame = {
-    implicit val enc = Encoders.product[(String, Long, String)]
-    chunks
-      .flatMap(c => parseLenient(c).collect { case Event(n, t, b) => (n, t, b) })
-      .toDF("name", "ts", "body")
-      .select(xxhash64(col("name")).as("series_id"), col("ts"), col("body"),
-        col("name"))
-  }
 }

@@ -738,9 +738,10 @@ object TsdbStream extends Serializable {
     * protocolparser.h:131-257), so the log half gets the same
     * live-ingest story: `events_l0` joins [[graft.model.TsdbLayout
     * .openDatabase]]'s two-tier union read, [[graft.model.TsdbLayout
-    * .compactEventsL0]] moves settled days, [[graft.model.TsdbLayout
-    * .retireEventsIngestRoot]] rotates the root. Same exactly-once and
-    * compaction-restores-sort contracts as the samples form. */
+    * .compactL0]] moves settled days, [[graft.model.TsdbLayout
+    * .retireIngestRoot]] rotates the root (both with the events
+    * tier). Same exactly-once and compaction-restores-sort contracts as
+    * the samples form. */
   def eventsIngest(events: DataFrame, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     ingestTo(events, "body", path, checkpoint)
@@ -835,11 +836,11 @@ object TsdbStream extends Serializable {
     *
     * Lifecycle: [[graft.model.TsdbLayout.foldCatalogL0]] merges the
     * root into the persisted catalog; [[graft.model.TsdbLayout
-    * .retireCatalogIngestRoot]] verifies the fold and drops the root —
-    * the same epoch rotation the fact tiers use. Duplicates across
-    * EPOCHS (a re-seen series after rotation re-registers into the new
-    * root) are eliminated on read and on fold by id, so the dedup
-    * state never needs to outlive its root. */
+    * .retireIngestRoot]] (catalog tier) verifies the fold and drops
+    * the root — the same epoch rotation the fact tiers use.
+    * Duplicates across EPOCHS (a re-seen series after rotation
+    * re-registers into the new root) are eliminated on read and on
+    * fold by id, so the dedup state never needs to outlive its root. */
   def catalogIngest(rows: DataFrame, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     // locations QUANTIZE in-stream (1e-4 degrees ≈ 11 m — registration

@@ -252,7 +252,8 @@ object ContractProbe {
       graft.model.TsdbLayout.retireIngestRoot(spark, db)
     }
     tryOp("retire-unfolded-catalog-root") {
-      graft.model.TsdbLayout.retireCatalogIngestRoot(spark, db)
+      graft.model.TsdbLayout.retireIngestRoot(spark, db,
+        graft.model.TsdbLayout.Tier.Catalog)
     }
     tryOp("maintenance-tick") {
       graft.model.TsdbLayout.maintenanceTick(spark, db, 48 * h)
@@ -260,7 +261,8 @@ object ContractProbe {
     }
     tryOp("retire-after-tick") {
       graft.model.TsdbLayout.retireIngestRoot(spark, db) &&
-        graft.model.TsdbLayout.retireCatalogIngestRoot(spark, db)
+        graft.model.TsdbLayout.retireIngestRoot(spark, db,
+          graft.model.TsdbLayout.Tier.Catalog)
     }
 
     // ---- round-12 guards: staleness loop, canonical marker, retention
@@ -288,7 +290,7 @@ object ContractProbe {
       graft.model.IndexCatalog.rebuild(spark, db2)
     }
     tryOp("retire-absent-epoch-is-idempotent-false") {
-      graft.model.TsdbLayout.retireIngestEpoch(spark, db2, 7)
+      graft.model.TsdbLayout.retireIngestRoot(spark, db2, epoch = Some(7))
     }
     tryOp("expire-may-not-empty-layout") {
       graft.model.TsdbLayout.expire(spark, s"$db2/samples", 999 * h)

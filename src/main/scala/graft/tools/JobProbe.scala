@@ -44,10 +44,10 @@ object JobProbe {
         }
       })
 
-    // listenerBus is private[spark]; a short quiesce keeps the counter
-    // windows honest enough for a dev probe (events are posted
-    // synchronously with job completion up to the bus's async drain)
-    def waitForListenerBus(s: SparkSession): Unit = Thread.sleep(300)
+    // events reach the listener asynchronously: drain the bus so each
+    // entry's counter window holds exactly its own jobs
+    def waitForListenerBus(s: SparkSession): Unit =
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(s.sparkContext)
 
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * boundary through openDatabase. Emits one PROBE line per step.
   *
   * `--events` probes the LOG half instead: the identical walls over
-  * eventsIngest / compactEventsL0 / eventsL0Stragglers /
+  * eventsIngest / compactL0 / l0Stragglers (events tier) /
   * select-events — the shared tier protocol carries the WIDE `props`
   * body through every rewrite there, so the day axis must be measured
   * on both halves, not inferred from one.
@@ -120,16 +120,16 @@ object L0DayProbe {
             } finally q.stop()
           }
         }
+      val tier =
+        if (eventsMode) graft.model.TsdbLayout.Tier.Events
+        else graft.model.TsdbLayout.Tier.Samples
       def compact(cutDays: Long) =
-        if (eventsMode)
-          graft.model.TsdbLayout.compactEventsL0(spark, db, cutDays * DayNs)
-        else graft.model.TsdbLayout.compactL0(spark, db, cutDays * DayNs)
+        graft.model.TsdbLayout.compactL0(spark, db, cutDays * DayNs, tier)
       val (moved1, tHalf) = wall(compact(days / 2))
       // the standing alert over the compacted residue: every below-
       // watermark L0 row anti-joins against its day's batch slice
       val (strag, tStrag) = wall(
-        (if (eventsMode) graft.model.TsdbLayout.eventsL0Stragglers(spark, db)
-         else graft.model.TsdbLayout.l0Stragglers(spark, db)).count())
+        graft.model.TsdbLayout.l0Stragglers(spark, db, tier).count())
       val (moved2, tRest) = wall(compact(days))
       // a ranged select straddling the (now-final) tier boundary
       val stmt =

@@ -957,6 +957,28 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       "an empty readout is not evidence — the registration stays")
   }
 
+  test("refitCodebook: the unfused fallback drops null-embedding corpus rows from the exact frame") {
+    // an EMPTY stale codebook forces the unfused branch. Id 6 has the
+    // smallest hash60 of the corpus ids, so the one-cell refit seeds on
+    // a real vector. k = 4 exceeds the three non-null neighbours: a
+    // null-embedding row left in the exact frame would take rank 4 and
+    // cap every recall at 0.75, since no IVF side can ever reach it
+    val corpus = Seq(6L -> Array(0f, 10f), 1L -> Array(1f, 10f),
+        2L -> Array(-1f, 10f), 3L -> (null: Array[Float]))
+      .toDF("id", "embedding")
+    val queries = Seq(100L -> Array(0f, 9f)).toDF("qid", "embedding")
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_refit_null").toString + "/cb"
+    graft.pipeline.Similarity.writeCodebook(spark, Seq.empty, path)
+    val out = graft.pipeline.Similarity.refitCodebook(spark, path,
+        corpus, queries, k = 4, nlist = 1, nprobe = 1, iters = 1)
+      .select("qid", "n_hit_stale", "n_hit_refit", "recall_refit", "healed")
+      .as[(Long, Long, Long, Double, Int)].collect().toSeq
+    graft.pipeline.Dedup.releaseCaches()
+    assert(out === Seq((100L, 0L, 3L, 1.0, 1)),
+      "the exact frame holds only the three non-null neighbours")
+  }
+
   test("clusterSample: dense cells cap at k, sparse keep all, order-blind") {
     // two far-apart centers; 8 points near center 0, 2 near center 1
     val centers = Seq((0, Seq(0.0, 0.0)), (1, Seq(100.0, 100.0)))

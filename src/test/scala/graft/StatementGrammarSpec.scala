@@ -116,4 +116,25 @@ class StatementGrammarSpec extends AnyFunSuite {
          "num-perm": 2.5}}""",
       "dedup.num-perm must be an integer")
   }
+
+  // group-aggregate-join aligns metrics per series; like join and
+  // asof-join it has no re-keying clause, so each one refuses instead
+  // of silently returning per-series rows
+  private val gaj =
+    """"group-aggregate-join": {"metric": ["a", "b"], "step": "1min", "func": "max"}"""
+
+  test("group-aggregate-join refuses group-by") {
+    refuses(s"""{$gaj, "group-by": ["host"]}""",
+      "group-aggregate-join doesn't support group-by")
+  }
+
+  test("group-aggregate-join refuses group-by-tag") {
+    refuses(s"""{$gaj, "group-by-tag": ["host"]}""",
+      "group-aggregate-join doesn't support group-by")
+  }
+
+  test("group-aggregate-join refuses pivot-by-tag") {
+    refuses(s"""{$gaj, "pivot-by-tag": ["dc"]}""",
+      "group-aggregate-join doesn't support group-by")
+  }
 }

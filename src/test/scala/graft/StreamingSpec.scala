@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.model.TsdbLayout.Tier
 import graft.query.Ast.AggFunc
 import graft.sources.OpenTsdb
 import graft.streaming.TsdbStream
@@ -1265,13 +1266,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "two-tier events read (batch ∪ events_l0) must equal the flat context")
 
     // claim days 2-3; the watermark flips the reader's tier
-    assert(graft.model.TsdbLayout.compactEventsL0(spark, db, 96 * h) === 2)
-    assert(graft.model.TsdbLayout.eventsL0Watermark(spark, db) === 4L)
+    assert(graft.model.TsdbLayout.compactL0(spark, db, 96 * h, Tier.Events) === 2)
+    assert(graft.model.TsdbLayout.l0Watermark(spark, db, Tier.Events) === 4L)
     for (d <- Seq(2, 3))
       assert(new java.io.File(s"$db/events/metric=!e/ts_day=$d").isDirectory,
         s"event day $d must now live in the batch layout")
     assert(servedRows() === oracle, "event compaction must not change answers")
-    assert(graft.model.TsdbLayout.compactEventsL0(spark, db, 96 * h) === 0)
+    assert(graft.model.TsdbLayout.compactL0(spark, db, 96 * h, Tier.Events) === 0)
 
     // crash window: watermark lost after the overwrite committed —
     // double-read until the re-run recovers (verify-and-advance per day)
@@ -1279,32 +1280,32 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Paths.get(db, "events_l0_watermark"))
     assert(servedRows() !== oracle,
       "the simulated crash window must actually double-read")
-    assert(graft.model.TsdbLayout.compactEventsL0(spark, db, 120 * h) === 3,
+    assert(graft.model.TsdbLayout.compactL0(spark, db, 120 * h, Tier.Events) === 3,
       "the later-cutoff re-run must recover days 2-3 AND move day 4")
     assert(servedRows() === oracle, "recovery restores single-read answers")
 
     // EVENT STRAGGLER: a late event streamed below the watermark is
-    // reader-invisible; eventsL0Stragglers names it, retirement refuses
+    // reader-invisible; the events l0Stragglers names it, retirement refuses
     // (the root holds its only copy), and upsertEvents — the log
     // half's partition-scoped ADD — heals it, clearing both
     val late = ("x", 30 * h + 1L, "k=99 late")
     writeLines("late.txt", Seq(late))
     val q3 = startIngest() // resumes from the checkpoint; a/b skipped
     try q3.processAllAvailable() finally q3.stop()
-    assert(graft.model.TsdbLayout.eventsL0Stragglers(spark, db)
+    assert(graft.model.TsdbLayout.l0Stragglers(spark, db, Tier.Events)
       .as[(String, Long, Long)].collect().toSeq === Seq(("!e", 1L, 1L)),
       "the events straggler alert must name the claimed day")
     assert(servedRows() === oracle,
       "an event straggler must be reader-invisible, not double-read")
     val eRetire = intercept[IllegalArgumentException](
-      graft.model.TsdbLayout.retireEventsIngestRoot(spark, db))
+      graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Events))
     assert(eRetire.getMessage.contains("straggler"))
     val xId = Seq("!e user=x").toDF("name")
       .select(xxhash64(col("name"))).head().getLong(0)
     graft.model.TsdbLayout.upsertEvents(spark, s"$db/events",
       Seq((xId, late._2, late._3)).toDF("series_id", "ts", "body"),
       eventsCtxOf(all).series)
-    assert(graft.model.TsdbLayout.eventsL0Stragglers(spark, db).isEmpty,
+    assert(graft.model.TsdbLayout.l0Stragglers(spark, db, Tier.Events).isEmpty,
       "routing the straggler through upsertEvents must clear the alert")
     assert(servedRows() === new graft.engine.Engine(
         eventsCtxOf(all :+ late)).execute(stmt).collect().toSeq,
@@ -1316,7 +1317,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(servedRows() === new graft.engine.Engine(
         eventsCtxOf(all :+ late)).execute(stmt).collect().toSeq)
     // nothing straggles, nothing live — the events root retires
-    assert(graft.model.TsdbLayout.retireEventsIngestRoot(spark, db,
+    assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Events,
       checkpoint = Some(s"$db/ev_ckpt")))
     assert(!new java.io.File(s"$db/events_l0").exists())
     assert(servedRows() === new graft.engine.Engine(
@@ -1343,7 +1344,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       s"$db2/events_l0", s"$db2/ev_ckpt")
     try qc.processAllAvailable() finally qc.stop()
     val e = intercept[IllegalArgumentException](
-      graft.model.TsdbLayout.compactEventsL0(spark, db2, 24 * h))
+      graft.model.TsdbLayout.compactL0(spark, db2, 24 * h, Tier.Events))
     assert(e.getMessage.contains("exclusive"))
   }
 
@@ -1578,7 +1579,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     // rotation refuses while y's only copy lives in the root
     val ex = intercept[IllegalArgumentException] {
-      graft.model.TsdbLayout.retireCatalogIngestRoot(spark, db)
+      graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Catalog)
     }
     assert(ex.getMessage.contains("unfolded"))
 
@@ -1588,14 +1589,14 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     // now the root rotates, and answers come from the persisted
     // catalog alone — unchanged
-    assert(graft.model.TsdbLayout.retireCatalogIngestRoot(spark, db,
+    assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Catalog,
       checkpoint = Some(s"$db/c_ckpt")))
     assert(!new java.io.File(s"$db/catalog_l0").exists())
     assert(new graft.engine.Engine(opened()).execute(stmt).collect().toSeq
         === new graft.engine.Engine(ctxOf(full)).execute(stmt).collect().toSeq,
       "fold + rotation must not change answers")
     // idempotent re-retire: nothing left, false
-    assert(!graft.model.TsdbLayout.retireCatalogIngestRoot(spark, db))
+    assert(!graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Catalog))
   }
 
   test("catalogIngest: canonical-name tag parsing handles '=' in values and tagless metrics") {
@@ -1650,7 +1651,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     spark.read.parquet(s"$base/catalog_l0")
       .write.parquet(s"$base/series") // minimal persisted catalog
     assert(graft.model.TsdbLayout.foldCatalogL0(spark, base) === 0L)
-    assert(graft.model.TsdbLayout.retireCatalogIngestRoot(spark, base,
+    assert(graft.model.TsdbLayout.retireIngestRoot(spark, base, Tier.Catalog,
       checkpoint = Some(s"$base/ck1")))
 
     // epoch 2: s1 is RE-SEEN (its state died with epoch 1) and s2 is new
@@ -2047,7 +2048,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // the round-11 rotation implied ingest downtime (stop → retire →
     // restart at the same path); epoch-numbered roots remove it: the
     // next epoch's sink starts at nextIngestRoot while the old root
-    // drains, readers union every live root, and retireIngestEpoch
+    // drains, readers union every live root, and retireIngestRoot
     // drops the drained root per-epoch — the reference's sharded WAL
     // rotating volumes under writes (input_log.h:36-80)
     val db = java.nio.file.Files.createTempDirectory("graft_epoch_db").toString
@@ -2094,11 +2095,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       q2.processAllAvailable()
       // the LIVE epoch refuses its own retire (uncompacted days)
       val eLive = intercept[IllegalArgumentException](
-        graft.model.TsdbLayout.retireIngestEpoch(spark, db, 2))
+        graft.model.TsdbLayout.retireIngestRoot(spark, db, epoch = Some(2)))
       assert(eLive.getMessage.contains("uncompacted"))
       // the drained epoch retires WHILE the successor streams — its
       // sibling's live days must not block it (per-root guards)
-      assert(graft.model.TsdbLayout.retireIngestEpoch(spark, db, 1,
+      assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, epoch = Some(1),
         checkpoint = Some(s"$db/ckpt_e1")))
       assert(!new java.io.File(e1).exists())
       assert(q2.isActive, "rotation must kill nothing")
@@ -2260,8 +2261,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         .selectExpr("split(value, ';')[0] AS name",
           "CAST(split(value, ';')[1] AS LONG) AS ts",
           "split(value, ';')[2] AS body")
-      val evRoot = graft.model.TsdbLayout.nextEventsIngestRoot(spark, db)
-      val catRoot = graft.model.TsdbLayout.nextCatalogIngestRoot(spark, db)
+      val evRoot = graft.model.TsdbLayout.nextIngestRoot(spark, db, Tier.Events)
+      val catRoot = graft.model.TsdbLayout.nextIngestRoot(spark, db, Tier.Catalog)
       assert(evRoot.endsWith(s"events_l0_$tag") &&
         catRoot.endsWith(s"catalog_l0_$tag"))
       val f = TsdbStream.namedEventsIngest(named(), evRoot, s"$db/f_$tag")
@@ -2273,7 +2274,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val e1Rows = (48 until 96).flatMap(i => Seq(
       ("!m user=x", i.toLong * h, s"x$i"), ("!m user=y", i.toLong * h, s"y$i")))
     runEpoch("e1", e1Rows)
-    graft.model.TsdbLayout.compactEventsL0(spark, db, 96 * h)
+    graft.model.TsdbLayout.compactL0(spark, db, 96 * h, Tier.Events)
     // epoch 2: hours 96-119, BOTH series re-seen (fresh dedup state →
     // both re-register into catalog_l0_e2 — the sibling copies)
     val e2Rows = (96 until 120).flatMap(i => Seq(
@@ -2294,14 +2295,14 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     // catalog epoch 1 retires WITHOUT a fold: its registrations'
     // copies live in the sibling epoch-2 root (re-registration)
-    assert(graft.model.TsdbLayout.retireCatalogIngestEpoch(spark, db, 1,
+    assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Catalog, Some(1),
       checkpoint = Some(s"$db/c_e1")))
     assert(!new java.io.File(s"$db/catalog_l0_e1").exists())
     // the live events epoch refuses; the drained one retires
     val eLive = intercept[IllegalArgumentException](
-      graft.model.TsdbLayout.retireEventsIngestEpoch(spark, db, 2))
+      graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Events, Some(2)))
     assert(eLive.getMessage.contains("uncompacted"))
-    assert(graft.model.TsdbLayout.retireEventsIngestEpoch(spark, db, 1,
+    assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Events, Some(1),
       checkpoint = Some(s"$db/f_e1")))
     assert(servedBodies() === expected,
       "per-epoch rotation must never change answers")
@@ -2309,11 +2310,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // epoch 2's catalog root holds the ONLY copies now: retire refuses
     // until the fold moves them to the persisted catalog
     val eOnly = intercept[IllegalArgumentException](
-      graft.model.TsdbLayout.retireCatalogIngestEpoch(spark, db, 2))
+      graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Catalog, Some(2)))
     assert(eOnly.getMessage.contains("unfolded"))
     assert(graft.model.TsdbLayout.foldCatalogL0(spark, db) === 1L,
       "fold is new-only: x was persisted, y is the one new registration")
-    assert(graft.model.TsdbLayout.retireCatalogIngestEpoch(spark, db, 2,
+    assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, Tier.Catalog, Some(2),
       checkpoint = Some(s"$db/c_e2")))
     assert(servedBodies() === expected,
       "fold + full catalog rotation must not change answers")
@@ -2322,9 +2323,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // retired it restarts at e1 — same as the legacy root reusing its
     // one path per epoch: the root DIRECTORY is the identity, retire
     // requires it to exist, so a reused number cannot alias a dead one
-    assert(graft.model.TsdbLayout.nextEventsIngestRoot(spark, db)
+    assert(graft.model.TsdbLayout.nextIngestRoot(spark, db, Tier.Events)
       .endsWith("events_l0_e3"))
-    assert(graft.model.TsdbLayout.nextCatalogIngestRoot(spark, db)
+    assert(graft.model.TsdbLayout.nextIngestRoot(spark, db, Tier.Catalog)
       .endsWith("catalog_l0_e1"))
   }
 }
