@@ -87,7 +87,11 @@ object Bench {
     val streamingS = streamOk.map(_._2).sum
     val streamMeta =
       s""""stream_entries_s":$streamingS,"streaming_n":${streamOk.size},"batch_s":${total - streamingS}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec",$streamMeta,"queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
+    // the run's effective width, so an overhead-bound run can be told
+    // from a serial one
+    val hostMeta =
+      s""""cpus":${cpus.toInt},"default_parallelism":${spark.sparkContext.defaultParallelism}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec",$streamMeta,"queries":$qs,"failed":$failed,"sf":"$sfDir",$hostMeta}"""
     println(line)
     // durable artifacts: the driver's stdout tail is 2000 bytes, which has
     // truncated the full JSON line mid-line every round so far — keep the
@@ -114,7 +118,7 @@ object Bench {
     val failedNames = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     val failedJson = failedNames.take(8).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
-    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"stream_entries_s":${r3(streamingS)},"batch_s":${r3(total - streamingS)},"queries":{$sb},"queries_omitted":$omitted,"failed_n":${failedNames.size},"failed":$failedJson,"full":"/tmp/bench.json","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"stream_entries_s":${r3(streamingS)},"batch_s":${r3(total - streamingS)},"queries":{$sb},"queries_omitted":$omitted,"failed_n":${failedNames.size},"failed":$failedJson,"full":"/tmp/bench.json","sf":"$sfDir",$hostMeta}"""
     println(compact)
     spark.stop()
   }

@@ -1,8 +1,12 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{In, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, MapType}
 
 import graft.model.TsdbContext
 import graft.query.Ast._
@@ -19,10 +23,16 @@ import graft.series.SeriesName
   * aggregation, which the reference implements by hand inside its NB+tree
   * iterators (SURVEY §4).
   *
-  * Scale notes (100 TB): the series catalog is always broadcast (it is the
-  * analog of the reference's parse-time inverted-index resolution); fact
-  * scans carry `ts`-range and value predicates that reach the Parquet reader
-  * as `PushedFilters`; aggregations are keyed by the re-keyed output series
+  * Scale notes (100 TB): series resolve against the catalog — the analog of
+  * the reference's parse-time inverted-index resolution — in one of three
+  * regimes. A catalog of at most [[Engine.MaxLocalSeries]] series is
+  * snapshotted on the driver, so resolution folds at optimization time;
+  * a resolved set of at most [[Engine.MaxInlineSeries]] ids then goes
+  * INLINE into the fact scan as a pushed `series_id IN (…)` (no join, no
+  * Spark job). Larger sets BROADCAST-join the facts, and above
+  * [[Engine.MaxBroadcastSeries]] catalog rows they SHUFFLE-join. Fact
+  * scans carry `ts`-range and value predicates that reach the Parquet
+  * reader as `PushedFilters`; aggregations are keyed by the re-keyed output series
   * so map-side partial aggregation collapses data before any shuffle. The
   * only unavoidable shuffle is the (tagkey, ts) alignment of `join` queries
   * — pre-bucketing the fact table by series hash makes it local.
@@ -42,10 +52,12 @@ object Engine {
   val NsPerDay = graft.time.TimeUtil.NsPerDay
 
   /** Ceiling on the series-catalog size below which resolved-id sets
-    * are BROADCAST to fact scans. Every statement resolves its series
-    * through the catalog and joins the (series_id, out_name) result to
-    * the facts; the resolved set is a subset of the catalog, so ONE
-    * catalog count bounds every statement's broadcast. At ~50 B/row
+    * too large to go inline ([[MaxInlineSeries]]) are BROADCAST to fact
+    * scans. Every statement resolves its series through the catalog and
+    * joins the (series_id, out_name) result to the facts; the resolved
+    * set is a subset of the catalog, so the catalog's size (the local
+    * snapshot's, or ONE count when it exceeds [[MaxLocalSeries]]) bounds
+    * every statement's broadcast. At ~50 B/row
     * (id + rendered name) the ceiling is a ~100 MB broadcast — the top
     * of the comfortable executor-memory range. ABOVE it the engine
     * flips every resolved-id join to an ordinary shuffle join (correct
@@ -65,6 +77,27 @@ object Engine {
     * this regime; a 10⁸-series fleet on Spark can. Override per Engine
     * via the constructor for tests or tighter executors. */
   val MaxBroadcastSeries = 2000000L
+
+  /** Largest catalog an Engine snapshots on the driver (one bounded
+    * collect per Engine, about 2 MB at ~100 B per catalog row). Below
+    * it every statement resolves its series against a LocalRelation:
+    * `where`, bbox, group-by-tag and name rendering fold during
+    * optimization instead of costing a catalog scan and a broadcast
+    * job per statement. The fold evaluates every catalog row on the
+    * driver per statement (~2.3 µs a row measured on 4 cores), so the
+    * bound keeps that optimizer time under the broadcast job it
+    * replaces: a one-host select broke even near 30k catalog rows and
+    * lost 2.3× at 100k (SCALING.md). Larger catalogs keep the parquet
+    * frame, and with it the broadcast or shuffle join. */
+  val MaxLocalSeries = 20000L
+
+  /** Largest resolved-id set that goes inline into the fact scan: a
+    * `series_id IN (…)` filter plus one map literal per resolved column,
+    * about 50 KB per task at this bound. The IN list prunes Parquet row
+    * groups on the series-sorted layout, which a join cannot; but every
+    * task carries the literals and each map lookup probes its keys
+    * linearly per row, so larger sets broadcast-join instead. */
+  val MaxInlineSeries = 1000
 
   /** Minimum number of fine rollup bins a range must span before a
     * group-aggregate is served from the rollup: below this the
@@ -181,19 +214,89 @@ final class Engine(val ctx: TsdbContext,
   ctx.corpusStore.foreach(graft.pipeline.CorpusStore.recipe)
   ctx.embeddingStore.foreach(graft.pipeline.EmbeddingStore.recipe)
 
-  /** One catalog count per Engine lifetime decides the resolved-id
-    * join strategy everywhere ([[Engine.MaxBroadcastSeries]]): a
-    * catalog that fits broadcasts (the 15 statement paths' default —
-    * no fact shuffle), one that does not flips them all to shuffle
-    * joins. An index statistic like [[rollupDensities]], not a
-    * per-query action. */
-  private lazy val seriesBroadcastable: Boolean =
-    ctx.series.count() <= maxBroadcastSeries
+  /** The catalog as a driver-side LocalRelation, when it holds at most
+    * min([[Engine.MaxLocalSeries]], the broadcast ceiling) series: one
+    * bounded collect per Engine lifetime, an index snapshot like
+    * [[rollupDensities]]. Every statement's `where`, bbox, group-by-tag
+    * re-keying and name rendering then fold at optimization time
+    * (ConvertToLocalRelation) through the same Column code the parquet
+    * catalog runs. [[graft.model.TsdbLayout.openFacts]] pins the
+    * catalog's file listing, so the snapshot reads what the frame
+    * would. */
+  private lazy val localCatalog: Option[DataFrame] = {
+    val bound = math.max(0L, math.min(Engine.MaxLocalSeries, maxBroadcastSeries))
+    val rows = ctx.series.limit(bound.toInt + 1).collect()
+    if (rows.length > bound) None
+    else Some(ctx.spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      ctx.series.schema))
+  }
 
-  /** The one way a resolved-id frame meets a fact scan: broadcast below
-    * the catalog ceiling, plain (shuffle) join above it. */
+  /** The catalog every statement resolves series from. */
+  private def catalog: DataFrame = localCatalog.getOrElse(ctx.series)
+
+  /** Whether resolved-id frames broadcast ([[Engine.MaxBroadcastSeries]]):
+    * a catalog that fits the local snapshot always does; a larger one
+    * is counted once per Engine lifetime, and above the ceiling every
+    * resolved-id join flips to a shuffle join. */
+  private lazy val seriesBroadcastable: Boolean =
+    localCatalog.isDefined ||
+      (maxBroadcastSeries > Engine.MaxLocalSeries &&
+        ctx.series.count() <= maxBroadcastSeries)
+
+  /** Broadcast below the catalog ceiling, plain (shuffle) join above
+    * it — the fallback regime of [[joinResolved]], and the hint the
+    * name-keyed per-series index joins (mad, gap) take directly. */
   private def idsHint(ids: DataFrame): DataFrame =
     if (seriesBroadcastable) broadcast(ids) else ids
+
+  /** The one way a resolved-id frame meets a fact or per-series index
+    * frame: `left.join(ids, "series_id")`, in one of three regimes.
+    *   - inline: `ids` folds to a LocalRelation of at most
+    *     [[Engine.MaxInlineSeries]] rows with unique, non-null ids. The
+    *     join becomes `series_id IN (…)` on `left` (pushed into the
+    *     Parquet scan, where it prunes row groups) plus one map-literal
+    *     lookup per ids column. No exchange and no Spark job; an empty
+    *     resolution folds the scan away.
+    *   - broadcast / shuffle: anything else joins through [[idsHint]].
+    * Columns come out in the using-join's order: `series_id`, `left`'s
+    * others, then `ids`'s others. */
+  private def joinResolved(left: DataFrame, ids: DataFrame): DataFrame =
+    inlineIds(ids) match {
+      case Some((inKeys, lookups)) =>
+        val others = left.columns.filterNot(_ == "series_id")
+          .map(c => col(s"`$c`"))
+        left.where(inKeys).select(col("series_id") +: others ++: lookups: _*)
+      case None => left.join(idsHint(ids), "series_id")
+    }
+
+  /** The inline regime's filter and lookup columns, read off the ids
+    * frame's folded rows (no job runs), or None when it does not fold
+    * to a small LocalRelation keyed by unique, non-null ids. */
+  private def inlineIds(ids: DataFrame): Option[(Column, Seq[Column])] =
+    ids.queryExecution.optimizedPlan match {
+      case lr: LocalRelation if lr.data.size <= Engine.MaxInlineSeries =>
+        val out = lr.output
+        val k = out.indexWhere(_.name == "series_id")
+        val kType = out(k).dataType
+        def values(i: Int): Seq[Any] = lr.data.map(r =>
+          if (r.isNullAt(i)) null else r.get(i, out(i).dataType))
+        val keys = values(k)
+        if (keys.contains(null) || keys.distinct.size != keys.size) None
+        else {
+          val sid = col("series_id")
+          val inKeys = Bridge.column(
+            In(Bridge.expression(sid), keys.map(Literal(_, kType))))
+          val lookups = out.indices.filter(_ != k).map { i =>
+            val m = Literal(
+              new ArrayBasedMapData(new GenericArrayData(keys.toArray),
+                new GenericArrayData(values(i).toArray)),
+              MapType(kType, out(i).dataType, valueContainsNull = true))
+            element_at(Bridge.column(m), sid).as(out(i).name)
+          }
+          Some((inKeys, lookups))
+        }
+      case _ => None
+    }
 
   /** Measured compression ratio per registered rollup (avg samples per
     * stored fine bin), driving the density guard. One tiny aggregation
@@ -474,8 +577,8 @@ final class Engine(val ctx: TsdbContext,
       if (ctx.events.columns.contains("metric"))
         ctx.events.where(col("metric") === q.metric)
       else ctx.events
-    var df = tsDayPruned(evBase, q.range)
-      .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+    var df = joinResolved(tsDayPruned(evBase, q.range),
+        ids.select("series_id", "out_name"))
       .where(rangeCond(q.range))
     q.regex.foreach(re => df = df.where(col("body").rlike(re)))
     df = df.select(col("out_name").as("series"), col("ts"), col("body"))
@@ -559,9 +662,9 @@ final class Engine(val ctx: TsdbContext,
         if Math.floorMod(q.range.from, win) == 0 &&
           Math.floorMod(q.range.to, win) == 0 &&
           q.stepNs.forall(_ % win == 0) =>
-      val covered = hist
-        .where(col("win") >= q.range.from && col("win") < q.range.to)
-        .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+      val covered = joinResolved(
+        hist.where(col("win") >= q.range.from && col("win") < q.range.to),
+        ids.select("series_id", "out_name"))
       q.stepNs match {
         case None =>
           graft.ops.HistQuantiles.quantiles(
@@ -623,9 +726,9 @@ final class Engine(val ctx: TsdbContext,
         if Math.floorMod(q.range.from, win) == 0 &&
           Math.floorMod(q.range.to, win) == 0 &&
           q.periodNs % win == 0 && q.binNs % win == 0 =>
-      val phased = hist
-        .where(col("win") >= q.range.from && col("win") < q.range.to)
-        .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+      val phased = joinResolved(
+          hist.where(col("win") >= q.range.from && col("win") < q.range.to),
+          ids.select("series_id", "out_name"))
         .select(col("out_name").as("series"),
           expr(s"pmod(win, ${q.periodNs}L) div ${q.binNs}L").as("phase"),
           col("lo"), col("cnt"))
@@ -748,7 +851,7 @@ final class Engine(val ctx: TsdbContext,
     * `range.to` as "now", the heartbeat readout
     * ([[graft.ops.Monitoring.staleSeries]] through the query
     * language). Series that never wrote in the range at all surface
-    * with null last_ts (left join from the broadcast-sized catalog —
+    * with null last_ts (left join from the resolved catalog rows —
     * absence is exactly what this statement must not silently drop).
     * Output: (series, last_ts_us nullable). */
   def stale(q: StaleQuery): DataFrame = {
@@ -760,8 +863,7 @@ final class Engine(val ctx: TsdbContext,
     // constantly — reads series × bins index rows, never raw samples.
     // Misaligned or backward ranges abstain to the scan.
     val last = eligibleActivityRollup(q.range, None)
-      .map(inRange => inRange
-        .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+      .map(inRange => joinResolved(inRange, ids.select("series_id", "out_name"))
         .groupBy(col("out_name").as("series"))
         .agg(max(col("ts_max")).as("__last")))
       .getOrElse(scan(ids, q.range, Seq(q.metric))
@@ -834,8 +936,7 @@ final class Engine(val ctx: TsdbContext,
 
   private def servedActive(q: ActiveQuery, ids: DataFrame): Option[DataFrame] =
     eligibleActivityRollup(q.range, q.stepNs).map { inRange =>
-      val covered = inRange
-        .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+      val covered = joinResolved(inRange, ids.select("series_id", "out_name"))
       q.stepNs match {
         case None =>
           covered.groupBy(col("out_name").as("metric"))
@@ -877,8 +978,7 @@ final class Engine(val ctx: TsdbContext,
       // dedup — catalog × bins sized, never sample-sized. A value
       // filter narrows what counts as activity ("distinct users with a
       // purchase over 150") as a pushdown-able scan predicate
-      var df = tsDayPruned(facts(q.metrics), q.range)
-        .join(idsHint(ids), "series_id")
+      var df = joinResolved(tsDayPruned(facts(q.metrics), q.range), ids)
         .where(rangeCond(q.range))
       q.filter.foreach(f => df = df.where(valueFilterCond(col("value"), f)))
       finishDistinct(q, df.withColumn("__t", col("ts")))
@@ -929,8 +1029,7 @@ final class Engine(val ctx: TsdbContext,
     // cannot be answered from activity rows (the quantile rule)
     if (q.filter.nonEmpty) return None
     eligibleActivityRollup(q.range, q.stepNs).map(inRange =>
-      finishDistinct(q, inRange
-        .join(idsHint(ids), "series_id")
+      finishDistinct(q, joinResolved(inRange, ids)
         .withColumn("__t", col("bin"))))
   }
 
@@ -995,10 +1094,10 @@ final class Engine(val ctx: TsdbContext,
           Math.floorMod(range.to, fine) == 0 =>
       import graft.functions.VectorExpressions.longFloorDiv
       val ratio = stepNs / fine
-      val covered = bs
-        .where(col("__b") >= range.from / fine &&
-          col("__b") < range.to / fine)
-        .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+      val covered = joinResolved(
+          bs.where(col("__b") >= range.from / fine &&
+            col("__b") < range.to / fine),
+          ids.select("series_id", "out_name"))
         .groupBy(col("out_name").as("metric"),
           longFloorDiv(col("__b"), ratio).as("__b"))
         .agg(sum(col("__s")).as("__s"), sum(col("__c")).as("__c"))
@@ -1087,7 +1186,7 @@ final class Engine(val ctx: TsdbContext,
     val parts = q.funcs.groupBy(_._1).toSeq.sortBy(_._1).map { case (metric, mfs) =>
       val funcs = mfs.map(_._2)
       val ids = resolvedIds(Seq(metric), q.where, q.groupBy, location = q.location)
-      val idsSel = idsHint(ids.select("series_id", "out_name"))
+      val idsSel = ids.select("series_id", "out_name")
       // whole-history aggregates are the canonical SubtreeRef answer: no
       // range bounds → no edge bins → ANY registered rollup serves the
       // entire query from interior accumulators, never touching raw
@@ -1117,7 +1216,7 @@ final class Engine(val ctx: TsdbContext,
           // whole-history: every bin is interior — serve unconditionally
           val accs = (Rollup.neededAccs(funcs) :+ "ts_min").distinct
           val combineAggs = Rollup.combineAggsFor(accs)
-          Some(rollup.join(idsSel, "series_id")
+          Some(joinResolved(rollup, idsSel)
             .groupBy(col("out_name"))
             .agg(combineAggs.head, combineAggs.tail: _*)
             .select(col("out_name") +: col("ts_min").as("__ts") +:
@@ -1128,7 +1227,7 @@ final class Engine(val ctx: TsdbContext,
       }).getOrElse {
         val in = q.range match {
           case Some(r) => scan(ids, r, Seq(metric))
-          case None => facts(Seq(metric)).join(idsSel, "series_id")
+          case None => joinResolved(facts(Seq(metric)), idsSel)
         }
         val aggCols = min(col("ts")).as("__ts") +:
           funcs.zipWithIndex.map { case (f, i) => aggColumn(f).as(s"__v$i") }
@@ -1336,7 +1435,7 @@ final class Engine(val ctx: TsdbContext,
         val accs =
           if (keepTsMin) (Rollup.neededAccs(q.funcs) :+ "ts_min").distinct
           else Rollup.neededAccs(q.funcs)
-        val idsSel = idsHint(ids.select("series_id", "out_name"))
+        val idsSel = ids.select("series_id", "out_name")
         // fully aligned: the driver-side enumeration proved zero edge
         // bins, so every in-range fine bin is interior and the per-row
         // qbin-equality check (two pmods per rollup row) is redundant —
@@ -1346,8 +1445,7 @@ final class Engine(val ctx: TsdbContext,
             if (q.range.forward) col("bin") >= from && col("bin") + fine <= q.range.to
             else col("bin") > q.range.to && col("bin") + (fine - 1) <= from
           } else interiorOf(col("bin"))
-        val interior = rollup.where(interiorCond)
-          .join(idsSel, "series_id")
+        val interior = joinResolved(rollup.where(interiorCond), idsSel)
           .select(col("out_name") +: qbin(col("bin")).as("bin") +:
             accs.map(col): _*)
         val acc = edgeWindows match {
@@ -1415,9 +1513,10 @@ final class Engine(val ctx: TsdbContext,
         tagSuffix(col("tags")).as("__tk"))
     val factCols = Seq("series_id", "ts", "value") ++
       (if (factsHaveKey) Seq("tagkey") else Nil)
-    val f0 = tsDayPruned(facts(Seq(q.left, q.right)), q.range)
-      .select(factCols.map(col): _*)
-      .join(idsHint(withKey), "series_id")
+    val f0 = joinResolved(
+        tsDayPruned(facts(Seq(q.left, q.right)), q.range)
+          .select(factCols.map(col): _*),
+        withKey)
       .where(rangeCond(q.range))
     val f = if (factsHaveKey) f0.withColumnRenamed("tagkey", "__tk") else f0
     // per-side value filters run during the scan, BEFORE alignment: a
@@ -1516,8 +1615,9 @@ final class Engine(val ctx: TsdbContext,
         tagSuffix(col("tags")).as("tagkey"))
     val factCols = Seq("series_id", "ts", "value") ++
       (if (factsHaveKey) Seq("tagkey") else Nil)
-    var f = tsDayPruned(facts(metrics), range).select(factCols.map(col): _*)
-      .join(idsHint(ids), "series_id").where(rangeCond(range))
+    var f = joinResolved(
+        tsDayPruned(facts(metrics), range).select(factCols.map(col): _*), ids)
+      .where(rangeCond(range))
     // per-metric value filters run during the scan, before tuple assembly
     // (reference replicates filters across the zig-zag id layout,
     // query_plan_builder.cc:178-203)
@@ -1557,7 +1657,7 @@ final class Engine(val ctx: TsdbContext,
   // -------------------------------------------------------------- metadata
 
   def search(q: SearchQuery): DataFrame = {
-    val base = if (q.metric.isEmpty) ctx.series else seriesFor(Seq(q.metric), q.where)
+    val base = if (q.metric.isEmpty) catalog else seriesFor(Seq(q.metric), q.where)
     val out = base.select(col("series_id"), col("name")).orderBy("name")
     limitOffset(out, q.limit, q.offset)
   }
@@ -1565,7 +1665,7 @@ final class Engine(val ctx: TsdbContext,
   /** Regex match over full series names — the reference's
     * PlainSeriesMatcher::regex_match (plain_series_matcher.h:87-89). */
   def searchRegex(pattern: String): DataFrame =
-    ctx.series.where(col("name").rlike(pattern))
+    catalog.where(col("name").rlike(pattern))
       .select(col("series_id"), col("name")).orderBy("name")
 
   /** Fuzzy series resolution (SeriesRetreiver::fuzzy_match,
@@ -1576,24 +1676,24 @@ final class Engine(val ctx: TsdbContext,
     * canonical name; here the catalog's tags map makes that a direct
     * lookup — same result, no regex engine on the hot path). */
   def searchFuzzy(metricPrefix: String, where: Where = Where.All): DataFrame =
-    whereCond(ctx.series.where(col("metric").startsWith(metricPrefix)), where)
+    whereCond(catalog.where(col("metric").startsWith(metricPrefix)), where)
       .select(col("series_id"), col("name")).orderBy("name")
 
   def suggest(q: SuggestQuery): DataFrame = {
     val sw = q.startsWith.getOrElse("")
     val base = q.kind match {
       case SuggestKind.MetricNames =>
-        ctx.series.select(col("metric").as("name")).distinct()
+        catalog.select(col("metric").as("name")).distinct()
           .where(col("name").startsWith(sw)).orderBy("name")
       case SuggestKind.TagNames =>
-        val base = q.metric.map(m => ctx.series.where(col("metric") === m))
-          .getOrElse(ctx.series)
+        val base = q.metric.map(m => catalog.where(col("metric") === m))
+          .getOrElse(catalog)
         base.select(explode(map_keys(col("tags"))).as("name")).distinct()
           .where(col("name").startsWith(sw)).orderBy("name")
       case SuggestKind.TagValues =>
         val tag = q.tag.getOrElse(throw new BadQuery("suggest tag-values needs 'tag'"))
-        val base = q.metric.map(m => ctx.series.where(col("metric") === m))
-          .getOrElse(ctx.series)
+        val base = q.metric.map(m => catalog.where(col("metric") === m))
+          .getOrElse(catalog)
         base.select(col("tags").getItem(tag).as("name"))
           .where(col("name").isNotNull && col("name").startsWith(sw))
           .distinct().orderBy("name")
@@ -1606,7 +1706,7 @@ final class Engine(val ctx: TsdbContext,
 
   /** Catalog subset for the given metrics under the where clause. */
   def seriesFor(metrics: Seq[String], where: Where): DataFrame =
-    whereCond(ctx.series.where(col("metric").isin(metrics: _*)), where)
+    whereCond(catalog.where(col("metric").isin(metrics: _*)), where)
 
   /** Apply a where clause to a catalog subset. */
   private def whereCond(base: DataFrame, where: Where): DataFrame =
@@ -1711,10 +1811,11 @@ final class Engine(val ctx: TsdbContext,
         col("ts_day") <= Math.floorDiv(hi, Engine.NsPerDay))
     }
 
-  /** Broadcast-join facts to resolved ids and apply the time range. */
+  /** Facts restricted to the resolved ids ([[joinResolved]]) and the
+    * time range. */
   private def scan(ids: DataFrame, range: TimeRange, metrics: Seq[String]): DataFrame =
-    tsDayPruned(facts(metrics), range)
-      .join(idsHint(ids.select("series_id", "out_name")), "series_id")
+    joinResolved(tsDayPruned(facts(metrics), range),
+        ids.select("series_id", "out_name"))
       .where(rangeCond(range))
 
   /** Semi-open [from, to) forward; (to, from] backward (reference

@@ -338,8 +338,7 @@ object TsdbLayout {
     * (registration-on-write derives it FROM the data, so uncataloged
     * facts cannot arise in the supported flow) — register before
     * persisting. */
-  def writeSamples(ctx: TsdbContext, path: String,
-      filesPerPartition: Int = 1): Unit =
+  def writeSamples(ctx: TsdbContext, path: String): Unit =
     sortedPartitionWrite(keyed(ctx.samples, ctx.series), path,
       replaceOnlyWritten = false)
 

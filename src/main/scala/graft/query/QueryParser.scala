@@ -822,15 +822,21 @@ object QueryParser {
   private def tsOf(n: JsonNode): Long =
     if (n.isNumber) n.asLong() else TimeUtil.parseIsoOrRaw(n.asText())
 
+  /** An empty series list or an empty tag-value list names no series;
+    * both refuse rather than resolve to "all" (`[]`) or "none"
+    * (`{"k": []}`). */
   private def parseWhere(root: JsonNode): Where = Option(root.get("where")) match {
     case None => Where.All
     case Some(w) if w.isArray =>
+      if (w.isEmpty) throw new BadQuery("where: empty series list")
       Where.ExplicitSeries(w.elements().asScala.toSeq.map { o =>
         o.fieldNames().asScala.map(k => k -> o.get(k).asText()).toMap
       })
     case Some(w) if w.isObject =>
       Where.TagsIn(w.fieldNames().asScala.map { k =>
         val v = w.get(k)
+        if (v.isArray && v.isEmpty)
+          throw new BadQuery(s"where: empty value list for tag '$k'")
         k -> (if (v.isArray) v.elements().asScala.toSeq.map(_.asText()) else Seq(v.asText()))
       }.toMap)
     case Some(_) => throw new BadQuery("bad where clause")

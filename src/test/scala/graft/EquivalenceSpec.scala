@@ -248,4 +248,103 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
     assert(batch === expect)
     assert(streamed === expect)
   }
+
+  test("resolved ids inline and through the join agree for every statement kind") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // 4 data-bearing series per metric: 400 samples 10 µs apart, h3
+    // silent over [2 ms, 2.5 ms), one planted spike on a/h1
+    val hosts = Seq("h0" -> "d0", "h1" -> "d0", "h2" -> "d1", "h3" -> "d1")
+    val rows = for {
+      (m, mi) <- Seq("a", "b", "!e").zipWithIndex
+      ((h, dc), hi) <- hosts.zipWithIndex
+      k <- 0 until 400 if !(h == "h3" && k >= 200 && k < 250)
+    } yield (m, h, dc, k * 10000L,
+      ((k * (hi + 3) + mi * 7) % 97).toDouble +
+        (if (m == "a" && h == "h1" && k == 300) 1000.0 else 0.0))
+    val live = TsdbContext.fromWide(spark,
+      rows.toDF("metric", "host", "dc", "ts", "value"),
+      "metric", Seq("dc", "host"), "ts", "value")
+    // more than MaxInlineSeries silent series per metric: a statement
+    // resolving a whole metric then crosses to the join regime
+    val silent = TsdbContext.fromWide(spark,
+      (for (m <- Seq("a", "b", "!e"); i <- 0 to Engine.MaxInlineSeries)
+        yield (m, s"s$i", "d9", 0L, 0.0))
+        .toDF("metric", "host", "dc", "ts", "value"),
+      "metric", Seq("dc", "host"), "ts", "value").series
+    val fine = 100000L
+    val indexed = live.copy(
+      events = live.samples.selectExpr("series_id", "ts",
+        "CAST(value AS STRING) AS body"),
+      rollups = Seq(fine -> graft.engine.Rollup.build(live.samples, fine)),
+      histograms = Seq(fine -> graft.ops.HistQuantiles.histogram(
+        live.samples.withColumn("win", col("ts") - pmod(col("ts"), lit(fine))),
+        Seq("series_id", "win"))),
+      bucketSums = Seq(fine ->
+        graft.ops.Stats.bucketSums(live.samples, fine, keyCol = "series_id")))
+    val inline = new Engine(indexed)
+    val joined = new Engine(indexed.copy(
+      series = indexed.series.unionByName(silent)))
+
+    val sel = """{"select": "a", "range": {"from": 0, "to": 4000000}}"""
+    def broadcasts(e: Engine) = e.execute(sel).queryExecution.sparkPlan
+      .collect { case j: BroadcastHashJoinExec => j }.nonEmpty
+    assert(!broadcasts(inline) && broadcasts(joined),
+      "the fixture must exercise both regimes")
+
+    val r = """"range": {"from": 0, "to": 4000000}"""
+    val u = """"range": {"from": 50000, "to": 3950000}"""
+    val statements = Seq(
+      sel,
+      s"""{"select": "a", $r, "filter": {"gt": 50}}""",
+      s"""{"select": "a", $r, "group-by-tag": ["dc"]}""",
+      s"""{"select-events": "!e", $r, "filter": "1.*"}""",
+      """{"aggregate": {"a": ["min", "max", "sum", "cnt"]}}""",
+      s"""{"aggregate": {"a": ["min", "first"], "b": "mean"}, $u}""",
+      s"""{"group-aggregate": {"metric": "a", "step": "400us",
+          "func": ["min", "max", "cnt"]}, $r}""",
+      s"""{"group-aggregate": {"metric": "a", "step": "400us",
+          "func": ["sum", "last"]}, $u, "group-by-tag": ["dc"]}""",
+      s"""{"group-aggregate": {"metric": "a", "step": "30us",
+          "func": "mean"}, $r}""",
+      s"""{"quantile": {"metric": "a", "p": [0.5, 0.9]}, $r}""",
+      s"""{"quantile": {"metric": "a", "p": [0.5], "step": "1ms"}, $u}""",
+      s"""{"seasonal": {"metric": "a", "period": "1ms", "bin": "200us"}, $r}""",
+      s"""{"seasonal": {"metric": "a", "period": "1ms", "bin": "200us"}, $u}""",
+      s"""{"sessions": {"metric": "a", "gap": "100us"}, $r}""",
+      s"""{"gaps": {"metric": "a", "min-gap": "100us"}, $r}""",
+      s"""{"anomaly": {"metric": "a", "c": 3.0}, $r}""",
+      s"""{"active": {"metric": ["a", "b"], "step": "1ms"}, $r}""",
+      s"""{"active": {"metric": ["a", "b"]}, $u}""",
+      s"""{"distinct": {"metric": ["a", "b"], "tag": "host", "k": 4}, $r}""",
+      s"""{"distinct": {"metric": ["a"], "tag": "dc", "k": 4,
+          "step": "1ms"}, $u}""",
+      s"""{"correlate": {"metric": ["a", "b"], "step": "200us"}, $r}""",
+      s"""{"correlate": {"metric": ["a", "b"], "step": "200us"}, $u}""",
+      s"""{"autocorr": {"metric": ["a"], "step": "100us",
+          "lags": ["100us", "1ms"]}, $r}""",
+      s"""{"trend": {"metric": ["a", "b"], "step": "100us"}, $u}""",
+      s"""{"changepoints": {"metric": ["a"], "step": "100us", "window": 3,
+          "min-shift": 5.0}, $r}""",
+      s"""{"join": ["a", "b"], $r}""",
+      s"""{"asof-join": {"left": "a", "right": "b"}, $u}""",
+      s"""{"group-aggregate-join": {"metric": ["a", "b"], "step": "400us",
+          "func": "max"}, $r}""")
+    for (q <- statements) {
+      val a = inline.execute(q).collect().map(r => norm(r.toSeq)).sortBy(_.toString)
+      val b = joined.execute(q).collect().map(r => norm(r.toSeq)).sortBy(_.toString)
+      assert(a.nonEmpty, s"empty answer proves nothing: $q")
+      assert(a.toSeq === b.toSeq, s"regimes disagree on: $q")
+    }
+    // stale lists silent series too (null last_ts): the live ones agree
+    val stale = """{"stale": {"metric": "a", "older-than": "500us"},
+      "range": {"from": 0, "to": 5000000}}"""
+    val a = inline.execute(stale).collect().map(_.toSeq).sortBy(_.toString)
+    val b = joined.execute(stale).collect().map(_.toSeq)
+    assert(a.nonEmpty && a.toSeq === b.filterNot(_.head.toString.contains("d9"))
+      .sortBy(_.toString).toSeq)
+    assert(b.count(x => x.head.toString.contains("d9") && x(1) == null) ===
+      Engine.MaxInlineSeries + 1)
+  }
 }

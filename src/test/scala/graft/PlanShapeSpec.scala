@@ -36,14 +36,56 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   /** Pre-AQE physical plan (structurally inspectable). */
   private def plan(df: DataFrame): SparkPlan = df.queryExecution.sparkPlan
 
-  test("select scan: catalog broadcasts; the fact side never shuffles for selection") {
+  test("select: ids inline or broadcast; facts never shuffle") {
+    // a small resolution becomes a filter on the fact scan: no join at
+    // all, and the only exchange is the ordered output's range
+    // partitioning above the scan
     val p = plan(engine.select(SelectQuery("test", TimeRange(100, 300))))
-    val joins = p.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.nonEmpty, s"catalog join should broadcast:\n$p")
-    // streamed (fact) side of the catalog join: no shuffle below it
+    assert(p.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      .isEmpty, s"an inline resolution must not join:\n$p")
+    assert(p.collect { case e: ShuffleExchangeExec => e }.forall(
+        _.outputPartitioning.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
+      s"fact side must not shuffle for selection:\n$p")
+    // more resolved series than Engine.MaxInlineSeries: the catalog join
+    // broadcasts, and its streamed (fact) side has no shuffle below it
+    val wide = new Engine(rampContext(1 to Engine.MaxInlineSeries + 1, 100, 102))
+    val pw = plan(wide.select(SelectQuery("test", TimeRange(100, 300))))
+    val joins = pw.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.nonEmpty, s"an over-bound resolution should broadcast:\n$pw")
     val factSide = joins.last.left
     assert(factSide.collect { case e: ShuffleExchangeExec => e }.isEmpty,
       s"fact side must not shuffle for selection:\n$factSide")
+  }
+
+  test("inline resolution: no Spark job to plan; In(series_id) pushed") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val q = SelectQuery("test", TimeRange(100, 300))
+    pqEngine.select(q).queryExecution.sparkPlan // first use snapshots the catalog
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val df = try {
+      val df = pqEngine.select(q)
+      df.queryExecution.executedPlan
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0, "resolving series must not run a Spark job")
+    val exec = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case other => other
+    }
+    assert(exec.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"an inline resolution must not broadcast:\n$exec")
+    val scans = fileScans(df)
+    assert(scans.size === 1 && filtersSeriesIds(scans.head),
+      s"the fact scan must carry In(series_id): $scans")
+    assert(collectSeries(df) === collectSeries(engine.select(q)))
   }
 
   test("resolved-id join flips to a shuffle join above the catalog broadcast ceiling; answers unchanged") {
@@ -92,15 +134,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("value + ts-range filters reach the parquet scan as PushedFilters") {
     val q = SelectQuery("test", TimeRange(100, 300),
       filter = Some(ValueFilter(gt = Some(15.0))))
-    val p = plan(pqEngine.select(q))
-    val joins = p.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.nonEmpty)
-    val fact = joins.last.left.toString
-    // (PushedFilters list is elided in toString — assert the ts bound in it
-    // and the value predicate in the un-truncated DataFilters/Filter text)
-    assert(fact.contains("PushedFilters") && fact.contains("GreaterThanOrEqual(ts,100)")
-      && fact.contains("> 15.0"),
-      s"predicates should reach the parquet reader:\n$fact")
+    val scans = fileScans(pqEngine.select(q))
+    assert(scans.size === 1, s"one fact scan expected: $scans")
+    val fact = scans.head
+    val pushed = fact.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThanOrEqual(ts,100)") &&
+        pushed.contains("GreaterThan(value,15.0)") && filtersSeriesIds(fact),
+      s"ts range, value and series_id predicates should reach the parquet reader: $pushed")
   }
 
   test("limit compiles to a limit/top-k operator, not full materialization") {
@@ -114,13 +154,23 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("events regex filter evaluates on the event side below the join") {
-    val q = SelectEventsQuery("!test", TimeRange(100, 300), regex = Some("1.*"))
-    val p = plan(pqEngine.selectEvents(q))
-    val joins = p.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.nonEmpty)
-    assert(joins.last.left.toString.contains("RLIKE"),
-      s"regex should evaluate below the join:\n$p")
+  test("events regex filter evaluates at the events scan") {
+    // the events file carries the catalog's `test` ids; the regex runs in
+    // the filter directly over the events scan, beside the pushed ids
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    val q = SelectEventsQuery("test", TimeRange(100, 300), regex = Some("1.*"))
+    val df = pqEngine.selectEvents(q)
+    val atScan = plan(df).collect {
+      case f @ FilterExec(_, s: FileSourceScanExec) => (f, s)
+    }
+    assert(atScan.size === 1 &&
+        atScan.head._1.condition.sql.contains("RLIKE") &&
+        filtersSeriesIds(atScan.head._2),
+      s"regex and resolved ids should evaluate at the events scan:\n${plan(df)}")
+    val bodies = df.collect().map(_.getString(2))
+    assert(bodies.nonEmpty && bodies.forall(_.contains("1")))
+    // an unresolved name answers empty
+    assert(pqEngine.selectEvents(q.copy(metric = "!test")).collect().isEmpty)
   }
 
   test("heavy-hitters planning runs no Spark job (total folded into the plan)") {
@@ -254,25 +304,25 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
   test("catalog-union resolution: stream-registered series cost no fact-side shuffle and keep pruning") {
     // the new-series database resolves ids through series parquet ∪
-    // catalog_l0 (anti-join) — all catalog-sized frames. The plan must
-    // show (a) the fact side joining the resolved ids by BROADCAST,
-    // never a fact-side hash exchange, and (b) metric+ts_day partition
+    // catalog_l0 (anti-join) — all catalog-sized frames, snapshotted
+    // once. The plan must show (a) the resolved ids reaching both fact
+    // scans inline as In(series_id), never a fact-side hash exchange,
+    // and (b) metric+ts_day partition
     // filters still reaching both fact tiers' scans: registration
     // growth must not cost the scan anything at 100 TB.
     val dir = "/root/testdata/sf0.001"
-    val plan = graft.entries.EntryUtil.engineNewSeriesDbFor(spark, dir)
+    val df = graft.entries.EntryUtil.engineNewSeriesDbFor(spark, dir)
       .execute(
         """{"select": "purchase",
             "range": {"from": "20240118T000000", "to": "20240127T000000"}}""")
-      .queryExecution.executedPlan.toString
-    val scans = "PartitionFilters: \\[[^\\]]*".r.findAllIn(plan).toSeq
-      .filter(f => f.contains("metric") && f.contains("ts_day"))
+    val plan = df.queryExecution.executedPlan.toString
+    val scans = fileScans(df).filter(f =>
+      Set("metric", "ts_day").subsetOf(prunedPartitionCols(f)))
     assert(scans.size >= 2,
       s"both fact tiers must keep metric AND ts_day pruning under the " +
         s"unioned catalog (saw ${scans.size}):\n$plan")
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoop") ||
-      plan.contains("Broadcast"),
-      s"resolved ids must reach the facts by broadcast:\n$plan")
+    assert(scans.forall(filtersSeriesIds),
+      s"resolved ids must reach both fact scans as In(series_id):\n$plan")
     // no exchange may repartition a fact-sized frame. Robust to plan
     // print order: inspect every hash exchange's OWN partitioning
     // columns — a fact-side shuffle necessarily keys on fact columns
@@ -1043,11 +1093,18 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       """{"distinct": {"metric": "test", "tag": "tag", "k": 2},
          "where": {"tag": ["T1"]}, "range": {"from": 100, "to": 300}}""",
       """{"distinct": {"metric": "test", "tag": "tag", "k": 8},
-         "range": {"from": 100, "to": 300}}""",
-      """{"distinct": {"metric": "test", "tag": "other", "k": 2},
          "range": {"from": 100, "to": 300}}"""))
       assert(scansOf(q).exists(_.contains("/samples")),
         s"must abstain to the scan for: $q")
+    // a tag no series carries resolves to nothing: the index abstains
+    // and the empty resolution prunes the scan away, answering empty
+    val noTag =
+      """{"distinct": {"metric": "test", "tag": "other", "k": 2},
+         "range": {"from": 100, "to": 300}}"""
+    assert(!scansOf(noTag).exists(_.contains("/kmv")),
+      "a different tag must abstain from the kmv index")
+    assert(eng.execute(noTag).collect().isEmpty &&
+      new Engine(base).execute(noTag).collect().isEmpty)
   }
 
   test("quantile statement: aligned range serves from the registered histogram index") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import graft.model.TsdbContext
 
 object SparkTestBase {
@@ -36,4 +38,21 @@ trait SparkTestBase {
       r.getString(r.fieldIndex("series")),
       r.getLong(r.fieldIndex("ts")),
       r.getDouble(r.fieldIndex("value"))))
+
+  /** The file scans of a frame's pre-AQE physical plan. */
+  def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+
+  /** Whether a scan hands the reader an IN list on `series_id` — the
+    * inline resolution regime's pushed filter. */
+  def filtersSeriesIds(f: FileSourceScanExec): Boolean =
+    f.dataFilters.exists(_.exists {
+      case In(a: Attribute, _) => a.name == "series_id"
+      case InSet(a: Attribute, _) => a.name == "series_id"
+      case _ => false
+    }) && f.metadata("PushedFilters").contains("In(series_id")
+
+  /** The partition columns a scan prunes directories on. */
+  def prunedPartitionCols(f: FileSourceScanExec): Set[String] =
+    f.partitionFilters.flatMap(_.references.map(_.name)).toSet
 }

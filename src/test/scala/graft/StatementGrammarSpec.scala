@@ -137,4 +137,17 @@ class StatementGrammarSpec extends AnyFunSuite {
     refuses(s"""{$gaj, "pivot-by-tag": ["dc"]}""",
       "group-aggregate-join doesn't support group-by")
   }
+
+  // the two empty where forms used to disagree: `[]` selected every
+  // series and `{"k": []}` selected none; both now refuse
+  test("where: an empty series list refuses") {
+    refuses("""{"select": "cpu", "range": {"from": 0, "to": 10}, "where": []}""",
+      "where: empty series list")
+  }
+
+  test("where: an empty tag-value list refuses") {
+    refuses("""{"select": "cpu", "range": {"from": 0, "to": 10},
+         "where": {"host": []}}""",
+      "where: empty value list for tag 'host'")
+  }
 }
