@@ -3,12 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.model.TsdbContext.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.model.TsdbContext.localSession(cpus)
     // Untimed warmup: JVM/codegen spin-up, the shared series catalogs
     // (memoized in EntryUtil) and the rollup build are one-time costs,
     // not query throughput — without this the first timed query absorbs
@@ -90,7 +86,7 @@ object Bench {
     // the run's effective width, so an overhead-bound run can be told
     // from a serial one
     val hostMeta =
-      s""""cpus":${cpus.toInt},"default_parallelism":${spark.sparkContext.defaultParallelism}"""
+      s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec",$streamMeta,"queries":$qs,"failed":$failed,"sf":"$sfDir",$hostMeta}"""
     println(line)
     // durable artifacts: the driver's stdout tail is 2000 bytes, which has

@@ -8,11 +8,11 @@ import VectorExpressions.{VecCosine, VecDot}
 
 /** SparkSessionExtensions entry point registering the engine's custom
   * Catalyst expressions as SQL functions, so `spark.sql("... vec_cosine(a,
-  * b) ...")` works next to the Column API:
+  * b) ...")` works next to the Column API. Register it on the session
+  * builder:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -293,4 +293,14 @@ object TsdbContext {
       // no overflow errors (Spark 4 defaults to ANSI, which would abort
       // the divide/eval apply nodes on zero divisors)
       .config("spark.sql.ansi.enabled", "false")
+
+  /** The session the command-line programs (`graft.Bench`,
+    * `graft.Verify`, `graft.tools.Probe`) run on: [[configure]]d for
+    * `cpus` cores on `local[cpus]`, no UI, WARN logging. */
+  def localSession(cpus: Int): SparkSession = {
+    val spark = configure(SparkSession.builder().master(s"local[$cpus]"),
+      cpus).config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

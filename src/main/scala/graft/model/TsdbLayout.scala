@@ -416,12 +416,7 @@ object TsdbLayout {
     * @return number of partition directories rewritten. */
   def upsertSamples(spark: SparkSession, path: String, late: DataFrame,
       series: DataFrame): Int = {
-    val lateKeyed = late
-      .join(broadcast(series.select(col("series_id"), col("metric"))),
-        "series_id")
-      .withColumn("ts_day",
-        graft.functions.VectorExpressions.longFloorDiv(col("ts"), NsPerDay))
-      .select(Samples.cols.map(col): _*)
+    val lateKeyed = keyed(late, series).select(Samples.cols.map(col): _*)
     val affected = lateKeyed.select("metric", "ts_day").distinct()
       .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
     if (affected.isEmpty) return 0

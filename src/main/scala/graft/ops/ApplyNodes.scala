@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.query.Ast.ApplySpec
+import graft.query.Ast.{ApplySpec, BadQuery}
 
 /** The `apply` post-processing pipeline — all 18 registered node tokens of
   * the reference (stdb/query/query_processing/, registry
@@ -35,12 +35,24 @@ object ApplyNodes {
   def chain(df: DataFrame, specs: Seq[ApplySpec], valueCols: Seq[String]): DataFrame =
     specs.foldLeft((df, valueCols)) { case ((d, cols), spec) => node(d, spec, cols) }._1
 
-  def node(df: DataFrame, spec: ApplySpec, cols: Seq[String]): (DataFrame, Seq[String]) = {
+  /** One node. Apply specs come straight from the statement JSON, so
+    * every refusal while building a node (its own checks, a duration or
+    * number that does not parse, a SAX alphabet out of range) surfaces
+    * as a [[BadQuery]] that names the node. */
+  def node(df: DataFrame, spec: ApplySpec, cols: Seq[String]): (DataFrame, Seq[String]) =
+    try build(df, spec, cols) catch {
+      case e: BadQuery => throw e
+      case e: IllegalArgumentException => throw new BadQuery(
+        s"apply node '${spec.name}': " +
+          Option(e.getMessage).getOrElse("").stripPrefix("requirement failed: "))
+    }
+
+  private def build(df: DataFrame, spec: ApplySpec, cols: Seq[String]): (DataFrame, Seq[String]) = {
     def num(key: String): Double = spec.params.get(key) match {
       case Some(d: Double) => d
-      case Some(s: String) => s.toDouble
+      case Some(s: String) if s.toDoubleOption.isDefined => s.toDouble
       case other => throw new IllegalArgumentException(
-        s"apply node '${spec.name}' needs numeric param '$key', got $other")
+        s"needs numeric param '$key', got $other")
     }
     spec.name match {
       case "abs" =>
@@ -49,10 +61,10 @@ object ApplyNodes {
       case "scale" =>
         val weights = spec.params.get("weights") match {
           case Some(ws: Seq[_]) => ws.map(_.toString.toDouble)
-          case _ => throw new IllegalArgumentException("scale needs 'weights' list")
+          case _ => throw new IllegalArgumentException("needs a 'weights' list")
         }
         require(weights.size == cols.size,
-          s"scale: ${weights.size} weights for ${cols.size} columns")
+          s"${weights.size} weights for ${cols.size} columns")
         (cols.zip(weights).foldLeft(df) { case (d, (c, w)) =>
           d.withColumn(c, col(c) * w)
         }, cols)
@@ -93,7 +105,7 @@ object ApplyNodes {
         // prediction = mean of the previous N inputs, zero-padded buffer
         // (sliding_window.cc:105-180): value *before* adding current.
         val n = num("window-width").toInt
-        require(n > 0, "sma window-width must be positive")
+        require(n > 0, "window-width must be positive")
         val w = seriesWindow.rowsBetween(-n, -1)
         (cols.foldLeft(withOrd(df, cols)) { (d, c) =>
           val sma = coalesce(sum(col(c)).over(w), lit(0.0)) / n
@@ -148,8 +160,9 @@ object ApplyNodes {
         val w = num("window-width").toInt
         val paa = num("paa").toInt
         val alphabet = num("alphabet").toInt
-        require(cols.size == 1, "sax applies to scalar streams")
-        require(w > 0 && w % paa == 0, "window-width must divide into paa segments")
+        require(cols.size == 1, "applies to scalar streams only")
+        require(w > 0 && paa > 0 && w % paa == 0,
+          "window-width must divide into paa segments")
         val win = seriesWindow.rowsBetween(-(w - 1), Window.currentRow)
         val arr = collect_list(col(cols.head).cast(DoubleType)).over(win)
         val word = when(size(arr) === w,
@@ -164,13 +177,13 @@ object ApplyNodes {
         val stepStr = spec.params.get("step") match {
           case Some(s: String) => s
           case _ => throw new IllegalArgumentException(
-            "fill needs duration param 'step'")
+            "needs duration param 'step'")
         }
         val method = spec.params.get("method") match {
           case Some(s: String) => s
           case None => "ffill"
           case other => throw new IllegalArgumentException(
-            s"fill: bad 'method' $other")
+            s"bad 'method' $other")
         }
         (fill(df, cols, graft.time.TimeUtil.parseDuration(stepStr), method), cols)
 
@@ -179,7 +192,7 @@ object ApplyNodes {
       case "offset" =>
         (df.offset(num("offset").toInt), cols)
 
-      case other => throw new IllegalArgumentException(s"unknown apply node: '$other'")
+      case _ => throw new IllegalArgumentException("unknown node")
     }
   }
 
@@ -204,7 +217,7 @@ object ApplyNodes {
     val warmup = 10
     val spark = df.sparkSession
     val others = df.columns.filterNot(c => c == "series" || c == "ts" || cols.contains(c))
-    require(others.isEmpty, s"ewma: unexpected non-slot columns ${others.toSeq}")
+    require(others.isEmpty, s"unexpected non-slot columns ${others.toSeq}")
     val packed = df.select(col("series"), col("ts"),
       array(cols.map(col): _*).as("vs"))
     // Boxed slot elements: tuple streams (join / group-aggregate output)
@@ -304,7 +317,7 @@ object ApplyNodes {
   private def evalNode(df: DataFrame, spec: ApplySpec, cols: Seq[String]): (DataFrame, Seq[String]) = {
     val exprText = spec.params.get("expr") match {
       case Some(s: String) => s
-      case _ => throw new IllegalArgumentException("eval needs 'expr'")
+      case _ => throw new IllegalArgumentException("needs 'expr'")
     }
     val quoted = quoteMetricRefs(exprText, cols)
     val out = df.withColumn("value", expr(quoted).cast(DoubleType))

@@ -71,7 +71,7 @@ import graft.model.{HadoopFiles, IndexCatalog}
   * broadcast-probe of the index scan; takedown cost is one id-column
   * index scan plus rewrites of only the `__batch` partitions holding
   * the removed ids; staleness reads are directory listings.
-  * Measured ([[graft.tools.CorpusProbe]], SCALING.md): corpus grown
+  * Measured ([[graft.tools.Probe.corpus]], SCALING.md): corpus grown
   * 40x, accept ~flat, full index rewrite growing with the corpus —
   * the gap IS the reason the lifecycle append exists.
   */
@@ -634,10 +634,6 @@ object CorpusStore {
     * @return the landed batch id. */
   def acceptStreamBatch(spark: SparkSession, dir: String,
       batch: DataFrame, microBatchId: Long, streamTag: String): String = {
-    require(microBatchId >= 0, s"negative micro-batch id $microBatchId")
-    require(streamTag.nonEmpty && streamTag.forall(c =>
-        c.isLetterOrDigit || c == '-'),
-      s"streamTag must be non-empty alphanumeric/dash (got '$streamTag')")
     val r = recipe(dir)
     require(batch.columns.contains(r.idCol) &&
       batch.columns.contains(r.textCol),

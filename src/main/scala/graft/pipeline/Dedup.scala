@@ -340,7 +340,7 @@ object Dedup {
     * Measured 7.0 → ~5.0 s warm at sf0.1 for the one-scan form (r12);
     * the one-pass banding is wall-clock-neutral at sf0.1 (the suite is
     * per-job-overhead-bound there — r14 verdict) and drops 5 jobs /
-    * one bucket exchange per extra config (JobProbe, r15), which is
+    * one bucket exchange per extra config (`Probe entries`, r15), which is
     * the part that grows with corpus size.
     * `maxShingleFreq` caps the exact
     * spine only (the [[jaccardPairs]] parameter); LSH candidates stay

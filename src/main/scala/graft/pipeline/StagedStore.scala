@@ -28,13 +28,10 @@ private[pipeline] object StagedStore {
 
   val PendingSub = "pending"
 
-  /** Target bytes per output file of a store write —
-    * `spark.graft.write.targetFileBytes`, default 128 MB (guide §6's
-    * output-file band). A deployment writing 100 TB epochs raises it
-    * toward 1 GB; the local default keeps bench writes one file. */
-  private def targetFileBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.write.targetFileBytes")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(128L << 20)
+  /** Target bytes per output file of a store write: 128 MB, inside the
+    * usual 128 MB-1 GB parquet output-file band; it keeps every
+    * benchmark-sized write one file. */
+  private val TargetFileBytes = 128L << 20
 
   /** Right-size a batch/index-sized frame for a parquet write: coalesce
     * to ceil(estimated bytes / target), so a KB-sized index/stats write
@@ -42,7 +39,7 @@ private[pipeline] object StagedStore {
     * partition (the local[32] small-file storm: every store mutation
     * paid listing+footer overhead on ~32 files per partition
     * directory). Scale-adaptive, never a constant: the estimate is the
-    * optimizer's plan statistic, the target is configured, and an
+    * optimizer's plan statistic, the target a fixed file size, and an
     * unknown/huge estimate (e.g. a checkpoint-backed plan with default
     * stats — pass `sizeFrom` with the pre-checkpoint plan instead)
     * leaves the frame untouched rather than forcing a corpus-sized
@@ -52,11 +49,11 @@ private[pipeline] object StagedStore {
     * task count. Exchanges upstream of that keep their parallelism. */
   def sizedForWrite(df: DataFrame, sizeFrom: Option[DataFrame] = None)
       : DataFrame = {
-    val target = targetFileBytes(df.sparkSession)
     val est = sizeFrom.getOrElse(df)
       .queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= 0 || est >= BigInt(Long.MaxValue) / 4) df
-    else df.coalesce((((est + target - 1) / target) min 4096 max 1).toInt)
+    else df.coalesce((((est + TargetFileBytes - 1) / TargetFileBytes)
+      min 4096 max 1).toInt)
   }
 
   private def pendingDirs(spark: SparkSession, dir: String,

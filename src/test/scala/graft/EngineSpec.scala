@@ -845,6 +845,75 @@ class EngineSpec extends AnyFunSuite with SparkTestBase {
          "queries": "-id + 3 > 1"}}""")
   }
 
+  test("hostile inputs over the sf0.001 testdata: no-match statements answer 0 rows, engine-level misuse is BadQuery") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val sf = SparkTestBase.Sf0001
+    val bare = new Engine(graft.model.TsdbContext.fromTestdata(spark, sf))
+    val withDocs = new Engine(bare.ctx.copy(documents = Some(
+      spark.read.parquet(s"$sf/documents.parquet")
+        .select(col("doc_id").as("id"), col("text")))))
+    val r = """"range": {"from": "20240101T000000", "to": "20240401T000000"}"""
+    val back = """"range": {"from": "20240401T000000", "to": "20240101T000000"}"""
+    def withApply(node: String) = s"""{"select": "purchase", $r, "apply": [$node]}"""
+    // (engine, statement, Right(rows) or Left(refusal fragment))
+    val cases: Seq[(Engine, String, Either[String, Long])] = Seq(
+      (bare, s"""{"select": "no_such_metric", $r}""", Right(0L)),
+      (bare, s"""{"select": "purchase", $r, "where": {"user_id": ["999999"]}}""",
+        Right(0L)),
+      (bare, s"""{"quantile": {"metric": "no_such_metric", "p": [0.5]}, $r}""",
+        Right(0L)),
+      (bare, s"""{"correlate": {"metric": ["click", "no_such_metric"],
+         "step": "1h"}, $r}""", Right(0L)),
+      (bare, s"""{"autocorr": {"metric": ["no_such_metric"], "step": "1h",
+         "lags": ["1h"]}, $r}""", Right(0L)),
+      (bare, s"""{"distinct": {"metric": ["click"], "tag": "no_such_tag"}, $r}""",
+        Right(0L)),
+      (bare, s"""{"anomaly": {"metric": "no_such_metric"}, $r}""", Right(0L)),
+      (bare, s"""{"select": "purchase", $r, "where-location":
+         {"box": {"lon": [179, 180], "lat": [89, 90]}}}""", Right(0L)),
+      (bare, s"""{"select": "purchase", $back}""", Right(202L)),
+      (bare, s"""{"select-events": "!log", $r, "apply": [{"name": "cusum"}]}""",
+        Left("select-events does not support 'apply'")),
+      (bare, withApply("""{"name": "cubic-spline"}"""),
+        Left("apply node 'cubic-spline': unknown node")),
+      (bare, withApply("""{"name": "sma"}"""),
+        Left("apply node 'sma': needs numeric param 'window-width'")),
+      (bare, withApply("""{"name": "fill", "step": "1d", "method": "cubic"}"""),
+        Left("apply node 'fill': fill method must be ffill or linear, got 'cubic'")),
+      (bare, withApply("""{"name": "fill", "step": "sideways"}"""),
+        Left("apply node 'fill': bad duration: 'sideways'")),
+      (bare, """{"knn": {"queries": "id < 10", "k": 3, "index": "brute"}}""",
+        Left("knn: no embeddings table registered on this context")),
+      (bare, """{"dedup": {"batch": "id % 5 = 0", "threshold": 0.8}}""",
+        Left("dedup: no documents table registered on this context")),
+      (withDocs, """{"dedup": {"batch": "id %%% 5", "threshold": 0.8}}""",
+        Left("dedup: malformed predicate 'id %%% 5'")))
+    cases.foreach { case (eng, json, want) =>
+      withClue(json) {
+        want match {
+          case Right(n) => assert(eng.execute(json).count() === n)
+          case Left(fragment) =>
+            val e = intercept[BadQuery](eng.execute(json).count())
+            assert(e.getMessage.contains(fragment))
+        }
+      }
+    }
+    // a backward range orders newest first, and limit applies after it
+    val newest = bare.execute(s"""{"select": "purchase", $back,
+        "order-by": "time", "limit": 3}""").select("ts").as[Long].collect()
+    assert(newest.toSeq === bare.execute(s"""{"select": "purchase", $back}""")
+      .select("ts").as[Long].collect().sorted.reverse.take(3).toSeq)
+    // rendered output: the first day's csv is 4 lines; an unknown format
+    // refuses when the statement renders
+    val day = """"range": {"from": "20240101T000000", "to": "20240102T000000"}"""
+    assert(bare.executeRendered(s"""{"select": "purchase", $day,
+        "output": {"format": "csv", "timestamp": "iso"}}""").count() === 4)
+    val eFmt = intercept[BadQuery](bare.executeRendered(
+      s"""{"select": "purchase", $day, "output": {"format": "xml"}}""").count())
+    assert(eFmt.getMessage.contains("bad output format: 'xml'"))
+  }
+
   test("knn/dedup programmatic misuse is BadQuery too — the AST constructors are public, not only the JSON path") {
     import spark.implicits._
     val base = rampContext(Seq(1), 0L, 4L)

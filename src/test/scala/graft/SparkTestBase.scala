@@ -11,6 +11,9 @@ object SparkTestBase {
     .config("spark.ui.enabled", "false")
     .withExtensions(new graft.functions.GraftExtensions)
     .getOrCreate()
+
+  /** The smallest scale of the oracle testdata. */
+  val Sf0001 = "/root/testdata/sf0.001"
 }
 
 trait SparkTestBase {

@@ -5,16 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.query.Ast.BadQuery
 import graft.query.QueryParser
 
-/** The knn/dedup statement GRAMMAR, pinned (round-13 verdict item 7:
-  * ContractProbe's hostile-input matrix promoted into a spec): every
+/** The statement GRAMMAR's hostile-input matrix, pinned: every
   * refusal is BadQuery with a STABLE message — the statement surface
   * cannot drift without this spec naming the drift. Parser-level only
   * (no SparkSession): these are exactly the refusals the reference
-  * hands out at validate_query time (queryparser.cc:920-971). */
+  * hands out at validate_query time (queryparser.cc:920-971). The
+  * refusals that need data (no table registered, apply nodes, output
+  * rendering) and the no-match statements are EngineSpec's "hostile
+  * inputs" case. */
 class StatementGrammarSpec extends AnyFunSuite {
 
   private def refuses(json: String, fragment: String): Unit = {
-    val e = intercept[BadQuery](QueryParser.parse(json))
+    val e = withClue(json)(intercept[BadQuery](QueryParser.parse(json)))
     assert(e.getMessage.contains(fragment),
       s"expected '$fragment' in: ${e.getMessage}")
   }
@@ -149,5 +151,118 @@ class StatementGrammarSpec extends AnyFunSuite {
     refuses("""{"select": "cpu", "range": {"from": 0, "to": 10},
          "where": {"host": []}}""",
       "where: empty value list for tag 'host'")
+  }
+
+  // the hostile-input matrix of the statement kinds, by kind
+  private val r = """"range": {"from": "20240101T000000", "to": "20240401T000000"}"""
+
+  test("statement envelope: malformed JSON, unknown keys, a missing range, an unknown function") {
+    refuses("""{"select": "purchase", "range"""", "malformed JSON")
+    refuses("""not json at all""", "malformed JSON")
+    refuses("""{"bogus": 1}""", "bogus")
+    refuses("""{"select": "no_such_metric"}""", "'range' field required")
+    refuses("""{"select": "purchase", "where": {"user_id": ["999999"]}}""",
+      "'range' field required")
+    refuses("""{"aggregate": {"purchase": "sigmoid"}}""",
+      "unknown aggregate function: 'sigmoid'")
+  }
+
+  test("asof-join and group-aggregate: self-join and a zero step refuse") {
+    refuses(s"""{"asof-join": {"left": "click", "right": "click"}, $r}""",
+      "asof-join metrics must differ")
+    refuses(s"""{"group-aggregate": {"metric": "purchase", "func": "mean",
+         "step": "0s"}, $r}""", "group-aggregate.step must be positive")
+  }
+
+  test("durations that do not parse refuse with the bad text") {
+    def badDuration(json: String, text: String): Unit = {
+      val e = intercept[graft.time.TimeUtil.BadDateTimeFormat](
+        QueryParser.parse(json))
+      assert(e.getMessage === s"bad duration: '$text'")
+    }
+    badDuration(s"""{"asof-join": {"left": "click", "right": "view",
+         "tolerance": "soon"}, $r}""", "soon")
+    badDuration(s"""{"quantile": {"metric": "purchase", "p": [0.5],
+         "step": "later"}, $r}""", "later")
+    badDuration(s"""{"active": {"metric": ["click"], "step": "whenever"},
+         $r}""", "whenever")
+  }
+
+  test("quantile: p domain, required p, no apply") {
+    refuses(s"""{"quantile": {"metric": "purchase", "p": [2.0]}, $r}""",
+      "quantile p out of (0, 1]: 2.0")
+    refuses(s"""{"quantile": {"metric": "purchase"}, $r}""",
+      "quantile.p required")
+    refuses(s"""{"quantile": {"metric": "purchase", "p": [0.5]}, $r,
+         "apply": [{"name": "abs"}]}""", "quantile doesn't support 'apply'")
+  }
+
+  test("correlate and autocorr: metric count, whole-step lags, no limit") {
+    refuses(s"""{"correlate": {"metric": ["click"], "step": "1h"}, $r}""",
+      "correlate requires >= 2 metrics")
+    refuses(s"""{"correlate": {"metric": ["click", "view"], "step": "1h",
+         "lag": "90m"}, $r}""", "correlate.lag must be a whole number of steps")
+    refuses(s"""{"correlate": {"metric": ["click", "view"], "step": "1h"},
+         $r, "limit": 5}""", "correlate doesn't support 'limit'")
+    refuses(s"""{"autocorr": {"metric": ["click"], "step": "1h"}, $r}""",
+      "autocorr.lags required")
+    refuses(s"""{"autocorr": {"metric": ["click"], "step": "1h",
+         "lags": ["90m"]}, $r}""", "autocorr lag must be a whole number of steps")
+    refuses(s"""{"autocorr": {"metric": ["click"], "step": "1h",
+         "lags": ["0s"]}, $r}""", "autocorr lag must be positive (got 0s)")
+  }
+
+  test("active and distinct: metric list, output, tag and k discipline") {
+    refuses(s"""{"active": {"metric": []}, $r}""",
+      "active requires at least one metric")
+    refuses(s"""{"active": {"metric": ["click"]}, $r,
+         "output": {"format": "csv"}}""", "active doesn't support 'output'")
+    refuses(s"""{"distinct": {"metric": ["click"]}, $r}""",
+      "'distinct.tag' field required")
+    refuses(s"""{"distinct": {"metric": ["click"], "tag": "user", "k": 1},
+         $r}""", "distinct.k must be in [2, 65536] (got 1)")
+    refuses(s"""{"distinct": {"metric": ["click"], "tag": "user", "k": 2.5},
+         $r}""", "distinct.k must be an integer")
+  }
+
+  test("sessions, changepoints and trend: gaps, thresholds, windows and steps") {
+    refuses(s"""{"sessions": {"metric": "click"}, $r}""",
+      "sessions.gap required")
+    refuses(s"""{"sessions": {"metric": "click", "gap": "0s"}, $r}""",
+      "sessions.gap must be positive")
+    refuses(s"""{"changepoints": {"metric": ["click"], "step": "1d"}, $r}""",
+      "'changepoints.min-shift' field required")
+    refuses(s"""{"changepoints": {"metric": ["click"], "step": "1d",
+         "window": 0, "min-shift": 1.0}, $r}""",
+      "changepoints.window must be in [1, 4096] (got 0)")
+    refuses(s"""{"trend": {"metric": ["click"], "step": "500n"}, $r}""",
+      "trend.step must be a whole number of microseconds (got 500 ns)")
+    refuses(s"""{"trend": {"metric": ["click"], "step": "1d",
+         "horizon": "36h"}, $r}""", "trend.horizon must be a whole number of steps")
+  }
+
+  test("gaps, stale and anomaly: one threshold, a forward range, a rate domain") {
+    refuses(s"""{"gaps": {"metric": "click", "min-gap": "1h", "factor": 3.0},
+         $r}""", "gaps requires exactly one of 'min-gap' (absolute) or 'factor'")
+    refuses(s"""{"gaps": {"metric": "click", "min-gap": "0s"}, $r}""",
+      "gaps.min-gap must be positive")
+    refuses("""{"stale": {"metric": "click", "older-than": "12h"},
+         "range": {"from": "20240401T000000", "to": "20240101T000000"}}""",
+      "stale requires a forward range (to = now)")
+    refuses(s"""{"anomaly": {"metric": "click", "rate": 2.0}, $r}""",
+      "anomaly.rate out of (0, 1]: 2.0")
+  }
+
+  test("where-location: exactly one of box or knn, positive k, not on suggest") {
+    refuses(s"""{"select": "purchase", $r, "where-location": {
+         "box": {"lon": [0, 1], "lat": [0, 1]},
+         "knn": {"lon": 0, "lat": 0, "k": 1}}}""",
+      "where-location needs exactly one of 'box' or 'knn'")
+    refuses(s"""{"select": "purchase", $r, "where-location": {
+         "knn": {"lon": 0, "lat": 0, "k": -3}}}""",
+      "where-location.knn.k must be positive")
+    refuses("""{"select": "metric-names",
+         "where-location": {"knn": {"lon": 0, "lat": 0, "k": 1}}}""",
+      "suggest query doesn't support 'where-location'")
   }
 }

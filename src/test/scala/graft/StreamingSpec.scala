@@ -2102,6 +2102,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(graft.model.TsdbLayout.retireIngestRoot(spark, db, epoch = Some(1),
         checkpoint = Some(s"$db/ckpt_e1")))
       assert(!new java.io.File(e1).exists())
+      assert(!graft.model.TsdbLayout.retireIngestRoot(spark, db,
+        epoch = Some(7)), "an epoch that never existed retires to false")
       assert(q2.isActive, "rotation must kill nothing")
       // ingest CONTINUES through the rotation on the same query
       writeLines(in2, "c.txt", all.filter(_._2 >= 108 * h))
