@@ -56,7 +56,7 @@ object Bench {
       // after every run so (a) each timed run is a self-contained
       // steady-state cost and (b) caches don't accumulate across the
       // 90-entry sweep and skew later queries' memory budget
-      finally graft.pipeline.Dedup.releaseCaches()
+      finally graft.ScopedCache.release()
     }
     def fullPass(): Map[String, Option[Double]] =
       SparkEntry.queries.map { case (name, fn) => name -> once(fn) }

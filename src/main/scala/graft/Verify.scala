@@ -23,7 +23,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           e.printStackTrace()
         }
-        finally graft.pipeline.Dedup.releaseCaches()
+        finally graft.ScopedCache.release()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -834,7 +834,7 @@ final class Engine(val ctx: TsdbContext,
       // scope-cache HERE so both fit-and-flag paths share one fact scan:
       // the sampled path's index otherwise caches only the hash-FILTERED
       // subtree and the flag pass re-scans the facts in full
-      val s = graft.pipeline.Dedup.scopedCache(rows)
+      val s = graft.ScopedCache.cache(rows)
       q.rate match {
         case None => graft.ops.Monitoring.madAnomalies(s, "series", q.c)
         case Some(r) =>
@@ -1351,17 +1351,8 @@ final class Engine(val ctx: TsdbContext,
       .to(LazyList)
       .flatMap { case (fine, rollup) =>
       val from = q.range.from
-      // query-bin label of a point: forward bins anchor at `from` (the low
-      // end, label = lower boundary); backward bins anchor at `from` (the
-      // HIGH end, label = upper boundary, range closed at the top)
-      def qbin(c: Column): Column =
-        if (q.range.forward) {
-          val d = c - from
-          lit(from) + (d - pmod(d, lit(q.step)))
-        } else {
-          val d = lit(from) - c
-          lit(from) - (d - pmod(d, lit(q.step)))
-        }
+      // query-bin label of a point: the one anchored-bin rule ([[binOf]])
+      def qbin(c: Column): Column = binOf(c, q.range, q.step)
       // a fine bin [F, F+fine) is interior iff every point it can hold is
       // inside the range and inside one query bin
       def interiorOf(f: Column): Column = {
@@ -1513,7 +1504,7 @@ final class Engine(val ctx: TsdbContext,
     val withKey =
       if (factsHaveKey) cat.select(col("series_id"), col("metric"))
       else cat.select(col("series_id"), col("metric"),
-        tagSuffix(col("tags")).as("__tk"))
+        tagSuffixOf(col("tags")).as("__tk"))
     val factCols = Seq("series_id", "ts", "value") ++
       (if (factsHaveKey) Seq("tagkey") else Nil)
     val f0 = joinResolved(
@@ -1615,7 +1606,7 @@ final class Engine(val ctx: TsdbContext,
     val ids =
       if (factsHaveKey) ids0.select(col("series_id"), col("metric"))
       else ids0.select(col("series_id"), col("metric"),
-        tagSuffix(col("tags")).as("tagkey"))
+        tagSuffixOf(col("tags")).as("tagkey"))
     val factCols = Seq("series_id", "ts", "value") ++
       (if (factsHaveKey) Seq("tagkey") else Nil)
     var f = joinResolved(
@@ -1742,7 +1733,7 @@ final class Engine(val ctx: TsdbContext,
       case Some(LocationFilter.Box(lonMin, lonMax, latMin, latMax)) =>
         graft.spatial.Spatial.rangeQuery(base, lonMin, lonMax, latMin, latMax)
       case Some(LocationFilter.Knn(lon, lat, k, radiusOpt)) =>
-        val keyed = base.withColumn("__tk", tagSuffix(col("tags")))
+        val keyed = base.withColumn("__tk", tagSuffixOf(col("tags")))
         // ONE candidate point per tag set (min-struct pick): location is a
         // per-series catalog column, so if coordinates ever diverged across
         // a tag set's metrics, a plain distinct would emit duplicate __tk
@@ -1887,8 +1878,6 @@ final class Engine(val ctx: TsdbContext,
     val suffix = tagSuffixOf(tags)
     when(suffix === "", metric).otherwise(concat_ws(" ", metric, suffix))
   }
-
-  private def tagSuffix(tags: Column): Column = tagSuffixOf(tags)
 
   private def tagSuffixOf(tags: Column): Column =
     array_join(

@@ -2,6 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.functions._
 
+import graft.ScopedCache
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextOps}
 import EntryUtil.QueryFn
 
@@ -69,7 +70,7 @@ object PipelineEntries {
         .select(col("keep_id").as("doc_id"))
       // the survivor set feeds shingling, pair sizes AND the final
       // anti-join — scope-cache it for the query's duration
-      val s2 = Dedup.scopedCache(s1.join(keepExact, "doc_id"))
+      val s2 = ScopedCache.cache(s1.join(keepExact, "doc_id"))
       val groups = Dedup.dedupGroups(
         Dedup.jaccardPairs(s2, "doc_id", "text", k = 3, threshold = 0.8,
           maxShingleFreq = Some(20)))
@@ -304,7 +305,7 @@ object PipelineEntries {
     // scoped-cached: the pair spine feeds the group pass here AND both
     // of the leakage audit's matrices — uncached it would re-run the
     // shingle/posting machinery per consumer
-    val pairs = Dedup.scopedCache(
+    val pairs = ScopedCache.cache(
       Dedup.jaccardPairs(d, "doc_id", "text", k = 3,
         threshold = 0.8, maxShingleFreq = Some(20)))
     val groups = Dedup.dedupGroups(pairs)

@@ -59,7 +59,7 @@ object Monitoring {
     * rounding before any downstream compare is the repo-wide convention
     * (the gopher-rules / length-quantiles precedent). */
   def madIndex(samples: DataFrame, keyCol: String = "series_id"): DataFrame = {
-    val cached = graft.pipeline.Dedup.scopedCache(samples)
+    val cached = graft.ScopedCache.cache(samples)
     val med = cached.groupBy(keyCol)
       .agg(round(expr("percentile(value, 0.5)"), 6).as("med"))
     cached.join(med, keyCol)
@@ -309,11 +309,11 @@ object Monitoring {
 
   /** [[seasonalOutliersWith]] over freshly fit bands on the same data.
     * The fit and the flag pass share one scope-cached scan (the
-    * [[madIndex]] idiom — the caller's releaseCaches() frees it). */
+    * [[madIndex]] idiom — the caller's ScopedCache.release() frees it). */
   def seasonalOutliers(samples: DataFrame, periodNs: Long, binNs: Long,
       keyCol: String = "series_id",
       pLo: String = "0.05", pHi: String = "0.95"): DataFrame = {
-    val cached = graft.pipeline.Dedup.scopedCache(samples)
+    val cached = graft.ScopedCache.cache(samples)
     seasonalOutliersWith(cached,
       seasonalBands(cached, periodNs, binNs, keyCol, pLo, pHi),
       periodNs, binNs, keyCol)

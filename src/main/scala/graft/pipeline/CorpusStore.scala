@@ -377,39 +377,16 @@ object CorpusStore {
   }
 
   /** One accepted batch lands: docs + index partitions under the
-    * batch's identity ([[StagedStore.acceptBatchId]]). Ids the index
+    * batch's identity ([[StagedStore.acceptBatchId]]), after the
+    * tombstone prologue ([[StagedStore.admitted]]). Ids the index
     * already covers under ANOTHER batch drop first (an operator
     * staging the same docs twice must not duplicate the corpus) — a
     * crashed re-run of THIS batch keeps its own rows because the
-    * filter excludes its own partition. Stream records additionally
-    * drop TOMBSTONED ids ([[StagedStore.tombstonesPath]]); operator
-    * records un-tombstone theirs (only when any of their ids are
-    * actually tombstoned — routine accepts never touch the log). */
+    * filter excludes its own partition. */
   private def applyAccept(spark: SparkSession, dir: String, record: String,
       staged: DataFrame, r: Recipe): Unit = {
     val bid = StagedStore.acceptBatchId(record)
-    val isStream = record.contains("_sb_")
-    val tombstoned = StagedStore.effectiveTombstones(spark, dir, r.idCol)
-    val base = tombstoned match {
-      case Some(t) if isStream =>
-        // broadcast: the set is takedown-history-sized, and the stream
-        // hot path must stay shuffle-free like every other probe here
-        staged.join(broadcast(t), Seq(r.idCol), "left_anti")
-      case _ => staged
-    }
-    tombstoned.filterNot(_ => isStream).foreach { t =>
-      // a DELIBERATE operator accept re-admits its tombstoned ids — an
-      // append-only `clear` op at this record's sequence (never an
-      // in-place rewrite); routine accepts with no tombstoned id skip
-      // the log entirely
-      val revived = t
-        .join(broadcast(staged.select(col(r.idCol)).distinct()),
-          Seq(r.idCol))
-        .collect().map(_.getLong(0)).toSeq
-      if (revived.nonEmpty)
-        StagedStore.appendTombstoneOps(spark, dir, r.idCol, revived,
-          "clear")
-    }
+    val base = StagedStore.admitted(spark, dir, record, staged, r.idCol)
     // broadcast-probe the hashes index by id (index-sized scan of two
     // skinny columns, batch-bounded result) — never a corpus shuffle,
     // and never a driver-side id list: the dup frame is batch-bounded
@@ -432,32 +409,20 @@ object CorpusStore {
     * (a dynamic overwrite cannot express "now empty" — the
     * rebuildScoped lesson); emptying the whole corpus SKIPS (returns
     * false — the record stays staged as a standing alert), like
-    * retention refusing to empty a layout, and the would-empty check
-    * runs BEFORE the tombstone append: a refused takedown must leave
-    * the log untouched (an append-then-throw would re-append the same
-    * ops on every heal retry, growing the log unboundedly while
-    * blocking every later-staged intent — the round-13 ADVICE
-    * finding). Every id of an APPLIED takedown lands in the TOMBSTONE
-    * record first ([[StagedStore.tombstonesPath]], before any rewrite —
-    * record-before-mutate), so a stream redelivery racing this
-    * takedown cannot resurrect the documents.
+    * retention refusing to empty a layout; the would-empty re-check
+    * and the tombstone append come first ([[StagedStore
+    * .tombstoneTakedown]]).
     *
     * @return true when applied (heal deletes the record), false when
     *   refused (heal keeps it staged and continues). */
   private def applyTakedown(spark: SparkSession, dir: String,
       staged: DataFrame, r: Recipe): Boolean = {
-    val ids = staged.select(col(r.idCol)).distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (ids.isEmpty) return true
-    // would-empty re-check against the corpus AT APPLY TIME (staging
-    // validated too, but earlier-staged takedowns may have shrunk the
-    // corpus since) — refusal means SKIP, before any mutation
-    if (!wouldKeepSome(spark, dir, r, ids)) return false
-    // tombstone from the already-collected driver set (request-sized)
-    // — no second scan of the staged record
-    StagedStore.appendTombstoneOps(spark, dir, r.idCol, ids.toSeq.sorted,
-      "add")
-    val idSeq = ids.toSeq
+    val idSeq = StagedStore.tombstoneTakedown(spark, dir, staged, r.idCol)(
+      wouldKeepSome(spark, dir, r, _)) match {
+      case None => return false
+      case Some(ids) => ids
+    }
+    if (idSeq.isEmpty) return true
     // affected batches via the hashes lookup (id-column index scan)
     val affected = spark.read.parquet(hashesPath(dir))
       .where(col("cid").isin(idSeq: _*))

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ScopedCache
+
 /** Document deduplication operators for large-scale corpus curation:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
   *
@@ -19,49 +21,6 @@ import org.apache.spark.sql.functions._
   * both shuffles are on hash keys and AQE handles residual skew.
   */
 object Dedup {
-
-  /** Working-set caches created by the pair operators, scoped so a driver
-    * program can release them once the consuming action finishes. A cache
-    * here serves multiple consumers within ONE query's DAG (column pruning
-    * specializes the aggregate per consumer, so ReuseExchange can't dedupe
-    * them) — it has no value after the action, and across a 90-entry
-    * Verify/Bench sweep unreleased caches accumulate into real memory
-    * pressure. Callers: [[releaseCaches]] after each materialized query.
-    *
-    * Thread-local: a multi-tenant driver running concurrent queries must
-    * not have one request's releaseCaches() unpersist another's
-    * still-in-flight cache (register and release happen on the caller's
-    * thread; Spark actions the frame fans out to don't touch this). */
-  private val scopedCaches =
-    ThreadLocal.withInitial[java.util.ArrayDeque[DataFrame]](
-      () => new java.util.ArrayDeque[DataFrame]())
-
-  /** Cache `df` for the duration of the current query, registered for
-    * [[releaseCaches]]. Public so multi-stage compositions (e.g. the
-    * curation funnel) can scope their intermediate survivor sets the same
-    * way the pair operators scope theirs. */
-  def scopedCache(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    scopedCaches.get().add(cached)
-    cached
-  }
-
-  /** Unpersist every cache created by Dedup operators ON THIS THREAD since
-    * the last call (non-blocking). Safe to call at any time: released
-    * frames recompute.
-    *
-    * CONTRACT: [[scopedCache]] and [[releaseCaches]] must pair on the
-    * SAME thread — a cache registered on a pool thread can never be
-    * released from the main thread, and the per-thread registry would pin
-    * the frame for the pool thread's lifetime. A driver dispatching
-    * queries to a thread pool must run each query's build → action →
-    * releaseCaches() sequence entirely on one pool thread (Verify and
-    * Bench do: single-threaded sweep, release after every entry). */
-  def releaseCaches(): Unit = {
-    val q = scopedCaches.get()
-    var df = q.poll()
-    while (df != null) { df.unpersist(false); df = q.poll() }
-  }
 
   /** 60-bit cross-engine-stable hash (DuckDB:
     * `CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)`). */
@@ -360,7 +319,7 @@ object Dedup {
     // and each signature frame is an in-row kernel projection of it —
     // nothing re-reads the corpus and no signature groupBy shuffles
     // (r14, the minhashPairs/minhashSignature kernel form)
-    val sets = scopedCache(df.select(col(idCol).as("id"),
+    val sets = ScopedCache.cache(df.select(col(idCol).as("id"),
         graft.functions.TextExpressions
           .shingleHash60s(col(textCol), k).as("set"))
       .where(size(col("set")) > 0))
@@ -369,7 +328,7 @@ object Dedup {
     val sizes = sets.select(col("id"), size(col("set")).as("n"))
     // pair-sized and consumed 2× per config by pairEval (hit join +
     // count) — cache or the posting spine re-runs once per consumer
-    val exact = scopedCache(
+    val exact = ScopedCache.cache(
       postingPairs(sets.select(col("id"), explode(col("set")).as("h")),
           "h", maxShingleFreq)
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
@@ -380,7 +339,7 @@ object Dedup {
         .select("id_a", "id_b"))
     // one signature frame per DISTINCT numPerm, shared by its bandings
     val sigByPerm = configs.map(_._1).distinct.map { np =>
-      np -> scopedCache(sets
+      np -> ScopedCache.cache(sets
         .withColumn("__sig", graft.functions.TextExpressions
           .minhashSig(col("set"), permParams(np), MinhashPrime))
         .select(Seq(col("id"), col("set")) ++
@@ -402,14 +361,14 @@ object Dedup {
         .select(col("id"),
           struct(lit(i).as("cfg"), col("bk0").as("key")).as("bk"))
     }.reduce(_ unionByName _)
-    val candByCfg = scopedCache(tagged
+    val candByCfg = ScopedCache.cache(tagged
       .groupBy("bk").agg(collect_list(col("id")).as("ids"))
       .select(col("bk.cfg").as("cfg"), explode(col("ids")).as("id_a"),
         col("ids"))
       .select(col("cfg"), col("id_a"), explode(col("ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))
       .distinct())
-    val verified = scopedCache(candByCfg
+    val verified = ScopedCache.cache(candByCfg
       .select("id_a", "id_b").distinct()
       .join(sets.select(col("id").as("id_a"), col("set").as("sa")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("set").as("sb")), "id_b")
@@ -437,7 +396,7 @@ object Dedup {
     // — same arithmetic, but an exchange of |docs × shingles| rows that
     // at corpus scale was the dedup stack's dominant data movement
     // (r14: the codegen kernel removed the reason to explode at all).
-    val sig = scopedCache(minhashSignature(df, idCol, textCol, k, numPerm))
+    val sig = ScopedCache.cache(minhashSignature(df, idCol, textCol, k, numPerm))
     // bucket posting lists instead of a band self-join: one groupBy per
     // band bucket, candidate pairs expand in-row from each bucket's id
     // array (LSH buckets are small by design — that is the point of the
@@ -546,7 +505,7 @@ object Dedup {
       df.select(col(id), posexplode(array((0 until bands).map(i =>
           expr(s"shiftright($sh, ${i * width}) & $mask")): _*))
         .as(Seq("band", "bk")))
-    val bsh = scopedCache(simhash(batch, idCol, textCol))
+    val bsh = ScopedCache.cache(simhash(batch, idCol, textCol))
     val cand = bandRows(indexSh, "cid", "cs")
       .join(broadcast(bandRows(bsh, "id", "simhash")
         .withColumnRenamed("id", "bid")), Seq("band", "bk"))
@@ -831,7 +790,7 @@ object Dedup {
     // the batch signature (bounded by design) feeds two consumers — its
     // band keys and its verification sets, both broadcast — so cache the
     // skinny per-doc frame once
-    val bsig = scopedCache(minhashSignature(batch, idCol, textCol, k, numPerm))
+    val bsig = ScopedCache.cache(minhashSignature(batch, idCol, textCol, k, numPerm))
     val bb = bsig.select(col("id").as("bid"),
       explode(array(bandCols(numPerm, bands): _*)).as("bk"))
     val cand = corpusBandRows.join(broadcast(bb), "bk")

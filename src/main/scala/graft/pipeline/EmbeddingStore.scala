@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ScopedCache
 import graft.model.{HadoopFiles, IndexCatalog}
 
 /** Lifecycle-managed, CELL-PARTITIONED embedding index — the
@@ -171,7 +172,7 @@ object EmbeddingStore {
     val clean = batch.select(col(r.idCol), col(r.embCol))
     // cached for the two consumers (data rows, drift stats): the
     // assignment is batch-sized by the accept contract
-    val asg = Dedup.scopedCache(
+    val asg = ScopedCache.cache(
       Similarity.assignCellsWithDist(centers, clean, r.idCol, r.embCol))
     val rows =
       if (r.m.isEmpty) asg.drop("__d")
@@ -192,7 +193,7 @@ object EmbeddingStore {
       .parquet(dataPath(dir, r))
     writeStats(spark, dir, r, bid,
       asg.select(col(CellCol), col("__d")))
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   /** One batch's drift-stat rows under its partition identity —
@@ -276,7 +277,7 @@ object EmbeddingStore {
       embCol: String = "embedding"): DataFrame = {
     val r = recipe(dir)
     val centers = readCenters(spark, dir)
-    val q = Dedup.scopedCache(
+    val q = ScopedCache.cache(
       Similarity.probeCellsInRow(centers, queries, qidCol, embCol, nprobe))
     val probed = q.select(CellCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
@@ -305,7 +306,7 @@ object EmbeddingStore {
         s"create(pq = Some((m, ksub))) enables knnPq")
     val centers = readCenters(spark, dir)
     val books = readPqBooks(spark, dir, r)
-    val q = Dedup.scopedCache(
+    val q = ScopedCache.cache(
       Similarity.probeCellsInRow(centers, queries, qidCol, embCol, nprobe))
     val probed = q.select(CellCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
@@ -399,28 +400,12 @@ object EmbeddingStore {
     * (streamTag, micro-batch) partition, so redelivery re-overwrites
     * itself); ids the index already covers under ANOTHER batch drop
     * first (re-staging must not duplicate), via a skinny id-column
-    * probe of the index. Stream records additionally drop TOMBSTONED
-    * ids; operator records un-tombstone theirs ([[CorpusStore]]'s
-    * applyAccept, id-typed). */
+    * probe of the index, after the tombstone prologue
+    * ([[StagedStore.admitted]]). */
   private def applyAccept(spark: SparkSession, dir: String, r: Recipe,
       record: String, staged: DataFrame): Unit = {
     val bid = StagedStore.acceptBatchId(record)
-    val isStream = record.contains("_sb_")
-    val tombstoned = StagedStore.effectiveTombstones(spark, dir, r.idCol)
-    val base = tombstoned match {
-      case Some(t) if isStream =>
-        staged.join(broadcast(t), Seq(r.idCol), "left_anti")
-      case _ => staged
-    }
-    tombstoned.filterNot(_ => isStream).foreach { t =>
-      val revived = t
-        .join(broadcast(staged.select(col(r.idCol)).distinct()),
-          Seq(r.idCol))
-        .collect().map(_.getLong(0)).toSeq
-      if (revived.nonEmpty)
-        StagedStore.appendTombstoneOps(spark, dir, r.idCol, revived,
-          "clear")
-    }
+    val base = StagedStore.admitted(spark, dir, record, staged, r.idCol)
     val stagedIds = base.select(col(r.idCol)).distinct()
     val dup = spark.read.parquet(dataPath(dir, r))
       .where(col(BatchCol) =!= bid)
@@ -465,19 +450,18 @@ object EmbeddingStore {
 
   /** One takedown lands: only the (cell, batch) partitions holding the
     * ids are rewritten without them; emptied leaves are deleted whole.
-    * Would-empty SKIPS (record stays staged — the standing alert). */
+    * Would-empty SKIPS (record stays staged — the standing alert);
+    * the tombstone lands before any rewrite ([[StagedStore
+    * .tombstoneTakedown]]; serialized-heal contract — see
+    * acceptStreamBatch). */
   private def applyTakedown(spark: SparkSession, dir: String, r: Recipe,
       staged: DataFrame): Boolean = {
-    val ids = staged.select(col(r.idCol)).distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (ids.isEmpty) return true
-    if (!wouldKeepSome(spark, dir, r, ids)) return false
-    // tombstone BEFORE any rewrite (record-before-mutate): a stream
-    // redelivery cannot resurrect the vectors (serialized-heal
-    // contract — see acceptStreamBatch)
-    StagedStore.appendTombstoneOps(spark, dir, r.idCol,
-      ids.toSeq.sorted, "add")
-    val idSeq = ids.toSeq
+    val idSeq = StagedStore.tombstoneTakedown(spark, dir, staged, r.idCol)(
+      wouldKeepSome(spark, dir, r, _)) match {
+      case None => return false
+      case Some(ids) => ids
+    }
+    if (idSeq.isEmpty) return true
     val data = spark.read.parquet(dataPath(dir, r))
     val affected = data.where(col(r.idCol).isin(idSeq: _*))
       .select(col(CellCol), col(BatchCol)).distinct()

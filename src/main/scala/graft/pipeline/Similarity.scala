@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ScopedCache
+
 /** Similarity search over embedding columns (`Array[Float]`).
   *
   * Brute-force cosine top-k is the exact baseline; the scale path buckets
@@ -467,8 +469,8 @@ object Similarity {
       .toDF("cell")
     // scoped-cached: the nlist-row counts frame feeds both the totals
     // and the final select — uncached, the two corpus assignment
-    // passes would run twice (released by Dedup.releaseCaches)
-    val counts = Dedup.scopedCache(cells
+    // passes would run twice (released by ScopedCache.release)
+    val counts = ScopedCache.cache(cells
       .join(cellCounts(corpus, "n_corpus"), Seq("cell"), "left")
       .join(cellCounts(batch, "n_batch"), Seq("cell"), "left")
       .select(col("cell"),
@@ -544,7 +546,7 @@ object Similarity {
       def cellOf(cs: Seq[(Int, Seq[Double])]): Column =
         element_at(graft.functions.VectorExpressions
           .vecNearestCells(col("ce"), cs, 1), 1).getField("cell")
-      val base = Dedup.scopedCache(corpus
+      val base = ScopedCache.cache(corpus
         .select(col(idCol).as("id"), col(embCol).as("ce"))
         .where(col("ce").isNotNull) // the cellsFor null contract
         .withColumn("__cs", cellOf(stale))
@@ -572,12 +574,12 @@ object Similarity {
         knnIvfWith(refit, corpusNN, queries, k, nprobe, idCol, qidCol, embCol),
         knnBrute(corpusNN, queries, k, idCol, qidCol, embCol))
     }
-    val exactC = Dedup.scopedCache(exact)
+    val exactC = ScopedCache.cache(exact)
     def recallOf(nn: DataFrame, suffix: String) =
       recallAtK(nn, exactC)
         .select(col("qid"), col("n_hit").as(s"n_hit_$suffix"),
           col("recall").as(s"recall_$suffix"))
-    val readout = Dedup.scopedCache(
+    val readout = ScopedCache.cache(
       recallOf(staleNN, "stale").join(recallOf(refitNN, "refit"), "qid"))
     val hits = readout
       .agg(sum(col("n_hit_stale")), sum(col("n_hit_refit"))).head()
@@ -961,10 +963,10 @@ object Similarity {
       idCol: String = "id", embCol: String = "embedding"): DataFrame = {
     // scoped-cached: the assignment subtree feeds the self-join's BOTH
     // sides plus the final kept-flag join — uncached it would re-run the
-    // corpus pass three times (released per-query by Dedup.releaseCaches).
+    // corpus pass three times (released per-query by ScopedCache.release).
     // `+ 0.0` maps an FP-cancellation -0.0 cdist to 0.0 (Spark's round
     // drops the sign, DuckDB's keeps it; the oracle normalizes the same)
-    val assigned = Dedup.scopedCache(cellsFor(centers,
+    val assigned = ScopedCache.cache(cellsFor(centers,
         corpus.select(col(idCol).as("id"),
           col(embCol).cast("array<double>").as("v")),
         "id", "v", 1, keepDist = true)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 import graft.model.HadoopFiles
 
@@ -153,6 +154,54 @@ private[pipeline] object StagedStore {
       .agg(max_by(col("op"), col("seq")).as("__latest"))
       .where(col("__latest") === "add")
       .select(col(idCol)))
+  }
+
+  /** An accept's admission prologue, the same for both stores: a
+    * STREAM record drops its TOMBSTONED ids (broadcast: the set is
+    * takedown-history-sized, and the stream hot path must stay
+    * shuffle-free), while a DELIBERATE operator record re-admits its
+    * tombstoned ids with an append-only `clear` op at this record's
+    * sequence (never an in-place rewrite) — routine accepts with no
+    * tombstoned id skip the log entirely. Returns the rows to admit;
+    * each store then drops the ids it already holds under another
+    * batch and writes. */
+  def admitted(spark: SparkSession, dir: String, record: String,
+      staged: DataFrame, idCol: String): DataFrame =
+    effectiveTombstones(spark, dir, idCol) match {
+      case Some(t) if record.contains("_sb_") =>
+        staged.join(broadcast(t), Seq(idCol), "left_anti")
+      case Some(t) =>
+        val revived = t
+          .join(broadcast(staged.select(col(idCol)).distinct()), Seq(idCol))
+          .collect().map(_.getLong(0)).toSeq
+        if (revived.nonEmpty) appendTombstoneOps(spark, dir, idCol, revived, "clear")
+        staged
+      case None => staged
+    }
+
+  /** A takedown's prologue, the same for both stores: collect the
+    * staged ids (request-sized), re-check would-empty against the store
+    * AT APPLY TIME (staging validated too, but earlier-staged takedowns
+    * may have shrunk it since), then append their `add` tombstone ops
+    * BEFORE any rewrite (record-before-mutate), so a stream redelivery
+    * racing the takedown cannot resurrect them. The would-empty check
+    * runs BEFORE the append: a refused takedown leaves the log
+    * untouched (an append-then-refuse would re-append the same ops on
+    * every heal retry, growing the log unboundedly while blocking every
+    * later-staged intent — the round-13 ADVICE finding).
+    *
+    * @return None when refused (heal keeps the record staged), else the
+    *   ids to rewrite away (empty: nothing to take down). */
+  def tombstoneTakedown(spark: SparkSession, dir: String, staged: DataFrame,
+      idCol: String)(keepsSome: Set[Long] => Boolean): Option[Seq[Long]] = {
+    val ids = staged.select(col(idCol)).distinct()
+      .collect().map(_.getLong(0)).toSet
+    if (ids.isEmpty) Some(Nil)
+    else if (!keepsSome(ids)) None
+    else {
+      appendTombstoneOps(spark, dir, idCol, ids.toSeq.sorted, "add")
+      Some(ids.toSeq)
+    }
   }
 
   /** A staged accept's LANDED batch identity: stream records

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ScopedCache
+
 /** Text-analysis and curation operators for training corpora: token
   * counting, quality scoring, language identification, fingerprinting
   * (min-hash + winnowing), PII scanning, benchmark decontamination,
@@ -535,7 +537,7 @@ object TextOps {
     *
     * Plan shape (100 TB): one shingling pass over raw feeds BOTH the raw
     * bucket model and the per-doc bucket counts (scoped-cached, released
-    * by [[graft.pipeline.Dedup.releaseCaches]]); the models collapse to
+    * by [[graft.ScopedCache.release]]); the models collapse to
     * `buckets` rows, the log-ratio table broadcasts, and scoring is a
     * doc-keyed partial-aggregatable sum. The target side (an eval set /
     * domain exemplar, MBs vs the corpus's TBs) is one small scan. At
@@ -564,7 +566,7 @@ object TextOps {
     * [[ngramPerplexity]]): model fit and doc scoring both consume it. */
   private def docBucketCounts(df: DataFrame, idCol: String, textCol: String,
       buckets: Int, k: Int): DataFrame =
-    Dedup.scopedCache(df
+    ScopedCache.cache(df
       .select(col(idCol).as("id"), explode(
         graft.functions.TextExpressions.wordShinglesAll(col(textCol), k)).as("g"))
       .select(col("id"), gramBucket(buckets)).groupBy("id", "b")
@@ -725,7 +727,7 @@ object TextOps {
     // scope-cache it so the corpus-wide shingling pass runs once (column
     // pruning specializes the two aggregate consumers — ReuseExchange
     // cannot dedupe them, same trap Dedup.minhashPairs documents)
-    val perDoc = Dedup.scopedCache(df.select(col(idCol).as("id"),
+    val perDoc = ScopedCache.cache(df.select(col(idCol).as("id"),
         explode(graft.functions.TextExpressions.wordShinglesAll(col(textCol), k))
           .as("g"))
       .select(col("id"), Dedup.hash60(col("g")).as("h"))
@@ -776,7 +778,7 @@ object TextOps {
     // pruning specializes the two aggregate consumers, so without the
     // cache the corpus-wide token explode would run twice (the
     // minhashPairs trap this file documents)
-    val tf = Dedup.scopedCache(toks
+    val tf = ScopedCache.cache(toks
       .join(broadcast(qterms.select("term").distinct()), Seq("term"), "left_semi")
       .groupBy(col("id"), col("term"), col("dl"))
       .agg(count(lit(1)).as("tf")))
@@ -819,7 +821,7 @@ object TextOps {
     require(rounds >= 0, "rounds must be >= 0")
     // scope-cached: every round's argmax and the final tokenize join
     // re-read this aggregation (same rationale as fitCodebook's cache)
-    val words = Dedup.scopedCache(
+    val words = ScopedCache.cache(
       df.select(explode(split(col(textCol), " ")).as("word"))
         .where(length(col("word")) > 0)
         .groupBy("word").agg(count(lit(1)).as("f")))

@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{ScopedCache, SparkEntry}
 import graft.entries.EntryUtil
 import graft.model.{IndexCatalog, TsdbContext, TsdbLayout}
 import graft.pipeline.{CorpusStore, Dedup, EmbeddingStore, Similarity}
@@ -139,7 +139,7 @@ object Probe {
         }
         val (n, tAct) = wall(df.count())
         (n, tBuild + tAct)
-      } finally Dedup.releaseCaches()
+      } finally ScopedCache.release()
       drain()
       val r = EntryRun(name, seconds, n, jobs.get, stages.get, tasks.get,
         sw.get, sr.get)
@@ -458,7 +458,7 @@ object Probe {
           corpus, queries, k = 10, nlist = 16, nprobe = 2, iters = 2,
           writeTo = Some(s"$dir/refit_probe")).count()
       }
-      Dedup.releaseCaches()
+      ScopedCache.release()
       println(f"PROBE g=$g%d corpus_rows=${g * n}%d " +
         f"create=$tCreate%.2fs serve_knn=$tServe%.2fs " +
         f"recompute_knn=$tRecompute%.2fs accept=$tAccept%.2fs " +

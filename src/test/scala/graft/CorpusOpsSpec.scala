@@ -685,7 +685,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkTestBase {
       s"identical text must flag near with the MIN matching corpus id: $out")
     assert(out(1)._4 === "new" && out(1)._2 === None,
       s"unrelated text must come back new: $out")
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("histogram quantiles: the target order statistic lies in the reported bucket's hull") {

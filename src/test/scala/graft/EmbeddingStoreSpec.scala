@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{Dedup, EmbeddingStore, Similarity}
+import graft.pipeline.{EmbeddingStore, Similarity}
 import graft.model.IndexCatalog
 
 /** The persisted, cell-partitioned embedding index
@@ -89,7 +89,7 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
       inList.substring(0, inList.indexOf(")"))).map(_.toInt).toSet
     assert(listed === probeCells,
       s"scan set must be exactly the probed cells: $listed vs $probeCells")
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("accepts and takedowns move the index through the staged lifecycle; answers track the recompute over the current vectors") {
@@ -129,7 +129,7 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
       "the now-emptying second takedown stays staged as the alert")
     assert(EmbeddingStore.readVectors(spark, dir).count() ===
       (all.size - 30).toLong)
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("knnPq serves knnIvfPq's answers from stored codes; the float vectors are never read") {
@@ -158,7 +158,7 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
     val grown = vecsDf(1L to 70L)
     assert(rowsOf(EmbeddingStore.knnPq(spark, dir, queries, 3, 2)) ===
       rowsOf(Similarity.knnIvfPq(centers, books, grown, queries, 3, 2)))
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("drift → recall-gated refit: the epoch flips through one manifest rewrite, answers serve from the refit codebook, debris is swept") {
@@ -208,7 +208,7 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "cells_e7")),
       "the next refit reclaims crashed-refit debris")
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("maintain runs the whole loop; healthCheck and maintenanceTick carry the embedding rows for a store at the database's emb/ directory") {
@@ -250,7 +250,7 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(!tick2.contains("emb_healed"))
     assert(tick2("emb_pending") === 1L)
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("streaming accept: micro-batch identity is exactly-once at the index; tombstones survive redelivery; an operator re-accept clears them") {
@@ -290,7 +290,7 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(EmbeddingStore.readVectors(spark, dir).count() === 40L)
     assert(EmbeddingStore.readVectors(spark, dir)
       .select("id").distinct().count() === 40L, "no duplicate ids")
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 
   test("the manifest round-trips the recipe; rebuilds and loads refuse the pipeline kind; epoch flip validates") {
@@ -372,6 +372,6 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
     TsdbLayout.exportDatabase(spark, bare, s"$dstB/out")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dstB, "out", TsdbLayout.CorpusSub)))
-    Dedup.releaseCaches()
+    ScopedCache.release()
   }
 }

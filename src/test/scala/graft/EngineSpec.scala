@@ -800,7 +800,7 @@ class EngineSpec extends AnyFunSuite with SparkTestBase {
     // a context whose registration is not a store fails at CONSTRUCTION
     assertThrows[IllegalArgumentException](new Engine(
       base.copy(documents = Some(docs), corpusStore = Some("/tmp/nope"))))
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
   }
 
   test("statement predicates admit only comparison/boolean/arithmetic trees — function calls (reflect/java_method) are BadQuery") {

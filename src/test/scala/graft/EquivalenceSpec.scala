@@ -142,7 +142,7 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
         .collect().map(r => (r.getLong(0),
           if (r.isNullAt(1)) None else Some(r.getLong(1)),
           if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getString(3)))
-      graft.pipeline.Dedup.releaseCaches()
+      graft.ScopedCache.release()
       assert(out.map(_._1).sorted.toSeq === batch.map(_._1).sorted,
         "every batch doc gets exactly one verdict row")
       val byId = batch.toMap

@@ -256,7 +256,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val out = Similarity.semDedup(corpus, centers, threshold = 0.99)
       .orderBy("id").select("id", "cell", "kept")
       .as[(Long, Int, Int)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     // b (id 2) is farthest from the centroid → kept; a is dominated by b;
     // c ties a on rounded distance and loses to the lower id; d has no
     // same-cell near-dup
@@ -272,7 +272,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val out = Similarity.semDedup(corpus, centers, threshold = 0.9)
       .orderBy("id").select("id", "cell", "kept")
       .as[(Long, Int, Int)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out === Seq((1L, 0, 1), (2L, 1, 1)))
   }
 
@@ -290,7 +290,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         buckets = 4096, k = 2)
       .orderBy("id").select("id", "n_grams", "logw_micro", "selected")
       .as[(Long, Long, Long, Boolean)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out.map(_._1) === Seq(1L, 2L, 3L, 4L))
     assert(out(0)._2 === 3L && out(0)._3 > 0 && out(0)._4) // target-like
     assert(out(1)._3 < 0 && !out(1)._4)                    // pool-like
@@ -308,7 +308,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       val r = TextOps.dsirWeights(df, target, "doc_id", "text")
         .orderBy("id").select("id", "logw_micro")
         .as[(Long, Long)].collect().toSeq
-      graft.pipeline.Dedup.releaseCaches()
+      graft.ScopedCache.release()
       r
     }
     assert(run(raw) === run(raw.repartition(7)))
@@ -321,7 +321,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .toDF("id", "embedding")
     val out = Similarity.semDedup(corpus, Seq((0, Seq(1.0, 0.0))), threshold = 1.5)
       .select("kept").as[Int].collect()
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out.toSeq === Seq(1, 1, 1))
   }
 
@@ -334,7 +334,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     val out = TextOps.dsirWeights(d, d, "doc_id", "text")
       .select("logw_micro", "selected").as[(Long, Boolean)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out === Seq((0L, true), (0L, true), (0L, true)))
   }
 
@@ -882,7 +882,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .select("cell", "n_corpus", "n_batch", "share_corpus", "share_batch",
         "share_delta")
       .as[(Int, Long, Long, Double, Double, Double)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out === Seq(
       (0, 8L, 1L, 0.8, 0.333333, -0.466667),
       (1, 2L, 2L, 0.2, 0.666667, 0.466667)))
@@ -913,7 +913,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         drifted, queries, k = 3, nlist = 3, nprobe = 1, iters = 2)
       .select("qid", "recall_stale", "recall_refit", "healed")
       .as[(Long, Double, Double, Int)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out === Seq((100L, 0.666667, 1.0, 1)),
       "the stale codebook finds 2 of 3 (the mode member assigned to " +
         "the other cell is unreachable at nprobe 1); the refit finds all")
@@ -942,7 +942,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         corpus, queries, k = 3, nlist = 2, nprobe = 1, iters = 0)
       .select("qid", "recall_stale", "recall_refit", "healed")
       .as[(Long, Double, Double, Int)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out === Seq((100L, 1.0, 0.666667, 0)))
     assert(graft.pipeline.Similarity.readCodebook(spark, path) === good,
       "refused = the registered codebook is untouched")
@@ -951,7 +951,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val empty = graft.pipeline.Similarity.refitCodebook(spark, path,
       corpus, queries.where($"qid" < 0L), k = 3, nlist = 2, nprobe = 1,
       iters = 0)
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(empty.count() === 0L)
     assert(graft.pipeline.Similarity.readCodebook(spark, path) === good,
       "an empty readout is not evidence — the registration stays")
@@ -974,7 +974,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         corpus, queries, k = 4, nlist = 1, nprobe = 1, iters = 1)
       .select("qid", "n_hit_stale", "n_hit_refit", "recall_refit", "healed")
       .as[(Long, Long, Long, Double, Int)].collect().toSeq
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(out === Seq((100L, 0L, 3L, 1.0, 1)),
       "the exact frame holds only the three non-null neighbours")
   }

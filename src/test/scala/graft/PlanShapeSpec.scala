@@ -549,7 +549,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .toDF("id", "embedding")
     val centers = Seq((0, Seq(10.0, 3.0)), (1, Seq(50.0, 3.0)))
     val p = plan(graft.pipeline.Similarity.semDedup(corpus, centers, threshold = 0.9))
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(p.collect {
       case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
     }.isEmpty,
@@ -568,7 +568,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val raw = (1L to 40L).map(i => (i, s"alpha beta doc $i gamma")).toDF("doc_id", "text")
     val target = Seq((99L, "alpha beta alpha beta")).toDF("doc_id", "text")
     val p = plan(graft.pipeline.TextOps.dsirWeights(raw, target, "doc_id", "text"))
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
     assert(p.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
       s"the bucket log-ratio table must broadcast:\n$p")
     assert(p.collect {
@@ -705,7 +705,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"corpus must meet the batch via broadcast only:\n$p")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 4,
       s"expected broadcast probes for exact/candidates/verify/result:\n$p")
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
   }
 
   test("incremental simhash: the index meets the batch via broadcast only") {
@@ -733,7 +733,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .collect { case f: FileSourceScanExec => f }
     assert(scans.forall(_.metadata("Location").contains("graft_sh_idx")),
       s"only the fingerprint index may be scanned:\n$scans")
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
   }
 
   test("persisted quantile histogram: serving reads only the index parquet") {
@@ -804,7 +804,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       "doc_id", "text")
     assert(out.orderBy("id").collect().toSeq ===
       live.orderBy("id").collect().toSeq)
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
   }
 
   test("corpus-store probe: the only file scans are the store's index paths — docs are never re-read, before or after appends") {
@@ -837,7 +837,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       "doc_id", "text")
     assert(out.orderBy("id").collect().toSeq ===
       live.orderBy("id").collect().toSeq)
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
   }
 
   test("pq adc: codebook and distance tables broadcast; no vector-bearing join shuffles") {
@@ -1696,7 +1696,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val pf = "PartitionFilters: \\[[^\\]]*".r.findAllIn(p).toSeq
     assert(pf.exists(f => f.contains("cell") && f.contains(" IN ")),
       s"store-served knn must prune cell partitions at the scan:\n$p")
-    graft.pipeline.Dedup.releaseCaches()
+    graft.ScopedCache.release()
   }
 
   test("scoped index rebuild: the fact read prunes metric AND ts_day at the scan") {

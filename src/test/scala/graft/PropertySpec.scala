@@ -107,31 +107,75 @@ class PropertySpec extends AnyFunSuite {
     import graft.query.QueryParser
     // grammar-biased generator: statements/clauses with randomly wrong
     // shapes (arrays where objects belong, bad enums, missing companions)
-    val key = Gen.oneOf("select", "select-events", "aggregate",
-      "group-aggregate", "group-aggregate-join", "join", "range", "where",
-      "filter", "order-by", "group-by-tag", "pivot-by-tag", "limit",
-      "offset", "apply", "output", "bogus-key", "step", "func", "metric")
+    // each statement with the fields its body admits (a leaf-bodied
+    // statement has none)
+    val statements: Map[String, Seq[String]] = Map(
+      "select" -> Nil, "select-events" -> Nil, "join" -> Nil,
+      "aggregate" -> Seq("purchase", "click"),
+      "group-aggregate" -> Seq("metric", "func", "step"),
+      "group-aggregate-join" -> Seq("metric", "func", "step"),
+      "asof-join" -> Seq("left", "right", "tolerance"),
+      "quantile" -> Seq("metric", "p", "step"),
+      "correlate" -> Seq("metric", "step", "lag"),
+      "trend" -> Seq("metric", "step", "horizon"),
+      "autocorr" -> Seq("metric", "step", "lags"),
+      "active" -> Seq("metric", "step"),
+      "distinct" -> Seq("metric", "tag", "k", "step"),
+      "changepoints" -> Seq("metric", "step", "window", "min-shift"),
+      "sessions" -> Seq("metric", "gap"),
+      "seasonal" -> Seq("metric", "period", "bin", "p"),
+      "gaps" -> Seq("metric", "min-gap", "factor"),
+      "stale" -> Seq("metric", "older-than"),
+      "anomaly" -> Seq("metric", "c", "rate"),
+      "knn" -> Seq("k", "queries", "index", "nlist", "nprobe"),
+      "dedup" -> Seq("batch", "threshold", "k"))
+    val clauseKeys = Seq("where", "filter", "order-by", "group-by-tag",
+      "pivot-by-tag", "limit", "offset", "apply", "output",
+      "where-location")
+    val key = Gen.oneOf((statements.keys ++ statements.values.flatten ++
+      clauseKeys ++ Seq("range", "from", "to", "gt", "bogus-key")).toSeq)
     val leaf: Gen[String] = Gen.oneOf(
       Gen.const("\"purchase\""), Gen.const("\"20240101T000000\""),
       Gen.const("\"1d\""), Gen.const("\"min\""), Gen.const("\"series\""),
       Gen.chooseNum(-5, 100).map(_.toString), Gen.const("null"),
       Gen.const("true"), Gen.const("[]"), Gen.const("{}"),
-      Gen.const("[\"click\", \"view\"]"))
+      Gen.const("[\"click\", \"view\"]"),
+      // wrong-typed leaves: bad and overflowing durations, bad numbers
+      Gen.const("\"soon\""), Gen.const("\"9999999999999d\""),
+      Gen.const("\"x\""), Gen.const("2.7"))
+    def render(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
     def obj(depth: Int): Gen[String] =
       for {
         n <- Gen.chooseNum(0, 4)
         ks <- Gen.listOfN(n, key)
         vs <- Gen.listOfN(n, if (depth <= 0) leaf else Gen.frequency(
           3 -> leaf, 1 -> Gen.lzy(obj(depth - 1))))
-      } yield ks.zip(vs).map { case (k, v) => s""""$k": $v""" }
-        .mkString("{", ", ", "}")
-    forAllN(obj(2), n = 400) { json =>
+      } yield render(ks.zip(vs))
+    /** Each of `keys` present with probability 3/4, valued by `value`. */
+    def someOf(keys: Seq[String], value: Gen[String]): Gen[Seq[(String, String)]] =
+      Gen.sequence[Seq[Option[(String, String)]], Option[(String, String)]](
+        keys.map(k => Gen.frequency(1 -> Gen.const(None),
+          3 -> value.map(v => Some(k -> v))))).map(_.flatten)
+    // statement-shaped: one statement with its own fields, a range and
+    // a few clauses, all valued by leaves — so every per-field reader
+    // sees wrong-typed values
+    val statementShaped: Gen[String] = for {
+      (stmt, fields) <- Gen.oneOf(statements.toSeq)
+      body <- if (fields.isEmpty) leaf else someOf(fields, leaf).map(render)
+      range <- someOf(Seq("from", "to"), leaf).map(render)
+      withRange <- Gen.oneOf(true, true, false)
+      clauses <- Gen.someOf(clauseKeys).flatMap(cs => someOf(cs.take(2).toSeq, leaf))
+    } yield render(Seq(stmt -> body) ++
+      (if (withRange) Seq("range" -> range) else Nil) ++ clauses)
+    val query = Gen.frequency(1 -> obj(2), 2 -> statementShaped)
+    forAllN(query, n = 2000) { json =>
       try { QueryParser.parse(json); () }
       catch {
-        // the one sanctioned failure class (BadQuery / BadDateTimeFormat /
-        // require all extend it); anything else — NPE, MatchError,
-        // ClassCast — is a parser crash and fails the property
-        case _: IllegalArgumentException => ()
+        // the one sanctioned failure class; anything else — NPE,
+        // MatchError, a time-grammar or arithmetic exception, a bare
+        // require — is a parser crash and fails the property
+        case _: graft.query.Ast.BadQuery => ()
         case e: Throwable => fail(s"parser crash ${e.getClass} on: $json", e)
       }
     }

@@ -175,17 +175,77 @@ class StatementGrammarSpec extends AnyFunSuite {
   }
 
   test("durations that do not parse refuse with the bad text") {
-    def badDuration(json: String, text: String): Unit = {
-      val e = intercept[graft.time.TimeUtil.BadDateTimeFormat](
-        QueryParser.parse(json))
-      assert(e.getMessage === s"bad duration: '$text'")
+    def badDuration(json: String, field: String, text: String): Unit = {
+      val e = intercept[BadQuery](QueryParser.parse(json))
+      assert(e.getMessage === s"$field: bad duration: '$text'")
     }
     badDuration(s"""{"asof-join": {"left": "click", "right": "view",
-         "tolerance": "soon"}, $r}""", "soon")
+         "tolerance": "soon"}, $r}""", "asof-join.tolerance", "soon")
     badDuration(s"""{"quantile": {"metric": "purchase", "p": [0.5],
-         "step": "later"}, $r}""", "later")
+         "step": "later"}, $r}""", "quantile.step", "later")
     badDuration(s"""{"active": {"metric": ["click"], "step": "whenever"},
-         $r}""", "whenever")
+         $r}""", "active.step", "whenever")
+  }
+
+  // each malformed field refuses as BadQuery naming the field — never a
+  // NullPointerException, a bare require, a time-grammar or arithmetic
+  // exception, or a silent default
+  test("a missing step refuses by name, not as a NullPointerException") {
+    refuses(s"""{"group-aggregate": {"metric": "purchase", "func": "mean"}, $r}""",
+      "group-aggregate.step required")
+    refuses(s"""{"group-aggregate-join": {"metric": ["click", "view"],
+         "func": "max"}, $r}""", "group-aggregate-join.step required")
+  }
+
+  test("a query that is not a JSON object refuses as BadQuery") {
+    refuses("""[1, 2]""", "query must be a JSON object")
+  }
+
+  test("durations and range timestamps that do not parse name their field") {
+    refuses(s"""{"correlate": {"metric": ["click", "view"], "step": "1h",
+         "lag": "soon"}, $r}""", "correlate.lag: bad duration: 'soon'")
+    refuses(s"""{"trend": {"metric": ["click"], "step": "1h",
+         "horizon": "-2h"}, $r}""", "trend.horizon: bad duration: '-2h'")
+    refuses("""{"select": "purchase",
+         "range": {"from": "yesterday", "to": "20240401T000000"}}""",
+      "range.from: empty timestamp value: 'yesterday'")
+  }
+
+  test("durations that overflow name their field") {
+    refuses(s"""{"group-aggregate": {"metric": "purchase", "func": "mean",
+         "step": "9999999999999d"}, $r}""",
+      "group-aggregate.step: duration out of range: '9999999999999d'")
+    refuses(s"""{"group-aggregate": {"metric": "purchase", "func": "mean",
+         "step": "99999999999999999999d"}, $r}""",
+      "group-aggregate.step: duration out of range: '99999999999999999999d'")
+  }
+
+  test("limit that is not a whole count refuses instead of paging 0 or 2 rows") {
+    refuses(s"""{"select": "purchase", $r, "limit": "ten"}""",
+      "limit must be a non-negative integer")
+    refuses(s"""{"select": "purchase", $r, "limit": 2.7}""",
+      "limit must be a non-negative integer")
+  }
+
+  test("a value-filter bound that is not a number refuses instead of reading 0.0") {
+    refuses(s"""{"join": ["a", "b"], $r, "filter": {"a": {"gt": "x"}}}""",
+      "filter.a.gt must be a number")
+  }
+
+  test("well-formed spellings keep their AST: digit-string limit, numeric range, unit-less duration") {
+    val q = QueryParser.parse(
+      """{"group-aggregate": {"metric": "m", "func": "max", "step": "10"},
+         "range": {"from": 0, "to": 100}, "limit": "5", "offset": 2}""")
+      .asInstanceOf[graft.query.Ast.GroupAggregateQuery]
+    assert(q.step === 10L && q.range === graft.query.Ast.TimeRange(0L, 100L))
+    assert(q.limit === Some(5L) && q.offset === Some(2L))
+  }
+
+  test("where: a listed series must be an object of string tag values") {
+    refuses(s"""{"select": "purchase", $r, "where": [5]}""",
+      "where: a listed series must be an object of tag values")
+    refuses(s"""{"select": "purchase", $r, "where": [{"host": ["a", "b"]}]}""",
+      "where.host must be a string")
   }
 
   test("quantile: p domain, required p, no apply") {
