@@ -40,7 +40,7 @@ object CorpusLayout {
 
   /** Open one split; the predicate prunes to its directories. */
   def readSplit(spark: SparkSession, path: String, split: String): DataFrame =
-    spark.read.parquet(path).where(col("split") === split)
+    ParquetDirs.read(spark, path).where(col("split") === split)
 
   /** Compact a corpus's small files: rewrite `srcPath` to `dstPath` with
     * each (split, source) partition bin-packed toward `targetBytes` per
@@ -98,7 +98,7 @@ object CorpusLayout {
     }
     val planDf = spark.createDataFrame(plan)
       .toDF("split", "source", "n_bytes", "n_files_target")
-    spark.read.parquet(srcPath)
+    ParquetDirs.read(spark, srcPath)
       .join(broadcast(planDf.select(col("split"), col("source"),
         col("n_files_target").as("__files"))), Seq("split", "source"))
       .repartition(col("split"), col("source"),

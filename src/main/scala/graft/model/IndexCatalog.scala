@@ -547,7 +547,7 @@ object IndexCatalog {
         val lastNs = timeColOf(e.kind) match {
           case None => e.toNs // mad/gap: fixed [fromNs, toNs) builds
           case Some(_) =>
-            val row = spark.read.parquet(resolvePath(dir, e.path))
+            val row = ParquetDirs.read(spark, resolvePath(dir, e.path))
               .agg(org.apache.spark.sql.functions.max(timeNsCol(e))).head()
             if (row.isNullAt(0)) None
             else Some(row.getAs[Number](0).longValue)
@@ -1044,7 +1044,7 @@ object IndexCatalog {
                 .reduce(_ || _)
           }.reduce(_ || _)
           val idxPath = resolvePath(dir, e.path)
-          val old = spark.read.parquet(idxPath)
+          val old = ParquetDirs.read(spark, idxPath)
           val hasDayCol = old.columns.contains(DayCol)
           // rows to KEEP inside the touched partitions: everything not
           // (touched metric AND affected bin). Series-keyed kinds
@@ -1135,7 +1135,7 @@ object IndexCatalog {
             s"graft.pipeline.CorpusStore / EmbeddingStore, not onto " +
             s"a TsdbContext")
       val resolved = resolvePath(dir, e.path)
-      val raw = spark.read.parquet(resolved)
+      val raw = ParquetDirs.read(spark, resolved)
       // owned binned storage is day-partitioned for rebuildScoped's
       // dynamic overwrite; the partition column is storage detail, not
       // index schema — registered frames match the flat form exactly

@@ -254,6 +254,7 @@ object TsdbContext {
     * oracle-reproducible.
     */
   def fromTestdata(spark: SparkSession, sfDir: String): TsdbContext = {
+    // caller-supplied input (the test-data table), so Spark infers it
     val ev = normalizeTsNs(spark.read.parquet(s"$sfDir/events.parquet"))
     val base = fromWide(spark, ev.withColumnRenamed("user_id", "user"),
       metricCol = "event_type", tagCols = Seq("user"), tsCol = "ts", valueCol = "value",

@@ -363,7 +363,7 @@ object TsdbLayout {
     * metric, ts_day) with metric/ts_day as partition columns — predicates
     * on them prune directories, never touching file contents. */
   def readSamples(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetDirs.read(spark, path)
 
   /** Merge late or corrected samples into a written layout, rewriting
     * ONLY the (metric, ts_day) partition directories the late data
@@ -515,7 +515,7 @@ object TsdbLayout {
       .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
     if (affected.isEmpty) return 0
     requireNotL0Owned(spark, path, Events, affected, "upsertEvents")
-    val existing = spark.read.parquet(path).where(dayPred(affected))
+    val existing = ParquetDirs.read(spark, path).where(dayPred(affected))
       .select(Events.cols.map(col): _*)
     val toAdd = lateKeyed.distinct()
       .join(existing, Events.rowKey, "left_anti")
@@ -800,7 +800,7 @@ object TsdbLayout {
     * database had never persisted resolve with no redeploy — the
     * reference's register-on-first-write, served from storage. */
   private def catalogRead(spark: SparkSession, dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/series")
+    val base = ParquetDirs.read(spark, s"$dir/series")
     readCatalogL0(spark, dir) match {
       case None => base
       case Some(cl0) =>
@@ -918,7 +918,7 @@ object TsdbLayout {
       path: String): Option[DataFrame] = {
     if (!exists(hconf(spark), path)) return None
     val df =
-      try spark.read.parquet(path)
+      try ParquetDirs.read(spark, path)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("Unable to infer schema") => return None
@@ -1045,11 +1045,11 @@ object TsdbLayout {
     val basePath = s"$dir/series"
     val staging = s"$dir/series_staging"
     val fresh = canonicalRegistrations(cl0)
-      .join(spark.read.parquet(basePath).select("series_id"),
+      .join(ParquetDirs.read(spark, basePath).select("series_id"),
         Seq("series_id"), "left_anti")
       .select(CatalogCols.map(col): _*)
     fresh.write.mode("overwrite").parquet(staging)
-    val staged = spark.read.parquet(staging)
+    val staged = ParquetDirs.read(spark, staging)
     val n = staged.count()
     if (n > 0) staged.write.mode("append").parquet(basePath)
     deleteRecursive(hconf(spark), staging)
@@ -1079,7 +1079,7 @@ object TsdbLayout {
           val (f, hp) = hfs(hconf(spark), r)
           f.makeQualified(hp).toString != qualified
         }
-      val safeIds = (spark.read.parquet(s"$dir/series")
+      val safeIds = (ParquetDirs.read(spark, s"$dir/series")
           .select("series_id") +:
         siblings.flatMap(readCommittedRoot(spark, _))
           .map(_.select("series_id")))
@@ -1135,7 +1135,7 @@ object TsdbLayout {
     * behavior — nothing to union, nothing to prune). */
   private def twoTierRead(spark: SparkSession, dir: String, tier: FactTier,
       series: DataFrame): DataFrame = {
-    val batchRaw = spark.read.parquet(s"$dir/${tier.batchSub}")
+    val batchRaw = ParquetDirs.read(spark, s"$dir/${tier.batchSub}")
     readTierL0(spark, dir, tier) match {
       case None => batchRaw
       case Some(l0) =>
@@ -1237,7 +1237,7 @@ object TsdbLayout {
         rows += Row(half, "watermark", null, jl(wm), jl(wm), null, null)
       }
     }
-    val persistedIds = spark.read.parquet(s"$dir/series").select("series_id")
+    val persistedIds = ParquetDirs.read(spark, s"$dir/series").select("series_id")
     rows += Row("catalog", "persisted", null, null, null, null,
       jl(persistedIds.count()))
     readCatalogL0(spark, dir).foreach { cl0 =>
@@ -1391,7 +1391,7 @@ object TsdbLayout {
     counts ++= Seq(
       "catalog_unfolded" -> readCatalogL0(spark, dir).fold(0L)(cl0 =>
         cl0.select("series_id").distinct()
-          .join(spark.read.parquet(s"$dir/series").select("series_id"),
+          .join(ParquetDirs.read(spark, s"$dir/series").select("series_id"),
             Seq("series_id"), "left_anti").count()),
       "index_stale" -> indexDirtyPairs(spark, dir).size.toLong)
     // the pipeline-index rows: a corpus store at `corpus/` has its own
@@ -1484,7 +1484,7 @@ object TsdbLayout {
       case None => empty
       case Some(l0) =>
         val l0c = l0.select(tier.cols.map(col): _*)
-        val batchRaw = spark.read.parquet(s"$dir/${tier.batchSub}")
+        val batchRaw = ParquetDirs.read(spark, s"$dir/${tier.batchSub}")
         val batchLaid = batchRaw.columns.contains("ts_day")
         if (hasWatermark(spark, dir, tier)) {
           val below = l0c.where(col("ts_day") <
@@ -1601,7 +1601,7 @@ object TsdbLayout {
       writeWatermark(spark, dir, tier, cutoffDay); return 0
     }
     val batchPath = s"$dir/${tier.batchSub}"
-    val batchRaw = spark.read.parquet(batchPath)
+    val batchRaw = ParquetDirs.read(spark, batchPath)
     if (!batchRaw.columns.contains("ts_day")) {
       // flat batch: only the EMPTY write form is compactable — the
       // whole-directory overwrite clears the flat file so partition

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{HadoopFiles, IndexCatalog}
+import graft.model.{HadoopFiles, IndexCatalog, ParquetDirs}
 
 /** Lifecycle-managed document corpus + its dedup index — the
   * LLM-pipeline half's answer to the TSDB database directory: one root
@@ -138,7 +138,7 @@ object CorpusStore {
     * keeps the storage partition column. */
   def readDocs(spark: SparkSession, dir: String,
       withBatch: Boolean = false): DataFrame = {
-    val d = spark.read.parquet(docsPath(dir))
+    val d = ParquetDirs.read(spark, docsPath(dir))
     if (withBatch) d else d.drop(BatchCol)
   }
 
@@ -232,7 +232,7 @@ object CorpusStore {
     * text). */
   private def wouldKeepSome(spark: SparkSession, dir: String,
       r: Recipe, ids: Set[Long]): Boolean =
-    !spark.read.parquet(docsPath(dir)).select(col(r.idCol))
+    !ParquetDirs.read(spark, docsPath(dir)).select(col(r.idCol))
       .where(!col(r.idCol).isin(ids.toSeq: _*)).isEmpty
 
   private def requireNotEmptying(spark: SparkSession, dir: String,
@@ -320,7 +320,7 @@ object CorpusStore {
     //    still sitting in docs would leave the two permanently
     //    disagreeing about the corpus)
     unbandedBatches(spark, dir).toSeq.sorted.foreach { bid =>
-      val docsB = spark.read.parquet(docsPath(dir))
+      val docsB = ParquetDirs.read(spark, docsPath(dir))
         .where(col(BatchCol) === bid)
       // ONE existence probe decides the path: does the batch hold any
       // tombstoned or already-indexed id at all? The common case — a
@@ -332,7 +332,7 @@ object CorpusStore {
       val anyTomb = tomb.exists(t =>
         !t.join(broadcast(oobIds.select(col("cid").as(r.idCol))),
           Seq(r.idCol)).isEmpty)
-      val dup = spark.read.parquet(hashesPath(dir))
+      val dup = ParquetDirs.read(spark, hashesPath(dir))
         .where(col(BatchCol) =!= bid)
         .join(broadcast(oobIds), "cid")
         .select(col("cid").as(r.idCol)).distinct()
@@ -393,7 +393,7 @@ object CorpusStore {
     // by construction, so it broadcasts into an anti-join instead of
     // becoming a million-literal In expression on a full re-stage
     val stagedIds = base.select(col(r.idCol).as("cid")).distinct()
-    val dup = spark.read.parquet(hashesPath(dir))
+    val dup = ParquetDirs.read(spark, hashesPath(dir))
       .where(col(BatchCol) =!= bid)
       .join(broadcast(stagedIds), "cid")
       .select(col("cid").as(r.idCol)).distinct()
@@ -424,13 +424,13 @@ object CorpusStore {
     }
     if (idSeq.isEmpty) return true
     // affected batches via the hashes lookup (id-column index scan)
-    val affected = spark.read.parquet(hashesPath(dir))
+    val affected = ParquetDirs.read(spark, hashesPath(dir))
       .where(col("cid").isin(idSeq: _*))
       .select(BatchCol).distinct().collect().map(_.getString(0)).toSet
     if (affected.isEmpty) return true
     val affSeq = affected.toSeq
     def rewrite(path: String, idColName: String): Unit = {
-      val slice = spark.read.parquet(path)
+      val slice = ParquetDirs.read(spark, path)
         .where(col(BatchCol).isin(affSeq: _*)) // partition-pruned
       // localCheckpoint severs the read-then-overwrite lineage on the
       // directory being rewritten (the upsert discipline); the write
@@ -498,16 +498,18 @@ object CorpusStore {
       if (!f.exists(marker)) {
         val present = sources.toSeq.sorted.map(partitionDir(path, _))
           .filter(p => f.exists(new org.apache.hadoop.fs.Path(p)))
+        // no emptiness probe: a partitioned dynamic-overwrite write of
+        // no rows commits no partition directory, which the marker
+        // check below already reads as "nothing to mark"
         if (present.nonEmpty) {
-          val merged = spark.read.option("basePath", path)
-            .parquet(present: _*).drop(BatchCol)
-          if (!merged.isEmpty)
-            StagedStore.sizedForWrite(merged.withColumn(BatchCol, lit(target)))
-              .write.option("partitionOverwriteMode", "dynamic")
-              .partitionBy(BatchCol).mode("overwrite").parquet(path)
+          val merged = ParquetDirs.readPartitions(spark, path, present)
+            .drop(BatchCol)
+          StagedStore.sizedForWrite(merged.withColumn(BatchCol, lit(target)))
+            .write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BatchCol).mode("overwrite").parquet(path)
         }
-        // marker AFTER the job committed (or when there was nothing to
-        // write): from here the target is authoritative for this side
+        // marker AFTER the job committed, and only when it wrote the
+        // target: from here the target is authoritative for this side
         val pd = new org.apache.hadoop.fs.Path(partitionDir(path, target))
         if (f.exists(pd)) f.create(marker, true).close()
       }
@@ -558,8 +560,8 @@ object CorpusStore {
       threshold: Double = 0.8): DataFrame = {
     val r = recipe(dir)
     Dedup.dedupAgainstIndex(
-      spark.read.parquet(hashesPath(dir)),
-      spark.read.parquet(bandsPath(dir)),
+      ParquetDirs.read(spark, hashesPath(dir)),
+      ParquetDirs.read(spark, bandsPath(dir)),
       batch, r.idCol, r.textCol, r.k, r.numPerm, r.bands, threshold)
   }
 

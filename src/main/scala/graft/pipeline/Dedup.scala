@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ScopedCache
+import graft.model.ParquetDirs
 
 /** Document deduplication operators for large-scale corpus curation:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
@@ -741,7 +742,7 @@ object Dedup {
     // EXACT column-set equality, not subset: extra existing columns
     // mean a different layout
     Seq("hashes" -> hashes, "bands" -> bandRows).foreach { case (sub, df) =>
-      val existing = spark.read.parquet(s"$path/$sub")
+      val existing = ParquetDirs.read(spark, s"$path/$sub")
       require(df.columns.toSet == existing.columns.toSet,
         s"appendCorpusIndex: $path/$sub does not have the FLAT " +
           s"corpus-index schema (existing: " +

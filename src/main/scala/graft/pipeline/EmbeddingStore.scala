@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ScopedCache
-import graft.model.{HadoopFiles, IndexCatalog}
+import graft.model.{HadoopFiles, IndexCatalog, ParquetDirs}
 
 /** Lifecycle-managed, CELL-PARTITIONED embedding index — the
   * [[CorpusStore]] pattern pointed at the embedding half: one store
@@ -144,7 +144,7 @@ object EmbeddingStore {
   /** The stored PQ sub-codebooks, [[Similarity.fitPqCodebooks]] shape. */
   private def readPqBooks(spark: SparkSession, dir: String,
       r: Recipe): Seq[(Int, Seq[(Int, Seq[Double])])] =
-    spark.read.parquet(pqPath(dir, r)).collect()
+    ParquetDirs.read(spark, pqPath(dir, r)).collect()
       .map(row => (row.getInt(0), row.getInt(1), row.getSeq[Double](2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (s, rows) =>
@@ -154,7 +154,7 @@ object EmbeddingStore {
     * refit reassigns and what recall evals read. */
   def readVectors(spark: SparkSession, dir: String): DataFrame = {
     val r = recipe(dir)
-    spark.read.parquet(dataPath(dir, r)).select(col(r.idCol), col(r.embCol))
+    ParquetDirs.read(spark, dataPath(dir, r)).select(col(r.idCol), col(r.embCol))
   }
 
   // ------------------------------------------------------------ build
@@ -213,7 +213,7 @@ object EmbeddingStore {
     * aggregate of every batch's stats at build/refit time. */
   private def writeBaseline(spark: SparkSession, dir: String,
       r: Recipe): Unit =
-    spark.read.parquet(statsPath(dir, r))
+    ParquetDirs.read(spark, statsPath(dir, r))
       .groupBy(col(CellCol))
       .agg(sum(col("n")).as("n"), sum(col("sumd")).as("sumd"))
       .coalesce(1).write.mode("overwrite").parquet(baselinePath(dir, r))
@@ -281,7 +281,7 @@ object EmbeddingStore {
       Similarity.probeCellsInRow(centers, queries, qidCol, embCol, nprobe))
     val probed = q.select(CellCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val data = spark.read.parquet(dataPath(dir, r))
+    val data = ParquetDirs.read(spark, dataPath(dir, r))
       .where(col(CellCol).isin(probed: _*)) // partition-pruned
       .select(col(r.idCol).as("id"), col(r.embCol).as("ce"), col(CellCol))
     Similarity.topK(data.join(broadcast(q), Seq(CellCol))
@@ -315,7 +315,7 @@ object EmbeddingStore {
     // not cached: the scans must stay visible to the planner (and the
     // plan pins), and two pruned skinny scans beat materializing at
     // index scale
-    val data = spark.read.parquet(dataPath(dir, r))
+    val data = ParquetDirs.read(spark, dataPath(dir, r))
       .where(col(CellCol).isin(probed: _*)) // partition-pruned
       .select(col(r.idCol).as("id"), col(CellCol), col(PqCol))
     val cand = data.select(col("id"), col(CellCol))
@@ -374,7 +374,7 @@ object EmbeddingStore {
 
   private def wouldKeepSome(spark: SparkSession, dir: String, r: Recipe,
       ids: Set[Long]): Boolean =
-    !spark.read.parquet(dataPath(dir, r)).select(col(r.idCol))
+    !ParquetDirs.read(spark, dataPath(dir, r)).select(col(r.idCol))
       .where(!col(r.idCol).isin(ids.toSeq: _*)).isEmpty
 
   // ------------------------------------------------------------- heal
@@ -407,7 +407,7 @@ object EmbeddingStore {
     val bid = StagedStore.acceptBatchId(record)
     val base = StagedStore.admitted(spark, dir, record, staged, r.idCol)
     val stagedIds = base.select(col(r.idCol)).distinct()
-    val dup = spark.read.parquet(dataPath(dir, r))
+    val dup = ParquetDirs.read(spark, dataPath(dir, r))
       .where(col(BatchCol) =!= bid)
       .join(broadcast(stagedIds), r.idCol)
       .select(col(r.idCol)).distinct()
@@ -462,7 +462,7 @@ object EmbeddingStore {
       case Some(ids) => ids
     }
     if (idSeq.isEmpty) return true
-    val data = spark.read.parquet(dataPath(dir, r))
+    val data = ParquetDirs.read(spark, dataPath(dir, r))
     val affected = data.where(col(r.idCol).isin(idSeq: _*))
       .select(col(CellCol), col(BatchCol)).distinct()
       .collect().map(row => (row.getInt(0), row.getString(1))).toSet
@@ -502,7 +502,7 @@ object EmbeddingStore {
       Similarity.dot(a, a) + Similarity.dot(b, b) -
         lit(2.0) * Similarity.dot(a, b)
     }
-    val postStats = spark.read.parquet(dataPath(dir, r))
+    val postStats = ParquetDirs.read(spark, dataPath(dir, r))
       .where(col(BatchCol).isin(affBatches.toSeq: _*))
       .select(col(BatchCol), col(CellCol), col(r.embCol))
       .join(broadcast(centersDf), CellCol)
@@ -550,7 +550,7 @@ object EmbeddingStore {
   private def cellStats(spark: SparkSession, dir: String,
       r: Recipe): Seq[(Int, Long, Double, Long, Double)] = {
     def readAgg(path: String): Map[Int, (Long, Double)] =
-      spark.read.parquet(path)
+      ParquetDirs.read(spark, path)
         .groupBy(col(CellCol))
         .agg(sum(col("n")).as("n"), sum(col("sumd")).as("sumd"))
         .collect()
@@ -634,7 +634,7 @@ object EmbeddingStore {
       case Nil => populated.toSeq.sorted
       case d => d
     }
-    spark.read.parquet(dataPath(dir, r))
+    ParquetDirs.read(spark, dataPath(dir, r))
       .where(col(CellCol).isin(cells: _*))
       .select(col(r.idCol).as("qid"), col(r.embCol),
         Dedup.hash60(col(r.idCol).cast("string")).as("__h"))
@@ -693,7 +693,7 @@ object EmbeddingStore {
         codebookPath(dir, nr))
       StagedStore.sizedForWrite(Similarity
           .reassignCellsKeepAll(centers,
-            spark.read.parquet(dataPath(dir, r)).drop(CellCol),
+            ParquetDirs.read(spark, dataPath(dir, r)).drop(CellCol),
             r.idCol, r.embCol)
           .drop("__d"))
         .write.partitionBy(CellCol, BatchCol).mode("overwrite")
@@ -714,7 +714,7 @@ object EmbeddingStore {
         Similarity.dot(a, a) + Similarity.dot(b, b) -
           lit(2.0) * Similarity.dot(a, b)
       }
-      spark.read.parquet(dataPath(dir, nr))
+      ParquetDirs.read(spark, dataPath(dir, nr))
         .select(col(BatchCol), col(CellCol), col(r.embCol))
         .join(broadcast(centersDf), CellCol)
         .groupBy(col(BatchCol), col(CellCol))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ScopedCache
+import graft.model.ParquetDirs
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -602,7 +603,7 @@ object Similarity {
 
   def readCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(path).collect()
+    ParquetDirs.read(spark, path).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
 
   /** n-nearest-centroid assignment (n = 1 for corpus cells, n = nprobe

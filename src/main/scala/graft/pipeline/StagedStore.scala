@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
-import graft.model.HadoopFiles
+import graft.model.{HadoopFiles, ParquetDirs}
 
 /** The ONE staged record-before-mutate protocol both lifecycle stores
   * share ([[CorpusStore]], [[EmbeddingStore]]) — extracted so a fix to
@@ -133,7 +133,7 @@ private[pipeline] object StagedStore {
       if (!HadoopFiles.exists(spark.sparkContext.hadoopConfiguration,
           tombstonesPath(dir))) 0L
       else {
-        val row = spark.read.parquet(tombstonesPath(dir))
+        val row = ParquetDirs.read(spark, tombstonesPath(dir))
           .agg(org.apache.spark.sql.functions.max(
             org.apache.spark.sql.functions.col("seq"))).head()
         if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
@@ -149,7 +149,7 @@ private[pipeline] object StagedStore {
     import org.apache.spark.sql.functions.{col, max_by}
     if (!HadoopFiles.exists(spark.sparkContext.hadoopConfiguration,
         tombstonesPath(dir))) None
-    else Some(spark.read.parquet(tombstonesPath(dir))
+    else Some(ParquetDirs.read(spark, tombstonesPath(dir))
       .groupBy(col(idCol))
       .agg(max_by(col("op"), col("seq")).as("__latest"))
       .where(col("__latest") === "add")
@@ -246,7 +246,7 @@ private[pipeline] object StagedStore {
         (seq, p)
       }.sortBy(_._1)
     staged.foreach { case (_, p) =>
-      if (apply(p.getName, spark.read.parquet(p.toString))) {
+      if (apply(p.getName, ParquetDirs.read(spark, p.toString))) {
         HadoopFiles.deleteRecursive(spark.sparkContext.hadoopConfiguration,
           p.toString)
         n += 1

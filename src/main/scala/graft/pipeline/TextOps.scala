@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ScopedCache
+import graft.model.ParquetDirs
 
 /** Text-analysis and curation operators for training corpora: token
   * counting, quality scoring, language identification, fingerprinting
@@ -1162,7 +1163,7 @@ object TextOps {
 
   def readClassifier(spark: org.apache.spark.sql.SparkSession,
       path: String): TextClassifierModel = {
-    val rows = spark.read.parquet(path).collect()
+    val rows = ParquetDirs.read(spark, path).collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
     val (biasRows, wRows) = rows.partition(_._1 == -1)
     TextClassifierModel(biasRows.head._2,

@@ -84,8 +84,25 @@ object Resp {
   }
 
   /** Parse one connection payload into records. Malformed trailing garbage
-    * raises [[BadResp]]; use [[parseLenient]] to keep the good prefix. */
+    * raises [[BadResp]] (a bad timestamp [[TimeUtil.BadDateTimeFormat]]);
+    * use [[parseLenient]] to keep the good prefix. */
   def parse(payload: String): Seq[Record] = {
+    val (recs, bad) = parsePrefix(payload)
+    bad.foreach(e => throw e)
+    recs
+  }
+
+  /** Like [[parse]] but a malformed element only discards the rest of its
+    * chunk (the reference parser errors the connection the same way):
+    * the records before it are kept. */
+  def parseLenient(payload: String): Seq[Record] = parsePrefix(payload)._1
+
+  /** The complete records before the first malformed element, and that
+    * element's error (None when the whole payload parsed). Every parse
+    * failure is an `IllegalArgumentException` ([[BadResp]],
+    * [[TimeUtil.BadDateTimeFormat]], a bad number). */
+  private def parsePrefix(
+      payload: String): (Seq[Record], Option[IllegalArgumentException]) = {
     val lex = new Lexer(payload)
     val dict = scala.collection.mutable.Map.empty[Long, String]
     val out = Seq.newBuilder[Record]
@@ -101,7 +118,7 @@ object Resp {
       case A(_) => throw new BadResp("expected timestamp, got array")
     }
 
-    while (!lex.atEnd) {
+    try while (!lex.atEnd) {
       lex.next() match {
         case A(2) => // dictionary entry: <series string> <:id>
           (lex.next(), lex.next()) match {
@@ -138,22 +155,18 @@ object Resp {
               case A(n) =>
                 if (n != metrics.size)
                   throw new BadResp(s"row protocol: $n values for ${metrics.size} metrics")
-                metrics.foreach { m =>
-                  out += Sample(sn.copy(metric = m).render, ts, num(lex.next()))
+                // all values read before any is kept: a bad value drops
+                // its whole row, never half of it
+                out ++= metrics.map { m =>
+                  Sample(sn.copy(metric = m).render, ts, num(lex.next()))
                 }
               case el => throw new BadResp(s"row protocol needs a value array, got $el")
             }
           } else out += Sample(name, ts, num(lex.next()))
       }
-    }
-    out.result()
+    } catch { case e: IllegalArgumentException => return (out.result(), Some(e)) }
+    (out.result(), None)
   }
-
-  /** Like [[parse]] but a malformed element only discards the rest of its
-    * chunk (the reference parser errors the connection the same way). */
-  def parseLenient(payload: String): Seq[Record] =
-    try parse(payload)
-    catch { case _: BadResp | _: IllegalArgumentException => Seq.empty }
 
   /** Spark integration: one RESP payload chunk per input row →
     * `(name, ts, value)` samples. Works on batch and streaming Datasets. */

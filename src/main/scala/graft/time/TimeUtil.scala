@@ -75,12 +75,16 @@ object TimeUtil {
       }
       nanos = v * math.pow(10, 9 - frac.length).toLong
     }
-    val date =
-      try LocalDate.of(year, month, day)
-      catch { case e: java.time.DateTimeException => throw new BadDateTimeFormat(e.getMessage) }
-    val epochSec = LocalDateTime.of(date, java.time.LocalTime.of(hour, minute, second))
-      .toEpochSecond(ZoneOffset.UTC)
-    Math.addExact(Math.multiplyExact(epochSec, NsPerSec), nanos)
+    // an out-of-range field (month 13, hour 25) or an instant past the
+    // ns-since-epoch range is a bad timestamp, not a crash
+    try {
+      val epochSec = LocalDateTime.of(LocalDate.of(year, month, day),
+        java.time.LocalTime.of(hour, minute, second)).toEpochSecond(ZoneOffset.UTC)
+      Math.addExact(Math.multiplyExact(epochSec, NsPerSec), nanos)
+    } catch {
+      case e @ (_: java.time.DateTimeException | _: ArithmeticException) =>
+        throw new BadDateTimeFormat(s"bad timestamp '$s': ${e.getMessage}")
+    }
   }
 
   /** Render ns-since-epoch as ISO-basic `YYYYMMDDThhmmss.nnnnnnnnn` (UTC). */

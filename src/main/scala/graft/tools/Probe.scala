@@ -2,9 +2,10 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.{ScopedCache, SparkEntry}
@@ -17,7 +18,7 @@ import graft.pipeline.{CorpusStore, Dedup, EmbeddingStore, Similarity}
   * its positional arguments:
   *
   * {{{
-  * runMain graft.tools.Probe entries    <sfDir> [--plans <outDir> <suffix>] <name> ...
+  * runMain graft.tools.Probe entries    <sfDir> [--plans <outDir> <suffix>] [--jobs] <name> ...
   * runMain graft.tools.Probe replica    <srcDir> <destDir> <copies> [documents|events|all]
   * runMain graft.tools.Probe l0day      <sfDir> [--events] <days> ...
   * runMain graft.tools.Probe rebuild    <sfDir> <days> ...
@@ -50,8 +51,9 @@ object Probe {
         val at = a.indexOf("--plans")
         val plans =
           if (at < 0) None else Some((a(at + 1), a(at + 2)))
-        val rest = if (at < 0) a else a.patch(at, Nil, 3)
-        entries(_, rest.head, rest.tail, plans)
+        val rest = (if (at < 0) a else a.patch(at, Nil, 3))
+          .filterNot(_ == "--jobs")
+        entries(_, rest.head, rest.tail, plans, jobLines = a.contains("--jobs"))
       case "replica" =>
         replica(_, a(0), a(1), a(2).toInt, a.lift(3).getOrElse("documents"))
       case "l0day" =>
@@ -101,13 +103,28 @@ object Probe {
     * `plans = Some((outDir, suffix))` also writes each entry's
     * `explain("formatted")` text to `<outDir>/<name>_<suffix>.txt`,
     * the before/after plan evidence kept under `plans/`. The plan is
-    * taken between build and action, outside the timed window. */
+    * taken between build and action, outside the timed window.
+    *
+    * `jobLines = true` is the job census: before its `ENTRY` line each
+    * run also prints one [[jobLine]] per job it submitted, so a job
+    * floor is read off by call site instead of guessed. */
   def entries(spark: SparkSession, sfDir: String, names: Seq[String],
-      plans: Option[(String, String)] = None): Seq[EntryRun] = {
+      plans: Option[(String, String)] = None,
+      jobLines: Boolean = false): Seq[EntryRun] = {
     val jobs, stages, tasks, sw, sr = new AtomicLong
+    val started =
+      new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val sqlDetails = new java.util.concurrent.ConcurrentHashMap[Long, String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        if (jobLines) started.add(e)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if jobLines =>
+          sqlDetails.put(s.executionId, s.details)
+        case _ =>
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted)
           : Unit = {
         stages.incrementAndGet()
@@ -128,6 +145,7 @@ object Probe {
       val fn = SparkEntry.queries(name)
       drain()
       Seq(jobs, stages, tasks, sw, sr).foreach(_.set(0))
+      started.clear(); sqlDetails.clear()
       val (n, seconds) = try {
         val (df, tBuild) = wall(fn(spark, sfDir))
         plans.foreach { case (outDir, suffix) =>
@@ -143,12 +161,36 @@ object Probe {
       drain()
       val r = EntryRun(name, seconds, n, jobs.get, stages.get, tasks.get,
         sw.get, sr.get)
+      started.toArray(Array.empty[SparkListenerJobStart]).sortBy(_.jobId)
+        .foreach(e => println(jobLine(name, e,
+          id => Option(sqlDetails.get(id)))))
       println(f"ENTRY $name%-28s jobs=${r.jobs}%4d " +
         f"stages=${r.stages}%4d tasks=${r.tasks}%6d " +
         f"shufW=${r.shuffleWrite}%10d shufR=${r.shuffleRead}%10d " +
         f"${r.seconds}%7.2f s (${r.rows} rows)")
       r
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** One job of the census: `JOB <entry> id=<job id> <result-stage
+    * name> <first graft.* frame>`. The result stage is the job's last
+    * (highest-id) stage; its `details` is the submitting call stack,
+    * whose first `graft.` frame names the program line that caused the
+    * job. A job that adaptive execution submits from its own thread
+    * (a broadcast, a query stage) carries no program frame; it is
+    * charged to the call stack of the SQL execution it belongs to,
+    * looked up by id in `sqlDetails` ("-" when neither holds one). */
+  def jobLine(entry: String, e: SparkListenerJobStart,
+      sqlDetails: Long => Option[String]): String = {
+    val result = e.stageInfos.maxBy(_.stageId)
+    def graftFrame(stack: String) =
+      stack.linesIterator.map(_.trim).find(_.startsWith("graft."))
+    val execution = Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .flatMap(id => sqlDetails(id.toLong))
+    val frame = graftFrame(result.details)
+      .orElse(execution.flatMap(graftFrame)).getOrElse("-")
+    s"JOB $entry id=${e.jobId} ${result.name} $frame"
   }
 
   /** Write a `copies`× replica of testdata tables to `dest`, the

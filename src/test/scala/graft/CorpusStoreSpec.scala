@@ -279,6 +279,37 @@ class CorpusStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(CorpusStore.readDocs(spark, dir).count() === 58L)
   }
 
+  test("a compaction record whose sources a takedown emptied leaves no target partition and no marker") {
+    val dir = store("graft_cs_compact_emptied")
+    CorpusStore.create(spark, dir, docsDf(1L to 40L), "doc_id", "text")
+    CorpusStore.acceptBatch(spark, dir, docsDf(41L to 42L))
+    CorpusStore.acceptBatch(spark, dir, docsDf(43L to 44L))
+    // the takedown is staged BEFORE the record, so heal applies it
+    // first and the record's two small sources are gone when it lands
+    CorpusStore.stageTakedown(spark, dir, 41L to 44L)
+    val smallBytes = {
+      import scala.jdk.CollectionConverters._
+      val ls = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "docs"))
+      try ls.iterator().asScala.toSeq
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          !p.getFileName.toString.startsWith(".") &&
+          !p.toString.contains(CorpusStore.InitBatch))
+        .groupBy(_.getParent).values
+        .map(_.map(java.nio.file.Files.size(_)).sum).max
+      finally ls.close()
+    }
+    val target = CorpusStore.stageCompaction(spark, dir,
+      maxBytes = Some(smallBytes)).get
+    assert(CorpusStore.heal(spark, dir) === 2)
+    Seq("docs", "indexes/hashes", "indexes/bands").foreach { s =>
+      val pd = java.nio.file.Paths.get(dir, s, s"${CorpusStore.BatchCol}=$target")
+      assert(!java.nio.file.Files.exists(pd),
+        s"$s: an emptied compaction writes no target partition (nor its marker)")
+    }
+    assert(CorpusStore.health(spark, dir).toMap.apply("corpus_pending") === 0L)
+    assert(CorpusStore.readDocs(spark, dir).count() === 40L)
+  }
+
   test("streaming accept: micro-batch identity makes redelivery exactly-once at the store") {
     // foreachBatch is at-least-once — a failed trigger redelivers the
     // SAME micro-batch id. The store derives the __batch identity from

@@ -21,4 +21,23 @@ class ProbeSpec extends AnyFunSuite with SparkTestBase {
       out.resolve("q1_pricing_summary_t.txt"))
     assert(plan.contains("== Physical Plan =="))
   }
+
+  test("entries --jobs: one JOB census line per submitted job, naming its result stage and first graft frame") {
+    val out = new java.io.ByteArrayOutputStream
+    val Seq(run) = Console.withOut(out) {
+      Probe.entries(spark, SparkTestBase.Sf0001, Seq("q1_pricing_summary"),
+        jobLines = true)
+    }
+    val lines = out.toString("UTF-8").linesIterator
+      .filter(_.startsWith("JOB ")).toSeq
+    assert(lines.size.toLong === run.jobs)
+    val line = """JOB q1_pricing_summary id=(\d+) (\S.* at \S+:\d+) (graft\.\S+|-)""".r
+    lines.foreach(l => assert(line.matches(l), l))
+    val ids = lines.map { case line(id, _, _) => id.toInt }
+    assert(ids === ids.sorted && ids.distinct === ids)
+    // jobs adaptive execution submits from its own threads are charged
+    // to their SQL execution's call stack, so every job names a frame
+    assert(lines.forall(l => !l.endsWith(" -")),
+      s"every job names the program frame that caused it: $lines")
+  }
 }

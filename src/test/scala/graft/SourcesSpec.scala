@@ -77,6 +77,21 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(Resp.parseLenient(bad) === Seq.empty)
   }
 
+  test("RESP out-of-range ISO timestamp: parse raises BadDateTimeFormat, parseLenient keeps the good prefix") {
+    // hour 25 fails LocalTime.of, not LocalDate.of
+    val bad = "+m t=1\r\n:10\r\n:1\r\n+m t=1\r\n+20240101T250000\r\n:2\r\n"
+    val e = intercept[graft.time.TimeUtil.BadDateTimeFormat](Resp.parse(bad))
+    assert(e.getMessage.contains("20240101T250000"))
+    assert(Resp.parseLenient(bad) === Seq(Resp.Sample("m t=1", 10L, 1.0)))
+  }
+
+  test("RESP ISO timestamp past the ns-since-epoch range raises BadDateTimeFormat, not ArithmeticException") {
+    // 9999-12-31 is a valid date, but its ns count overflows a Long
+    val far = "+m t=1\r\n+99991231T000000\r\n:1\r\n"
+    intercept[graft.time.TimeUtil.BadDateTimeFormat](Resp.parse(far))
+    assert(Resp.parseLenient(far) === Seq.empty)
+  }
+
   test("RESP toSamples integrates with Spark") {
     import spark.implicits._
     val chunks = Seq(
