@@ -602,43 +602,36 @@ final class Engine(val ctx: TsdbContext,
     // on the scan path and through every index-serving path
     val ids = resolvedIds(Seq(q.metric), q.where, q.groupBy,
       location = q.location)
-    servedQuantile(q, ids).getOrElse {
+    // the stepped form is per-bin percentiles (bins anchored at
+    // range.from like group-aggregate) — "p99 per day". Same bounded
+    // per-group histogram; the bin is just another key
+    val keys = "series" +: q.stepNs.map(_ => "__bin").toSeq
+    val hist = servedQuantile(q, ids, keys).getOrElse {
       // value filter runs during the scan, BEFORE bucketing — "p99 of
       // the values above the floor"; a pushdown-able predicate
       var df = scan(ids, q.range, Seq(q.metric))
       q.filter.foreach(f => df = df.where(valueFilterCond(col("value"), f)))
-      q.stepNs match {
-        case None =>
-          graft.ops.HistQuantiles.quantiles(
-              graft.ops.HistQuantiles.histogram(
-                df.select(col("out_name").as("series"), col("value")),
-                Seq("series")),
-              Seq("series"), q.ps)
-            .orderBy("series", "p")
-        case Some(step) =>
-          // per-bin percentiles (bins anchored at range.from like
-          // group-aggregate) — "p99 per day". Same bounded per-group
-          // histogram; the bin is just another key
-          graft.ops.HistQuantiles.quantiles(
-              graft.ops.HistQuantiles.histogram(
-                df.select(col("out_name").as("series"),
-                  binColumn(q.range, step).as("__bin"), col("value")),
-                Seq("series", "__bin")),
-              Seq("series", "__bin"), q.ps)
-            .select(col("series"), expr("__bin div 1000").as("ts_us"),
-              col("p"), col("q"))
-            .orderBy("series", "ts_us", "p")
-      }
+      graft.ops.HistQuantiles.histogram(
+        df.select(col("out_name").as("series") +:
+          q.stepNs.map(binColumn(q.range, _).as("__bin")).toSeq :+
+          col("value"): _*),
+        keys)
     }
+    val qs = graft.ops.HistQuantiles.quantiles(hist, keys, q.ps)
+    if (q.stepNs.isEmpty) qs.orderBy("series", "p")
+    else qs.select(col("series"), expr("__bin div 1000").as("ts_us"),
+        col("p"), col("q"))
+      .orderBy("series", "ts_us", "p")
   }
 
   /** Quantile serving from a REGISTERED histogram index
     * (ctx.histograms: window step → (series_id, win, lo, cnt)) — the
     * percentile analog of rollup-served aggregation: when the forward
     * range covers WHOLE windows (from and to both aligned to the window
-    * step), the answer is the merge of the covered windows' bucket
-    * counts, EXACTLY equal to the scan-built histogram (counts are
-    * exact; only the bucketing approximates) — so serving never changes
+    * step), the merge of the covered windows' bucket counts —
+    * (series[, __bin], lo, cnt) — is EXACTLY the scan-built histogram
+    * (counts are exact; only the bucketing approximates), and
+    * [[quantile]]'s one tail answers from it — so serving never changes
     * the answer, only removes the fact scan (plan-pinned: no samples
     * read). The STEPPED form additionally needs `step` to be a whole
     * number of windows: each window then lies inside exactly one query
@@ -654,8 +647,8 @@ final class Engine(val ctx: TsdbContext,
     * serves day-aligned ranges from the small level and falls through
     * to the fine level for hour-aligned ones (PlanShapeSpec pins the
     * level selection). */
-  private def servedQuantile(q: QuantileQuery,
-      ids: DataFrame): Option[DataFrame] = {
+  private def servedQuantile(q: QuantileQuery, ids: DataFrame,
+      keys: Seq[String]): Option[DataFrame] = {
     if (!q.range.forward) return None
     // the index stores unfiltered bucket counts — an arbitrary value
     // threshold cannot be applied at bucket granularity; filtered
@@ -668,28 +661,13 @@ final class Engine(val ctx: TsdbContext,
       val covered = joinResolved(
         hist.where(col("win") >= q.range.from && col("win") < q.range.to),
         ids.select("series_id", "out_name"))
-      q.stepNs match {
-        case None =>
-          graft.ops.HistQuantiles.quantiles(
-              graft.ops.HistQuantiles.merge(
-                covered.select(col("out_name").as("series"), col("lo"),
-                  col("cnt")),
-                Seq("series")),
-              Seq("series"), q.ps)
-            .orderBy("series", "p")
-        case Some(step) =>
-          // window → query bin: the same anchored-bin rule as the scan
-          // path, applied to window starts
-          val binned = covered.select(col("out_name").as("series"),
-            binOf(col("win"), q.range, step).as("__bin"),
-            col("lo"), col("cnt"))
-          graft.ops.HistQuantiles.quantiles(
-              graft.ops.HistQuantiles.merge(binned, Seq("series", "__bin")),
-              Seq("series", "__bin"), q.ps)
-            .select(col("series"), expr("__bin div 1000").as("ts_us"),
-              col("p"), col("q"))
-            .orderBy("series", "ts_us", "p")
-      }
+      // window → query bin: the same anchored-bin rule as the scan
+      // path, applied to window starts
+      graft.ops.HistQuantiles.merge(
+        covered.select(col("out_name").as("series") +:
+          q.stepNs.map(binOf(col("win"), q.range, _).as("__bin")).toSeq :+
+          col("lo") :+ col("cnt"): _*),
+        keys)
     }
   }
 
@@ -701,14 +679,20 @@ final class Engine(val ctx: TsdbContext,
     * persists and judges batches or streams against. Output:
     * (series, phase, lo, hi). */
   def seasonal(q: SeasonalQuery): DataFrame = {
+    // the parser's rule, at the engine's altitude for hand-built ASTs
+    if (q.binNs <= 0 || q.periodNs % q.binNs != 0) throw new BadQuery(
+      s"seasonal: bin (${q.binNs}) must divide the period (${q.periodNs})")
     val ids = resolvedIds(Seq(q.metric), q.where, q.groupBy,
       location = q.location)
-    servedSeasonal(q, ids).getOrElse(
-      graft.ops.Monitoring.seasonalBands(
-          scan(ids, q.range, Seq(q.metric))
-            .select(col("out_name").as("series"), col("ts"), col("value")),
-          q.periodNs, q.binNs, keyCol = "series", pLo = q.pLo, pHi = q.pHi)
-        .orderBy("series", "phase"))
+    // the phase histogram Monitoring.seasonalBands builds internally
+    val hist = servedSeasonal(q, ids).getOrElse(
+      graft.ops.HistQuantiles.histogram(
+        scan(ids, q.range, Seq(q.metric)).select(col("out_name").as("series"),
+          expr(s"pmod(ts, ${q.periodNs}L) div ${q.binNs}L").as("phase"),
+          col("value")),
+        Seq("series", "phase")))
+    graft.ops.Monitoring.bandsFromHist(hist, "series", q.pLo, q.pHi)
+      .orderBy("series", "phase")
   }
 
   /** Seasonal-band serving from the SAME registered histogram index the
@@ -716,12 +700,12 @@ final class Engine(val ctx: TsdbContext,
     * statements): when the forward range covers whole windows AND the
     * window divides both the phase bin and the period, every sample in
     * a window shares one phase (the window sits inside one bin of one
-    * period cycle), so window counts re-key to (series, phase) by
-    * addition and the band fit ([[graft.ops.Monitoring.bandsFromHist]])
-    * runs on exactly the counts the scan would build — served bands
-    * equal scan-built bands bit-for-bit, with no fact scan
-    * (plan-pinned). Misaligned ranges or a window that doesn't divide
-    * the bin/period abstain to the scan. */
+    * period cycle), so window counts re-key to (series, phase, lo, cnt)
+    * by addition — exactly the counts the scan would build, so the band
+    * fit ([[graft.ops.Monitoring.bandsFromHist]], [[seasonal]]'s one
+    * tail) gives served bands equal to scan-built bands bit-for-bit,
+    * with no fact scan (plan-pinned). Misaligned ranges or a window
+    * that doesn't divide the bin/period abstain to the scan. */
   private def servedSeasonal(q: SeasonalQuery,
       ids: DataFrame): Option[DataFrame] = {
     if (!q.range.forward) return None
@@ -735,10 +719,7 @@ final class Engine(val ctx: TsdbContext,
         .select(col("out_name").as("series"),
           expr(s"pmod(win, ${q.periodNs}L) div ${q.binNs}L").as("phase"),
           col("lo"), col("cnt"))
-      graft.ops.Monitoring.bandsFromHist(
-          graft.ops.HistQuantiles.merge(phased, Seq("series", "phase")),
-          "series", q.pLo, q.pHi)
-        .orderBy("series", "phase")
+      graft.ops.HistQuantiles.merge(phased, Seq("series", "phase"))
     }
   }
 
@@ -889,22 +870,9 @@ final class Engine(val ctx: TsdbContext,
   def active(q: ActiveQuery): DataFrame = {
     val base = locationFiltered(seriesFor(q.metrics, q.where), q.location)
     val ids = base.select(col("series_id"), col("metric").as("out_name"))
-    servedActive(q, ids).getOrElse {
-      val df = scan(ids, q.range, q.metrics)
-      q.stepNs match {
-        case None =>
-          df.groupBy(col("out_name").as("metric"))
-            .agg(countDistinct(col("series_id")).as("n_series"))
-            .orderBy("metric")
-        case Some(step) =>
-          df.groupBy(col("out_name").as("metric"),
-              binColumn(q.range, step).as("__bin"))
-            .agg(countDistinct(col("series_id")).as("n_series"))
-            .select(col("metric"), expr("__bin div 1000").as("ts_us"),
-              col("n_series"))
-            .orderBy("metric", "ts_us")
-      }
-    }
+    finishActive(q, servedActive(q, ids).getOrElse(
+      scan(ids, q.range, q.metrics)
+        .select(col("series_id"), col("out_name"), col("ts").as("__t"))))
   }
 
   /** Active-series serving from a REGISTERED rollup: a rollup stores a
@@ -938,24 +906,27 @@ final class Engine(val ctx: TsdbContext,
   }
 
   private def servedActive(q: ActiveQuery, ids: DataFrame): Option[DataFrame] =
-    eligibleActivityRollup(q.range, q.stepNs).map { inRange =>
-      val covered = joinResolved(inRange, ids.select("series_id", "out_name"))
-      q.stepNs match {
-        case None =>
-          covered.groupBy(col("out_name").as("metric"))
-            .agg(countDistinct(col("series_id")).as("n_series"))
-            .orderBy("metric")
-        case Some(step) =>
-          covered
-            .select(col("out_name"),
-              binOf(col("bin"), q.range, step).as("__bin"),
-              col("series_id"))
-            .groupBy(col("out_name").as("metric"), col("__bin"))
-            .agg(countDistinct(col("series_id")).as("n_series"))
-            .select(col("metric"), expr("__bin div 1000").as("ts_us"),
-              col("n_series"))
-            .orderBy("metric", "ts_us")
-      }
+    eligibleActivityRollup(q.range, q.stepNs).map(inRange =>
+      joinResolved(inRange, ids.select("series_id", "out_name"))
+        .select(col("series_id"), col("out_name"), col("bin").as("__t")))
+
+  /** The ONE count tail both active paths share, over activity rows
+    * (series_id, out_name, __t): `__t` is the sample ts on the scan
+    * path and the rollup bin start on the served path — the same query
+    * bin under the serving guard ([[finishDistinct]]'s convention). */
+  private def finishActive(q: ActiveQuery, rows: DataFrame): DataFrame =
+    q.stepNs match {
+      case None =>
+        rows.groupBy(col("out_name").as("metric"))
+          .agg(countDistinct(col("series_id")).as("n_series"))
+          .orderBy("metric")
+      case Some(step) =>
+        rows.groupBy(col("out_name").as("metric"),
+            binOf(col("__t"), q.range, step).as("__bin"))
+          .agg(countDistinct(col("series_id")).as("n_series"))
+          .select(col("metric"), expr("__bin div 1000").as("ts_us"),
+            col("n_series"))
+          .orderBy("metric", "ts_us")
     }
 
   /** Beyond-reference `distinct`: per-metric ESTIMATED distinct values
@@ -1060,23 +1031,33 @@ final class Engine(val ctx: TsdbContext,
 
   /** Beyond-reference `correlate`: Pearson correlation between the
     * named metrics' bucket-mean series over the range
-    * ([[graft.ops.Stats.corrAligned]]). The fact scan reduces to a
-    * (metrics × buckets) frame before anything pairs; buckets are
-    * epoch-aligned so correlations from different ranges share one
-    * grid. Output: (key_a, key_b, n_buckets, corr), key_a < key_b. */
-  def correlate(q: CorrelateQuery): DataFrame = {
-    val base = locationFiltered(seriesFor(q.metrics, q.where), q.location)
+    * ([[graft.ops.Stats.corrAligned]]'s tail over [[bucketMeansFor]]).
+    * The fact scan reduces to a (metrics × buckets) frame before
+    * anything pairs; buckets are epoch-aligned so correlations from
+    * different ranges share one grid. Output:
+    * (key_a, key_b, n_buckets, corr), key_a < key_b. */
+  def correlate(q: CorrelateQuery): DataFrame =
+    graft.ops.Stats.corrFromBucketMeans(
+        bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
+        "metric", lagBuckets = q.lagNs / q.stepNs)
+      .orderBy("key_a", "key_b")
+
+  /** The reduced input of every bucket-mean statement (`correlate`,
+    * `trend`, `autocorr`, `changepoints`): the (metric, __b, __m)
+    * frame of [[graft.ops.Stats.bucketMeans]], served from a registered
+    * bucket-sums index when one is eligible ([[servedBucketMeans]]),
+    * else reduced from the scan — each statement's one tail consumes
+    * either, so serving changes the plan, never the answer. */
+  private def bucketMeansFor(metrics: Seq[String], where: Where,
+      location: Option[LocationFilter], range: TimeRange,
+      stepNs: Long): DataFrame = {
+    val base = locationFiltered(seriesFor(metrics, where), location)
     val ids = base.select(col("series_id"), col("metric").as("out_name"))
-    servedBucketMeans(q.range, q.stepNs, ids)
-      .map(buckets => graft.ops.Stats.corrFromBucketMeans(buckets,
-          "metric", lagBuckets = q.lagNs / q.stepNs)
-        .orderBy("key_a", "key_b"))
-      .getOrElse(
-        graft.ops.Stats.corrAligned(
-            scan(ids, q.range, q.metrics)
-              .select(col("out_name").as("metric"), col("ts"), col("value")),
-            q.stepNs, lagBuckets = q.lagNs / q.stepNs)
-          .orderBy("key_a", "key_b"))
+    servedBucketMeans(range, stepNs, ids).getOrElse(
+      graft.ops.Stats.bucketMeans(
+        scan(ids, range, metrics)
+          .select(col("out_name").as("metric"), col("ts"), col("value")),
+        stepNs, "metric", "ts", "value"))
   }
 
   /** The correlate/trend serving core over a REGISTERED bucket-sums
@@ -1114,65 +1095,39 @@ final class Engine(val ctx: TsdbContext,
     * readout that justifies a `seasonal` period choice, through the
     * query language. Buckets are epoch-aligned like `correlate`, and
     * the SAME registered bucket-sums index (including its compaction
-    * ladder) serves aligned statements — the ACF consumes exactly the
-    * (metric, __b, __m) frame [[servedBucketMeans]] reduces, so
-    * serving changes the plan, never the coefficients. Output:
-    * (metric, lag, n_buckets, corr), lag in steps. */
-  def autocorr(q: AutocorrQuery): DataFrame = {
-    val base = locationFiltered(seriesFor(q.metrics, q.where), q.location)
-    val ids = base.select(col("series_id"), col("metric").as("out_name"))
-    val lags = q.lagsNs.map(_ / q.stepNs)
-    val buckets = servedBucketMeans(q.range, q.stepNs, ids).getOrElse(
-      graft.ops.Stats.bucketMeans(
-        scan(ids, q.range, q.metrics)
-          .select(col("out_name").as("metric"), col("ts"), col("value")),
-        q.stepNs, "metric", "ts", "value"))
-    graft.ops.Stats.autocorrFromBucketMeans(buckets, "metric", lags)
+    * ladder) serves aligned statements through [[bucketMeansFor]].
+    * Output: (metric, lag, n_buckets, corr), lag in steps. */
+  def autocorr(q: AutocorrQuery): DataFrame =
+    graft.ops.Stats.autocorrFromBucketMeans(
+        bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
+        "metric", q.lagsNs.map(_ / q.stepNs))
       .orderBy("metric", "lag")
-  }
 
   /** Beyond-reference `changepoints`: per-metric level shifts of the
     * bucket-mean series over the range
     * ([[graft.ops.Stats.levelShifts]] — the two-window mean-shift
     * detector; "when did this metric move"). Buckets are epoch-aligned
     * like `correlate`/`trend`, and the SAME registered bucket-sums
-    * index serves aligned statements — the detector consumes exactly
-    * the (metric, __b, __m) frame [[servedBucketMeans]] reduces, so
-    * serving changes the plan, never the flags. Output:
-    * (metric, ts_us, before_mean, after_mean, shift). */
-  def changepoints(q: ChangepointsQuery): DataFrame = {
-    val base = locationFiltered(seriesFor(q.metrics, q.where), q.location)
-    val ids = base.select(col("series_id"), col("metric").as("out_name"))
-    val buckets = servedBucketMeans(q.range, q.stepNs, ids).getOrElse(
-      graft.ops.Stats.bucketMeans(
-        scan(ids, q.range, q.metrics)
-          .select(col("out_name").as("metric"), col("ts"), col("value")),
-        q.stepNs, "metric", "ts", "value"))
-    graft.ops.Stats.levelShifts(buckets, "metric", q.stepNs, q.window,
-        q.minShift)
+    * index serves aligned statements through [[bucketMeansFor]].
+    * Output: (metric, ts_us, before_mean, after_mean, shift). */
+  def changepoints(q: ChangepointsQuery): DataFrame =
+    graft.ops.Stats.levelShifts(
+        bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
+        "metric", q.stepNs, q.window, q.minShift)
       .orderBy("metric", "ts_us")
-  }
 
   /** Beyond-reference `trend`: per-metric OLS trend of the bucket-mean
     * series over the range plus the extrapolated value `horizon` past
-    * the last observed bucket ([[graft.ops.Stats.trend]] — the
-    * predict_linear analog). Buckets are epoch-aligned like
-    * `correlate`. Output: (metric, n_buckets, slope, forecast, ts_us),
-    * slope in units per step. */
-  def trend(q: TrendQuery): DataFrame = {
-    val base = locationFiltered(seriesFor(q.metrics, q.where), q.location)
-    val ids = base.select(col("series_id"), col("metric").as("out_name"))
-    servedBucketMeans(q.range, q.stepNs, ids)
-      .map(buckets => graft.ops.Stats.trendFromBucketMeans(buckets,
-          "metric", q.stepNs, horizonBuckets = q.horizonNs / q.stepNs)
-        .orderBy("metric"))
-      .getOrElse(
-        graft.ops.Stats.trend(
-            scan(ids, q.range, q.metrics)
-              .select(col("out_name").as("metric"), col("ts"), col("value")),
-            q.stepNs, horizonBuckets = q.horizonNs / q.stepNs)
-          .orderBy("metric"))
-  }
+    * the last observed bucket ([[graft.ops.Stats.trend]]'s tail over
+    * [[bucketMeansFor]] — the predict_linear analog). Buckets are
+    * epoch-aligned like `correlate`. Output:
+    * (metric, n_buckets, slope, forecast, ts_us), slope in units per
+    * step. */
+  def trend(q: TrendQuery): DataFrame =
+    graft.ops.Stats.trendFromBucketMeans(
+        bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
+        "metric", q.stepNs, horizonBuckets = q.horizonNs / q.stepNs)
+      .orderBy("metric")
 
   // ------------------------------------------------------------- aggregate
 

@@ -38,10 +38,6 @@ object CorpusLayout {
       .write.partitionBy("split", "source").mode("overwrite").parquet(path)
   }
 
-  /** Open one split; the predicate prunes to its directories. */
-  def readSplit(spark: SparkSession, path: String, split: String): DataFrame =
-    ParquetDirs.read(spark, path).where(col("split") === split)
-
   /** Compact a corpus's small files: rewrite `srcPath` to `dstPath` with
     * each (split, source) partition bin-packed toward `targetBytes` per
     * output file — the OPTIMIZE step every long-lived 100 TB corpus

@@ -29,7 +29,10 @@ import org.apache.spark.sql.types.StructType
   *
   * A directory with no data file (absent, empty, or a sink root with
   * nothing committed yet) falls through to Spark's own read and its
-  * own error ("Unable to infer schema", "path does not exist").
+  * own error ("Unable to infer schema", "path does not exist"). A
+  * caller for which "no data file yet" is a normal state (an ingest
+  * sink root before its first commit) asks [[schemaOf]] instead, which
+  * answers None without a Spark job.
   *
   * Input the caller supplies (test data, user tables) still reads
   * through `spark.read.parquet`; this helper is for directories whose

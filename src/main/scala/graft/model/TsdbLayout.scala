@@ -898,8 +898,9 @@ object TsdbLayout {
     * absent or shows no committed data yet — a freshly-started sink
     * creates its `_spark_metadata` log before the first batch commits,
     * and a reader in that window must see "no tier", not an
-    * "unable to infer schema" failure. Only the empty-sink condition
-    * is swallowed; any other read problem stays loud.
+    * "unable to infer schema" failure. The empty-sink condition is
+    * read off the sink log (no committed data file), so no failure is
+    * swallowed: any read problem stays loud.
     *
     * RELOCATION GUARD: a streaming file sink's `_spark_metadata` log
     * records ABSOLUTE file paths, so a database directory that was
@@ -916,13 +917,12 @@ object TsdbLayout {
     * this guard enforces instead of assuming. */
   private def readCommittedRoot(spark: SparkSession,
       path: String): Option[DataFrame] = {
-    if (!exists(hconf(spark), path)) return None
-    val df =
-      try ParquetDirs.read(spark, path)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("Unable to infer schema") => return None
-      }
+    // no committed data file (or no root) is "no tier", decided from
+    // the sink log on the driver: an empty root costs no Spark job.
+    // Reading with that schema is ParquetDirs.read, minus a second
+    // footer read
+    val schema = ParquetDirs.schemaOf(spark, path).getOrElse(return None)
+    val df = spark.read.schema(schema).parquet(path)
     val (f, hp) = hfs(hconf(spark), path)
     val rootUri = f.makeQualified(hp).toUri.toString.stripSuffix("/") + "/"
     // a log path on a DIFFERENT filesystem (hdfs:// log under a

@@ -215,11 +215,6 @@ object QueryParser {
       optLong(root, "limit"), optLong(root, "offset"))
   }
 
-  def parseSuggestJson(json: String): SuggestQuery = {
-    val root = readTree(json)
-    parseSuggest(root, selectOf(root))
-  }
-
   private def selectOf(root: JsonNode): String =
     clauses(root).text("select").getOrElse(
       throw new BadQuery("'select' field required"))

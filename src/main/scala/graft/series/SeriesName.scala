@@ -17,13 +17,6 @@ final case class SeriesName(metric: String, tags: SortedMap[String, String]) {
     else metric + " " + tags.iterator.map { case (k, v) => s"$k=$v" }.mkString(" ")
 
   def isEvent: Boolean = metric.startsWith("!")
-
-  /** PIVOT keeps only the listed tags; GROUP drops the listed tags — the two
-    * re-keying modes of `pivot-by-tag` / `group-by-tag`. */
-  def pivotByTag(keep: Seq[String]): SeriesName =
-    copy(tags = tags.filter { case (k, _) => keep.contains(k) })
-  def groupByTag(drop: Seq[String]): SeriesName =
-    copy(tags = tags.filterNot { case (k, _) => drop.contains(k) })
 }
 
 object SeriesName {

@@ -46,7 +46,7 @@ class TimeUtilSpec extends AnyFunSuite {
   }
 }
 
-class SeriesNameSpec extends AnyFunSuite {
+class SeriesNameSpec extends AnyFunSuite with SparkTestBase {
   test("canonical form sorts tags and normalizes spaces") {
     assert(SeriesName.canonicalize("cpu.user  host=h1   region=eu") ===
       "cpu.user host=h1 region=eu")
@@ -65,9 +65,16 @@ class SeriesNameSpec extends AnyFunSuite {
   }
 
   test("pivot keeps only listed tags; group drops listed tags") {
-    val sn = SeriesName.parse("m a=1 b=2 c=3")
-    assert(sn.pivotByTag(Seq("a")).render === "m a=1")
-    assert(sn.groupByTag(Seq("a")).render === "m b=2 c=3")
+    import spark.implicits._
+    val wide = Seq(("m", "1", "2", "3", 0L, 1.0))
+      .toDF("metric", "a", "b", "c", "ts", "value")
+    val e = new graft.engine.Engine(graft.model.TsdbContext.fromWide(spark,
+      wide, "metric", Seq("a", "b", "c"), "ts", "value"))
+    def outName(clause: String): String = e.execute(
+        s"""{"select": "m", "range": {"from": 0, "to": 10}, $clause}""")
+      .select("series").as[String].collect().toSeq.distinct.mkString
+    assert(outName(""""pivot-by-tag": ["a"]""") === "m a=1")
+    assert(outName(""""group-by-tag": ["a"]""") === "m b=2 c=3")
   }
 
   test("output naming helpers") {
@@ -236,7 +243,7 @@ class QueryParserSpec extends AnyFunSuite {
 
   test("search/suggest entry points reject missing 'select' as BadQuery, not NPE") {
     intercept[BadQuery](QueryParser.parseSearch("""{"limit": 5}"""))
-    intercept[BadQuery](QueryParser.parseSuggestJson("""{}"""))
+    intercept[BadQuery](QueryParser.parse("""{}"""))
     intercept[BadQuery](QueryParser.parseSearch("""{"""))
   }
 

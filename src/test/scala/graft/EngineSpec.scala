@@ -912,6 +912,9 @@ class EngineSpec extends AnyFunSuite with SparkTestBase {
     val eFmt = intercept[BadQuery](bare.executeRendered(
       s"""{"select": "purchase", $day, "output": {"format": "xml"}}""").count())
     assert(eFmt.getMessage.contains("bad output format: 'xml'"))
+    // a hand-built seasonal AST whose bin does not divide its period
+    assertThrows[BadQuery](bare.run(SeasonalQuery("purchase", 10L, 3L,
+      "0.25", "0.75", TimeRange(0L, 10L))))
   }
 
   test("knn/dedup programmatic misuse is BadQuery too — the AST constructors are public, not only the JSON path") {

@@ -240,7 +240,9 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     val dirs = new java.io.File(path).listFiles().map(_.getName)
     assert(dirs.exists(_.startsWith("split=")), dirs.toSeq.toString)
 
-    val test = CorpusLayout.readSplit(spark, path, "test")
+    // one split: the predicate prunes to its directories
+    val test = graft.model.ParquetDirs.read(spark, path)
+      .where(org.apache.spark.sql.functions.col("split") === "test")
     val plan = test.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("split"),
       s"split predicate must prune directories:\n$plan")

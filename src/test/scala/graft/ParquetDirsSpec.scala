@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -32,23 +29,6 @@ class ParquetDirsSpec extends AnyFunSuite with SparkTestBase {
   private def assertSameSchema(dir: String): Unit =
     assert(ParquetDirs.read(spark, dir).schema ===
       spark.read.parquet(dir).schema, dir)
-
-  /** Spark jobs `body` submits, counted between two listener-bus
-    * drains so the count holds exactly its own jobs. */
-  private def jobsOf(body: => Unit): Long = {
-    val jobs = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def drain(): Unit = org.apache.spark.sql.graftbridge.Bridge
-      .drainListenerBus(spark.sparkContext)
-    drain()
-    spark.sparkContext.addSparkListener(listener)
-    try { body; drain() }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
 
   private def ctxOf(rows: Seq[(String, Long, Double)]): TsdbContext =
     TsdbContext.fromWide(spark,
@@ -151,6 +131,20 @@ class ParquetDirsSpec extends AnyFunSuite with SparkTestBase {
     var opened: TsdbContext = null
     assert(jobsOf { opened = TsdbLayout.openDatabase(spark, db) } === 0L)
     assert(opened.series.count() === 2L, "the stream-registered series is in")
+
+    // sink roots that hold only their _spark_metadata log (a sink
+    // started, nothing committed): the open decides "no tier" from the
+    // log on the driver and returns the batch-tier view
+    val uncommitted = tmp("graft_pqdirs_uncommitted")
+    TsdbLayout.writeDatabase(
+      ctxOf((0 until 24).map(i => ("x", i * h, i.toDouble))), uncommitted)
+    Seq("samples_l0", "catalog_l0").foreach(root =>
+      new java.io.File(s"$uncommitted/$root/_spark_metadata").mkdirs())
+    assert(jobsOf {
+      opened = TsdbLayout.openDatabase(spark, uncommitted)
+    } === 0L)
+    assert(opened.samples.count() === 24L && opened.series.count() === 1L,
+      "the batch tier alone")
 
     val dir = tmp("graft_pqdirs_probe")
     val docs = (1L to 20L).map(i => (i, s"w$i w${i % 3} w${i % 5}"))

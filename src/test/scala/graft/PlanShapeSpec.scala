@@ -59,22 +59,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("inline resolution: no Spark job to plan; In(series_id) pushed") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     val q = SelectQuery("test", TimeRange(100, 300))
     pqEngine.select(q).queryExecution.sparkPlan // first use snapshots the catalog
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val df = try {
-      val df = pqEngine.select(q)
-      df.queryExecution.executedPlan
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get === 0, "resolving series must not run a Spark job")
+    var df: DataFrame = null
+    assert(jobsOf { df = pqEngine.select(q); df.queryExecution.executedPlan }
+      === 0L, "resolving series must not run a Spark job")
     val exec = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.initialPlan
@@ -174,22 +164,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("heavy-hitters planning runs no Spark job (total folded into the plan)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      import spark.implicits._
-      val df = Seq(("a", 1L, 10.0), ("b", 2L, 1.0)).toDF("series", "ts", "value")
-      graft.ops.ApplyNodes.node(df,
+    import spark.implicits._
+    val df = Seq(("a", 1L, 10.0), ("b", 2L, 1.0)).toDF("series", "ts", "value")
+    assert(jobsOf(graft.ops.ApplyNodes.node(df,
         ApplySpec("heavy-hitters", Map("portion" -> 0.1, "error" -> 0.01)),
-        Seq("value"))
-      Thread.sleep(300) // let any job-start event surface
-      assert(jobs.get === 0,
-        "building the heavy-hitters plan must not trigger an action (was a .first())")
-    } finally spark.sparkContext.removeSparkListener(listener)
+        Seq("value"))) === 0L,
+      "building the heavy-hitters plan must not trigger an action (was a .first())")
   }
 
   test("embedding near-dup default plans as a bucket equi-join, never nested-loop") {
@@ -1127,18 +1107,23 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .write.parquet(s"$dir/hist")
     val eng = new Engine(base.copy(
       histograms = Seq(100L -> spark.read.parquet(s"$dir/hist"))))
-    val q =
+    // per series, and group-by-tag: the three series pool their counts
+    // under one name before the one quantile tail
+    for (q <- Seq(
       """{"quantile": {"metric": "test", "p": [0.5, 0.9]},
-         "range": {"from": 100, "to": 300}}"""
-    val served = eng.execute(q)
-    val scans = plan(served).collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty && scans.forall { f =>
-      val loc = f.metadata("Location")
-      loc.contains("/hist") || loc.contains("/series")
-    }, s"aligned quantile must not scan facts:\n${scans.map(_.metadata("Location"))}")
-    // serving changes the plan, never the answer
-    assert(served.collect().toSeq ===
-      new Engine(base).execute(q).collect().toSeq)
+         "range": {"from": 100, "to": 300}}""",
+      """{"quantile": {"metric": "test", "p": [0.5, 0.9]},
+         "range": {"from": 100, "to": 300}, "group-by-tag": ["tag"]}""")) {
+      val served = eng.execute(q)
+      val scans = plan(served).collect { case f: FileSourceScanExec => f }
+      assert(scans.nonEmpty && scans.forall { f =>
+        val loc = f.metadata("Location")
+        loc.contains("/hist") || loc.contains("/series")
+      }, s"aligned quantile must not scan facts:\n${scans.map(_.metadata("Location"))}")
+      // serving changes the plan, never the answer
+      assert(served.collect().toSeq ===
+        new Engine(base).execute(q).collect().toSeq)
+    }
     // a misaligned range cannot split a window's counts -> fact scan
     val mis = eng.execute(
       """{"quantile": {"metric": "test", "p": [0.5]},
@@ -1234,17 +1219,23 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     graft.engine.Rollup.write(base.samples, s"$dir/rollup", 100L)
     val eng = new Engine(base.copy(
       rollups = Seq(100L -> spark.read.parquet(s"$dir/rollup"))))
-    val q = """{"active": {"metric": "test"},
-                "range": {"from": 0, "to": 400}}"""
-    val served = eng.execute(q)
-    val dirs = plan(served)
-      .collect { case f: FileSourceScanExec => f.metadata("Location") }
-    assert(dirs.exists(_.contains("/rollup")) &&
-      !dirs.exists(_.contains("/samples")),
-      s"aligned active must count from rollup bins, not facts: $dirs")
-    assert(served.collect().toSeq ===
-      new Engine(base).execute(q).collect().toSeq,
-      "serving changes the plan, never the answer")
+    // unstepped, and stepped (the step a whole number of rollup bins):
+    // both forms share the one count tail over activity rows
+    for (q <- Seq(
+      """{"active": {"metric": "test"},
+                "range": {"from": 0, "to": 400}}""",
+      """{"active": {"metric": "test", "step": "1us"},
+                "range": {"from": 0, "to": 400}}""")) {
+      val served = eng.execute(q)
+      val dirs = plan(served)
+        .collect { case f: FileSourceScanExec => f.metadata("Location") }
+      assert(dirs.exists(_.contains("/rollup")) &&
+        !dirs.exists(_.contains("/samples")),
+        s"aligned active must count from rollup bins, not facts: $dirs")
+      assert(served.collect().toSeq ===
+        new Engine(base).execute(q).collect().toSeq,
+        "serving changes the plan, never the answer")
+    }
     // a misaligned range could hide a series' only sample in a partial
     // bin — must fall back to the scan
     val mis = eng.execute(
@@ -1377,6 +1368,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     servedEqualsScan(
       """{"trend": {"metric": ["m1", "m2"], "step": "2us"},
          "range": {"from": 0, "to": 40000}}""", "aligned trend")
+    // the lag and horizon ride the one tail each statement keeps
+    servedEqualsScan(
+      """{"correlate": {"metric": ["m1", "m2"], "step": "1us", "lag": "3us"},
+         "range": {"from": 0, "to": 40000}}""", "aligned lagged correlate")
+    servedEqualsScan(
+      """{"trend": {"metric": ["m1", "m2"], "step": "2us", "horizon": "10us"},
+         "range": {"from": 0, "to": 40000}}""", "aligned trend with horizon")
     // changepoints consumes the same served bucket-mean frame: the m1
     // ramp's window means differ by w·slope ≈ 4/3 > 1.0 at every full
     // boundary, so the served flags are real arithmetic, scan-equal

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -41,6 +44,25 @@ trait SparkTestBase {
       r.getString(r.fieldIndex("series")),
       r.getLong(r.fieldIndex("ts")),
       r.getDouble(r.fieldIndex("value"))))
+
+  /** Spark jobs `body` submits, counted between two listener-bus
+    * drains: events still queued from earlier work are delivered before
+    * counting starts, and every event `body` caused is delivered before
+    * the count is read, so the count holds exactly its own jobs. */
+  def jobsOf(body: => Any): Long = {
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.sql.graftbridge.Bridge
+      .drainListenerBus(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drain() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 
   /** The file scans of a frame's pre-AQE physical plan. */
   def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
