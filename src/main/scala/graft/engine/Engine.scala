@@ -618,10 +618,9 @@ final class Engine(val ctx: TsdbContext,
         keys)
     }
     val qs = graft.ops.HistQuantiles.quantiles(hist, keys, q.ps)
-    if (q.stepNs.isEmpty) qs.orderBy("series", "p")
-    else qs.select(col("series"), expr("__bin div 1000").as("ts_us"),
-        col("p"), col("q"))
-      .orderBy("series", "ts_us", "p")
+    if (q.stepNs.isEmpty) ordered(qs, Seq(col("series"), col("p")))
+    else ordered(qs.select(col("series"), expr("__bin div 1000").as("ts_us"),
+        col("p"), col("q")), Seq(col("series"), col("ts_us"), col("p")))
   }
 
   /** Quantile serving from a REGISTERED histogram index
@@ -691,8 +690,8 @@ final class Engine(val ctx: TsdbContext,
           expr(s"pmod(ts, ${q.periodNs}L) div ${q.binNs}L").as("phase"),
           col("value")),
         Seq("series", "phase")))
-    graft.ops.Monitoring.bandsFromHist(hist, "series", q.pLo, q.pHi)
-      .orderBy("series", "phase")
+    ordered(graft.ops.Monitoring.bandsFromHist(hist, "series", q.pLo, q.pHi),
+      Seq(col("series"), col("phase")))
   }
 
   /** Seasonal-band serving from the SAME registered histogram index the
@@ -731,11 +730,11 @@ final class Engine(val ctx: TsdbContext,
     * (series, start_us, end_us, n, min, max). */
   def sessions(q: SessionsQuery): DataFrame = {
     val ids = resolvedIds(Seq(q.metric), q.where, None, location = q.location)
-    graft.ops.Monitoring.sessions(
+    ordered(graft.ops.Monitoring.sessions(
         scan(ids, q.range, Seq(q.metric))
           .select(col("out_name").as("series"), col("ts"), col("value")),
-        q.gapNs, keyCol = "series")
-      .orderBy("series", "start_us")
+        q.gapNs, keyCol = "series"),
+      Seq(col("series"), col("start_us")))
   }
 
   /** Beyond-reference `gaps`: per-series silence intervals within the
@@ -776,11 +775,11 @@ final class Engine(val ctx: TsdbContext,
         throw new BadQuery(
           "gaps requires exactly one of 'min-gap' or 'factor'")
     }
-    flagged.select(col("series"),
+    ordered(flagged.select(col("series"),
         expr("gap_start div 1000").as("gap_start_us"),
         expr("gap_end div 1000").as("gap_end_us"),
-        expr("gap_ns div 1000").as("gap_us"))
-      .orderBy("series", "gap_start_us")
+        expr("gap_ns div 1000").as("gap_us")),
+      Seq(col("series"), col("gap_start_us")))
   }
 
   /** Beyond-reference `anomaly`: per-series robust outliers — ranged
@@ -823,11 +822,11 @@ final class Engine(val ctx: TsdbContext,
             graft.ops.Monitoring.madIndexSampled(s, "series", r), "series", q.c)
       }
     }
-    flagged.where(col("is_anomaly"))
+    ordered(flagged.where(col("is_anomaly"))
       .select(col("series"), expr("ts div 1000").as("ts_us"),
         round(col("value"), 6).as("value"),
-        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"))
-      .orderBy("series", "ts_us", "value")
+        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad")),
+      Seq(col("series"), col("ts_us"), col("value")))
   }
 
   /** Beyond-reference `stale`: registered series of the metric whose
@@ -853,12 +852,12 @@ final class Engine(val ctx: TsdbContext,
       .getOrElse(scan(ids, q.range, Seq(q.metric))
         .groupBy(col("out_name").as("series"))
         .agg(max(col("ts")).as("__last")))
-    ids.select(col("out_name").as("series"))
+    ordered(ids.select(col("out_name").as("series"))
       .join(last, Seq("series"), "left_outer")
       .where(col("__last").isNull ||
         col("__last") < q.range.to - q.olderThanNs)
-      .select(col("series"), expr("__last div 1000").as("last_ts_us"))
-      .orderBy("series")
+      .select(col("series"), expr("__last div 1000").as("last_ts_us")),
+      Seq(col("series")))
   }
 
   /** Beyond-reference `active`: per-metric count of DISTINCT series
@@ -917,16 +916,16 @@ final class Engine(val ctx: TsdbContext,
   private def finishActive(q: ActiveQuery, rows: DataFrame): DataFrame =
     q.stepNs match {
       case None =>
-        rows.groupBy(col("out_name").as("metric"))
-          .agg(countDistinct(col("series_id")).as("n_series"))
-          .orderBy("metric")
+        ordered(rows.groupBy(col("out_name").as("metric"))
+          .agg(countDistinct(col("series_id")).as("n_series")),
+          Seq(col("metric")))
       case Some(step) =>
-        rows.groupBy(col("out_name").as("metric"),
+        ordered(rows.groupBy(col("out_name").as("metric"),
             binOf(col("__t"), q.range, step).as("__bin"))
           .agg(countDistinct(col("series_id")).as("n_series"))
           .select(col("metric"), expr("__bin div 1000").as("ts_us"),
-            col("n_series"))
-          .orderBy("metric", "ts_us")
+            col("n_series")),
+          Seq(col("metric"), col("ts_us")))
     }
 
   /** Beyond-reference `distinct`: per-metric ESTIMATED distinct values
@@ -1014,19 +1013,19 @@ final class Engine(val ctx: TsdbContext,
   private def finishDistinct(q: DistinctQuery, df: DataFrame): DataFrame =
     q.stepNs match {
       case None =>
-        graft.ops.Sketches.kmvServeKeys(
+        ordered(graft.ops.Sketches.kmvServeKeys(
             df.select(col("out_name").as("metric"), col("__h").as("h")),
-            Seq("metric"), q.k)
-          .orderBy("metric")
+            Seq("metric"), q.k),
+          Seq(col("metric")))
       case Some(step) =>
-        graft.ops.Sketches.kmvServeKeys(
+        ordered(graft.ops.Sketches.kmvServeKeys(
             df.select(col("out_name").as("metric"),
               binOf(col("__t"), q.range, step).as("__bin"),
               col("__h").as("h")),
             Seq("metric", "__bin"), q.k)
           .select(col("metric"), expr("__bin div 1000").as("ts_us"),
-            col("n_kept"), col("est_distinct"))
-          .orderBy("metric", "ts_us")
+            col("n_kept"), col("est_distinct")),
+          Seq(col("metric"), col("ts_us")))
     }
 
   /** Beyond-reference `correlate`: Pearson correlation between the
@@ -1037,10 +1036,10 @@ final class Engine(val ctx: TsdbContext,
     * different ranges share one grid. Output:
     * (key_a, key_b, n_buckets, corr), key_a < key_b. */
   def correlate(q: CorrelateQuery): DataFrame =
-    graft.ops.Stats.corrFromBucketMeans(
+    ordered(graft.ops.Stats.corrFromBucketMeans(
         bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
-        "metric", lagBuckets = q.lagNs / q.stepNs)
-      .orderBy("key_a", "key_b")
+        "metric", lagBuckets = q.lagNs / q.stepNs),
+      Seq(col("key_a"), col("key_b")))
 
   /** The reduced input of every bucket-mean statement (`correlate`,
     * `trend`, `autocorr`, `changepoints`): the (metric, __b, __m)
@@ -1098,10 +1097,10 @@ final class Engine(val ctx: TsdbContext,
     * ladder) serves aligned statements through [[bucketMeansFor]].
     * Output: (metric, lag, n_buckets, corr), lag in steps. */
   def autocorr(q: AutocorrQuery): DataFrame =
-    graft.ops.Stats.autocorrFromBucketMeans(
+    ordered(graft.ops.Stats.autocorrFromBucketMeans(
         bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
-        "metric", q.lagsNs.map(_ / q.stepNs))
-      .orderBy("metric", "lag")
+        "metric", q.lagsNs.map(_ / q.stepNs)),
+      Seq(col("metric"), col("lag")))
 
   /** Beyond-reference `changepoints`: per-metric level shifts of the
     * bucket-mean series over the range
@@ -1111,10 +1110,10 @@ final class Engine(val ctx: TsdbContext,
     * index serves aligned statements through [[bucketMeansFor]].
     * Output: (metric, ts_us, before_mean, after_mean, shift). */
   def changepoints(q: ChangepointsQuery): DataFrame =
-    graft.ops.Stats.levelShifts(
+    ordered(graft.ops.Stats.levelShifts(
         bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
-        "metric", q.stepNs, q.window, q.minShift)
-      .orderBy("metric", "ts_us")
+        "metric", q.stepNs, q.window, q.minShift),
+      Seq(col("metric"), col("ts_us")))
 
   /** Beyond-reference `trend`: per-metric OLS trend of the bucket-mean
     * series over the range plus the extrapolated value `horizon` past
@@ -1124,10 +1123,10 @@ final class Engine(val ctx: TsdbContext,
     * (metric, n_buckets, slope, forecast, ts_us), slope in units per
     * step. */
   def trend(q: TrendQuery): DataFrame =
-    graft.ops.Stats.trendFromBucketMeans(
+    ordered(graft.ops.Stats.trendFromBucketMeans(
         bucketMeansFor(q.metrics, q.where, q.location, q.range, q.stepNs),
-        "metric", q.stepNs, horizonBuckets = q.horizonNs / q.stepNs)
-      .orderBy("metric")
+        "metric", q.stepNs, horizonBuckets = q.horizonNs / q.stepNs),
+      Seq(col("metric")))
 
   // ------------------------------------------------------------- aggregate
 
@@ -1203,9 +1202,8 @@ final class Engine(val ctx: TsdbContext,
           col("r.value").as("value"))
     }
     val df = parts.reduce(_ unionByName _)
-    val out = ApplyNodes.chain(df, q.apply, Seq("value"))
-      .orderBy(col("series"), col("ts"))
-    limitOffset(out, q.limit, q.offset)
+    ordered(ApplyNodes.chain(df, q.apply, Seq("value")),
+      Seq(col("series"), col("ts")), q.limit, q.offset)
   }
 
   // ------------------------------------------------------- group-aggregate
@@ -1607,15 +1605,15 @@ final class Engine(val ctx: TsdbContext,
 
   def search(q: SearchQuery): DataFrame = {
     val base = if (q.metric.isEmpty) catalog else seriesFor(Seq(q.metric), q.where)
-    val out = base.select(col("series_id"), col("name")).orderBy("name")
-    limitOffset(out, q.limit, q.offset)
+    ordered(base.select(col("series_id"), col("name")), Seq(col("name")),
+      q.limit, q.offset)
   }
 
   /** Regex match over full series names — the reference's
     * PlainSeriesMatcher::regex_match (plain_series_matcher.h:87-89). */
   def searchRegex(pattern: String): DataFrame =
-    catalog.where(col("name").rlike(pattern))
-      .select(col("series_id"), col("name")).orderBy("name")
+    ordered(catalog.where(col("name").rlike(pattern))
+      .select(col("series_id"), col("name")), Seq(col("name")))
 
   /** Fuzzy series resolution (SeriesRetreiver::fuzzy_match,
     * queryparser.cc:210-275 — vestigial in the reference): the metric is
@@ -1625,30 +1623,30 @@ final class Engine(val ctx: TsdbContext,
     * canonical name; here the catalog's tags map makes that a direct
     * lookup — same result, no regex engine on the hot path). */
   def searchFuzzy(metricPrefix: String, where: Where = Where.All): DataFrame =
-    whereCond(catalog.where(col("metric").startsWith(metricPrefix)), where)
-      .select(col("series_id"), col("name")).orderBy("name")
+    ordered(whereCond(catalog.where(col("metric").startsWith(metricPrefix)), where)
+      .select(col("series_id"), col("name")), Seq(col("name")))
 
   def suggest(q: SuggestQuery): DataFrame = {
     val sw = q.startsWith.getOrElse("")
     val base = q.kind match {
       case SuggestKind.MetricNames =>
         catalog.select(col("metric").as("name")).distinct()
-          .where(col("name").startsWith(sw)).orderBy("name")
+          .where(col("name").startsWith(sw))
       case SuggestKind.TagNames =>
         val base = q.metric.map(m => catalog.where(col("metric") === m))
           .getOrElse(catalog)
         base.select(explode(map_keys(col("tags"))).as("name")).distinct()
-          .where(col("name").startsWith(sw)).orderBy("name")
+          .where(col("name").startsWith(sw))
       case SuggestKind.TagValues =>
         val tag = q.tag.getOrElse(throw new BadQuery("suggest tag-values needs 'tag'"))
         val base = q.metric.map(m => catalog.where(col("metric") === m))
           .getOrElse(catalog)
         base.select(col("tags").getItem(tag).as("name"))
           .where(col("name").isNotNull && col("name").startsWith(sw))
-          .distinct().orderBy("name")
+          .distinct()
     }
     // reference: suggest results flow through the same Limiter node chain
-    limitOffset(base, q.limit, q.offset)
+    ordered(base, Seq(col("name")), q.limit, q.offset)
   }
 
   // ----------------------------------------------------------- primitives
@@ -1845,15 +1843,46 @@ final class Engine(val ctx: TsdbContext,
   private def finish(df: DataFrame, orderBy: OrderBy, forward: Boolean,
       limit: Option[Long], offset: Option[Long]): DataFrame = {
     val ts = if (forward) col("ts").asc else col("ts").desc
-    val ordered = orderBy match {
-      case OrderBy.Series => df.orderBy(col("series").asc, ts)
-      case OrderBy.Time   => df.orderBy(ts, col("series").asc)
-    }
-    limitOffset(ordered, limit, offset)
+    ordered(df, orderBy match {
+      case OrderBy.Series => Seq(col("series").asc, ts)
+      case OrderBy.Time   => Seq(ts, col("series").asc)
+    }, limit, offset)
   }
 
-  private def limitOffset(df: DataFrame, limit: Option[Long], offset: Option[Long]): DataFrame = {
-    val afterOffset = offset.filter(_ > 0).map(o => df.offset(o.toInt)).getOrElse(df)
-    limit.map(l => afterOffset.limit(l.toInt)).getOrElse(afterOffset)
-  }
+  /** The ONE ordering of every answer tail: `df` sorted by `keys`, then
+    * paged by `offset`/`limit`.
+    *
+    *   - A page keeps `orderBy`, which plans a take-ordered top-k (a
+    *     bounded heap per task, no sampling job).
+    *   - An unpaged answer whose optimizer estimate ([[graft.PlanSize]])
+    *     is at most what Spark reads in one task (the session's
+    *     `spark.sql.files.maxPartitionBytes`) sorts in ONE task:
+    *     `coalesce(1)` is narrow, so there is no range exchange and no
+    *     `RangePartitioner` sampling job over the input — the reference
+    *     never sorts globally either (its per-series runs are already
+    *     ordered). The last stage, back to the previous exchange or the
+    *     scan, runs as that one task.
+    *   - An unknown or larger estimate keeps the range sort (`orderBy`).
+    *
+    * The estimate is read off the one-task frame itself: a sort and a
+    * coalesce pass their input's estimate through, and the optimized
+    * plan stays cached on the frame that is returned, so the small case
+    * pays no second optimizer pass.
+    *
+    * Both sorts order rows identically; rows that tie on every key may
+    * come out in a different order (EquivalenceSpec pins this). */
+  private def ordered(df: DataFrame, keys: Seq[Column],
+      limit: Option[Long] = None, offset: Option[Long] = None): DataFrame =
+    if (limit.nonEmpty || offset.exists(_ > 0)) {
+      val sorted = df.orderBy(keys: _*)
+      val afterOffset =
+        offset.filter(_ > 0).map(o => sorted.offset(o.toInt)).getOrElse(sorted)
+      limit.map(l => afterOffset.limit(l.toInt)).getOrElse(afterOffset)
+    } else {
+      val oneTask = df.coalesce(1).sortWithinPartitions(keys: _*)
+      val taskBytes = oneTask.queryExecution.sparkSession.sessionState.conf
+        .filesMaxPartitionBytes
+      if (graft.PlanSize.estimate(oneTask).exists(_ <= taskBytes)) oneTask
+      else df.orderBy(keys: _*)
+    }
 }

@@ -49,13 +49,10 @@ private[pipeline] object StagedStore {
     * chain back to the previous exchange (or the scan) into the chosen
     * task count. Exchanges upstream of that keep their parallelism. */
   def sizedForWrite(df: DataFrame, sizeFrom: Option[DataFrame] = None)
-      : DataFrame = {
-    val est = sizeFrom.getOrElse(df)
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= 0 || est >= BigInt(Long.MaxValue) / 4) df
-    else df.coalesce((((est + TargetFileBytes - 1) / TargetFileBytes)
-      min 4096 max 1).toInt)
-  }
+      : DataFrame =
+    graft.PlanSize.estimate(sizeFrom.getOrElse(df)).fold(df)(est =>
+      df.coalesce((((est + TargetFileBytes - 1) / TargetFileBytes)
+        min 4096 max 1).toInt))
 
   private def pendingDirs(spark: SparkSession, dir: String,
       prefix: String): Seq[org.apache.hadoop.fs.Path] =

@@ -18,7 +18,7 @@ import graft.pipeline.{CorpusStore, Dedup, EmbeddingStore, Similarity}
   * its positional arguments:
   *
   * {{{
-  * runMain graft.tools.Probe entries    <sfDir> [--plans <outDir> <suffix>] [--jobs] <name> ...
+  * runMain graft.tools.Probe entries    <sfDir> [--plans <outDir> <suffix>] [--jobs] [--collect] <name> ...
   * runMain graft.tools.Probe replica    <srcDir> <destDir> <copies> [documents|events|all]
   * runMain graft.tools.Probe l0day      <sfDir> [--events] <days> ...
   * runMain graft.tools.Probe rebuild    <sfDir> <days> ...
@@ -52,8 +52,9 @@ object Probe {
         val plans =
           if (at < 0) None else Some((a(at + 1), a(at + 2)))
         val rest = (if (at < 0) a else a.patch(at, Nil, 3))
-          .filterNot(_ == "--jobs")
-        entries(_, rest.head, rest.tail, plans, jobLines = a.contains("--jobs"))
+          .filterNot(Set("--jobs", "--collect"))
+        entries(_, rest.head, rest.tail, plans, jobLines = a.contains("--jobs"),
+          collect = a.contains("--collect"))
       case "replica" =>
         replica(_, a(0), a(1), a(2).toInt, a.lift(3).getOrElse("documents"))
       case "l0day" =>
@@ -107,10 +108,15 @@ object Probe {
     *
     * `jobLines = true` is the job census: before its `ENTRY` line each
     * run also prints one [[jobLine]] per job it submitted, so a job
-    * floor is read off by call site instead of guessed. */
+    * floor is read off by call site instead of guessed.
+    *
+    * `collect = true` times `collect()` instead of `count()`: the shape
+    * a caller that reads the answer pays. Under `count()` Catalyst drops
+    * the answer's final sort and unused projections, so only this shape
+    * shows what ordering the rows costs. */
   def entries(spark: SparkSession, sfDir: String, names: Seq[String],
       plans: Option[(String, String)] = None,
-      jobLines: Boolean = false): Seq[EntryRun] = {
+      jobLines: Boolean = false, collect: Boolean = false): Seq[EntryRun] = {
     val jobs, stages, tasks, sw, sr = new AtomicLong
     val started =
       new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
@@ -155,7 +161,8 @@ object Probe {
               org.apache.spark.sql.execution.FormattedMode))
           println(s"PLANDUMP wrote $file")
         }
-        val (n, tAct) = wall(df.count())
+        val (n, tAct) =
+          wall(if (collect) df.collect().length.toLong else df.count())
         (n, tBuild + tAct)
       } finally ScopedCache.release()
       drain()

@@ -249,12 +249,14 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed === expect)
   }
 
-  test("resolved ids inline and through the join agree for every statement kind") {
+  /** Metrics `a`, `b` and the event metric `!e`, 4 data-bearing series
+    * each (tags dc, host): 400 samples 10 µs apart, h3 silent over
+    * [2 ms, 2.5 ms), one planted spike on a/h1. A rollup, a histogram
+    * index and a bucket-sums index at 100 µs serve the aligned
+    * statements. */
+  private lazy val indexed: TsdbContext = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    // 4 data-bearing series per metric: 400 samples 10 µs apart, h3
-    // silent over [2 ms, 2.5 ms), one planted spike on a/h1
     val hosts = Seq("h0" -> "d0", "h1" -> "d0", "h2" -> "d1", "h3" -> "d1")
     val rows = for {
       (m, mi) <- Seq("a", "b", "!e").zipWithIndex
@@ -266,15 +268,8 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val live = TsdbContext.fromWide(spark,
       rows.toDF("metric", "host", "dc", "ts", "value"),
       "metric", Seq("dc", "host"), "ts", "value")
-    // more than MaxInlineSeries silent series per metric: a statement
-    // resolving a whole metric then crosses to the join regime
-    val silent = TsdbContext.fromWide(spark,
-      (for (m <- Seq("a", "b", "!e"); i <- 0 to Engine.MaxInlineSeries)
-        yield (m, s"s$i", "d9", 0L, 0.0))
-        .toDF("metric", "host", "dc", "ts", "value"),
-      "metric", Seq("dc", "host"), "ts", "value").series
     val fine = 100000L
-    val indexed = live.copy(
+    live.copy(
       events = live.samples.selectExpr("series_id", "ts",
         "CAST(value AS STRING) AS body"),
       rollups = Seq(fine -> graft.engine.Rollup.build(live.samples, fine)),
@@ -283,6 +278,18 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
         Seq("series_id", "win"))),
       bucketSums = Seq(fine ->
         graft.ops.Stats.bucketSums(live.samples, fine, keyCol = "series_id")))
+  }
+
+  test("resolved ids inline and through the join agree for every statement kind") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // more than MaxInlineSeries silent series per metric: a statement
+    // resolving a whole metric then crosses to the join regime
+    val silent = TsdbContext.fromWide(spark,
+      (for (m <- Seq("a", "b", "!e"); i <- 0 to Engine.MaxInlineSeries)
+        yield (m, s"s$i", "d9", 0L, 0.0))
+        .toDF("metric", "host", "dc", "ts", "value"),
+      "metric", Seq("dc", "host"), "ts", "value").series
     val inline = new Engine(indexed)
     val joined = new Engine(indexed.copy(
       series = indexed.series.unionByName(silent)))
@@ -346,5 +353,102 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
       .sortBy(_.toString).toSeq)
     assert(b.count(x => x.head.toString.contains("d9") && x(1) == null) ===
       Engine.MaxInlineSeries + 1)
+  }
+
+  test("answer ordering is identical below and above the one-task sort gate") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    val engine = new Engine(indexed)
+    val r = """"range": {"from": 0, "to": 4000000}"""
+    val b = """"range": {"from": 4000000, "to": 0}"""
+    val u = """"range": {"from": 50000, "to": 3950000}"""
+    val bySeries = Seq("series", "ts")
+    val byTime = Seq("ts", "series")
+    // the statements that take an order-by, each way and in both range
+    // directions: series order is (series, ts), time order (ts, series)
+    val ordered = for {
+      rng <- Seq(r, b)
+      (order, keys) <- Seq("series" -> bySeries, "time" -> byTime)
+      stmt <- Seq(
+        """"select": "a"""",
+        """"select-events": "!e"""",
+        """"group-aggregate": {"metric": "a", "step": "400us",
+            "func": ["min", "max"]}""",
+        """"join": ["a", "b"]""",
+        """"asof-join": {"left": "a", "right": "b"}""",
+        """"group-aggregate-join": {"metric": ["a", "b"], "step": "400us",
+            "func": "max"}""")
+    } yield (s"""{$stmt, $rng, "order-by": "$order"}""", keys)
+    // every other answer tail, forward and backward, with the keys it
+    // orders by
+    val fixed = Seq(
+      s"""{"aggregate": {"a": ["min", "max"], "b": "mean"}, $u}""" ->
+        bySeries,
+      """{"quantile": {"metric": "a", "p": [0.5, 0.9]}, RANGE}""" ->
+        Seq("series", "p"),
+      """{"quantile": {"metric": "a", "p": [0.5], "step": "1ms"}, RANGE}""" ->
+        Seq("series", "ts_us", "p"),
+      """{"seasonal": {"metric": "a", "period": "1ms", "bin": "200us"},
+          RANGE}""" -> Seq("series", "phase"),
+      """{"sessions": {"metric": "a", "gap": "100us"}, RANGE}""" ->
+        Seq("series", "start_us"),
+      """{"gaps": {"metric": "a", "min-gap": "100us"}, RANGE}""" ->
+        Seq("series", "gap_start_us"),
+      """{"anomaly": {"metric": "a", "c": 3.0}, RANGE}""" ->
+        Seq("series", "ts_us", "value"),
+      """{"active": {"metric": ["a", "b"], "step": "1ms"}, RANGE}""" ->
+        Seq("metric", "ts_us"),
+      """{"active": {"metric": ["a", "b"]}, RANGE}""" -> Seq("metric"),
+      """{"distinct": {"metric": ["a", "b"], "tag": "host", "k": 4},
+          RANGE}""" -> Seq("metric"),
+      """{"distinct": {"metric": ["a"], "tag": "dc", "k": 4, "step": "1ms"},
+          RANGE}""" -> Seq("metric", "ts_us"),
+      """{"correlate": {"metric": ["a", "b"], "step": "200us"}, RANGE}""" ->
+        Seq("key_a", "key_b"),
+      """{"autocorr": {"metric": ["a"], "step": "100us",
+          "lags": ["100us", "1ms"]}, RANGE}""" -> Seq("metric", "lag"),
+      """{"changepoints": {"metric": ["a"], "step": "100us", "window": 3,
+          "min-shift": 5.0}, RANGE}""" -> Seq("metric", "ts_us"),
+      """{"trend": {"metric": ["a", "b"], "step": "100us"}, RANGE}""" ->
+        Seq("metric"))
+      .flatMap { case (q, keys) =>
+        Seq(r, b).map(rng => q.replace("RANGE", rng) -> keys).distinct }
+    // one form each: stale is forward-only, the catalog statements
+    // take no range
+    val singleForm = Seq(
+      """{"stale": {"metric": "a", "older-than": "500us"},
+          "range": {"from": 0, "to": 5000000}}""" -> Seq("series"),
+      """{"select": "meta:names:a"}""" -> Seq("name"),
+      """{"select": "tag-values", "metric": "a", "tag": "host"}""" ->
+        Seq("name"),
+      """{"select": "tag-names"}""" -> Seq("name"))
+
+    /** The answer's sort-key sequence, and its rows grouped by key as
+      * multisets (rows tying on every key may come out in any order). */
+    def answer(df: DataFrame, keys: Seq[String]) = {
+      val rows = df.collect().toSeq
+      def key(row: org.apache.spark.sql.Row) = keys.map(k => row.get(row.fieldIndex(k)))
+      (rows.map(key), rows.groupBy(key).map { case (k, rs) =>
+        k -> rs.map(x => norm(x.toSeq)).sortBy(_.toString) })
+    }
+    def globalSort(df: DataFrame): Option[Boolean] =
+      Some(df.queryExecution.optimizedPlan).collect { case s: Sort => s.global }
+    // a 2^60-byte one-task read puts every known estimate below the
+    // gate, a 1-byte one every estimate above it
+    for ((q, keys) <- ordered ++ fixed ++ singleForm) {
+      val (below, oneTask) = withSessionConf(MaxPartitionBytes, (1L << 60).toString) {
+        val df = engine.execute(q)
+        (answer(df, keys), globalSort(df))
+      }
+      val (above, ranged) = withSessionConf(MaxPartitionBytes, "1") {
+        val df = engine.execute(q)
+        (answer(df, keys), globalSort(df))
+      }
+      assert(oneTask === Some(false) && ranged === Some(true),
+        s"the gate must pick the one-task sort below and the range sort above: $q")
+      assert(below._1.nonEmpty, s"empty answer proves nothing: $q")
+      assert(below._1 === above._1, s"sort-key sequences differ across the gate: $q")
+      assert(below._2 === above._2, s"rows differ across the gate: $q")
+    }
   }
 }

@@ -33,20 +33,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       spark.read.parquet(s"$dir/events")))
   }
 
-  /** Pre-AQE physical plan (structurally inspectable). */
+  /** Pre-AQE physical plan (structurally inspectable). It is taken
+    * before exchanges are inserted, so exchange checks use [[prepared]]. */
   private def plan(df: DataFrame): SparkPlan = df.queryExecution.sparkPlan
+
+  /** The physical plan with its exchanges, as adaptive execution starts
+    * from it (its initial plan; before any query stage runs). */
+  private def prepared(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case other => other
+    }
 
   test("select: ids inline or broadcast; facts never shuffle") {
     // a small resolution becomes a filter on the fact scan: no join at
-    // all, and the only exchange is the ordered output's range
-    // partitioning above the scan
-    val p = plan(engine.select(SelectQuery("test", TimeRange(100, 300))))
+    // all, and the small answer sorts in one task, so no exchange at all
+    val df = engine.select(SelectQuery("test", TimeRange(100, 300)))
+    val p = plan(df)
     assert(p.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
       .isEmpty, s"an inline resolution must not join:\n$p")
-    assert(p.collect { case e: ShuffleExchangeExec => e }.forall(
-        _.outputPartitioning.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
-      s"fact side must not shuffle for selection:\n$p")
+    val pe = prepared(df)
+    assert(pe.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"an inline selection must plan no exchange:\n$pe")
     // more resolved series than Engine.MaxInlineSeries: the catalog join
     // broadcasts, and its streamed (fact) side has no shuffle below it
     val wide = new Engine(rampContext(1 to Engine.MaxInlineSeries + 1, 100, 102))
@@ -131,6 +140,49 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(pushed.contains("GreaterThanOrEqual(ts,100)") &&
         pushed.contains("GreaterThan(value,15.0)") && filtersSeriesIds(fact),
       s"ts range, value and series_id predicates should reach the parquet reader: $pushed")
+  }
+
+  test("ordered answers: one-task sort below the size gate, range sort above it, top-k with a limit") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{CoalesceExec, SortExec,
+      TakeOrderedAndProjectExec}
+    val q = SelectQuery("test", TimeRange(100, 300))
+    pqEngine.select(q).queryExecution.sparkPlan // first use snapshots the catalog
+    def exchanges(df: DataFrame) =
+      prepared(df).collect { case e: ShuffleExchangeExec => e }
+    // below the gate (the session's 128 MB one-task read): the parquet
+    // select coalesces to one partition and sorts there — no exchange,
+    // so no range-sort sampling job; the scan and the sort are one job
+    val small = pqEngine.select(q)
+    val ps = prepared(small)
+    assert(exchanges(small).isEmpty &&
+        ps.collect { case c: CoalesceExec if c.numPartitions == 1 => c }.nonEmpty &&
+        ps.collect { case s: SortExec => s.global } === Seq(false),
+      s"a small ordered answer must sort in one task:\n$ps")
+    var rows: Seq[(String, Long, Double)] = Nil
+    assert(jobsOf { rows = collectSeries(small) } === 1L)
+    // above the gate (a 4 KB read size, below this answer's ~12 KB
+    // estimate, stands in for an answer too big for one task): the
+    // range sort, its sampling job included
+    val (big, bigRows, bigJobs) = withSessionConf(MaxPartitionBytes, "4096") {
+      val df = pqEngine.select(q)
+      var got: Seq[(String, Long, Double)] = Nil
+      val n = jobsOf { got = collectSeries(df) }
+      (df, got, n)
+    }
+    assert(exchanges(big).map(_.outputPartitioning).exists(
+        _.isInstanceOf[RangePartitioning]) &&
+        prepared(big).collect { case s: SortExec => s.global } === Seq(true),
+      s"a large ordered answer must keep the range sort:\n${prepared(big)}")
+    // the sampler's sketch job, the range exchange's map stage and the
+    // result; below the gate only the result job ran
+    assert(bigJobs === 3L)
+    assert(bigRows === rows && rows.nonEmpty)
+    // a page keeps the take-ordered top-k and its one job
+    val page = pqEngine.select(q.copy(limit = Some(5)))
+    assert(prepared(page).collect { case t: TakeOrderedAndProjectExec => t }
+      .nonEmpty, s"a limit must plan a top-k:\n${prepared(page)}")
+    assert(jobsOf(page.collect()) === 1L)
   }
 
   test("limit compiles to a limit/top-k operator, not full materialization") {
@@ -239,8 +291,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!join.contains("hashpartitioning(tagkey"),
       s"bucketed join alignment must plan without a hash exchange:\n$join")
-    assert(join.contains("Exchange rangepartitioning"),
-      s"sanity: the rendered plan should still show the output sort's range exchange:\n$join")
+    assert(join.contains("Coalesce 1") && !join.contains("rangepartitioning"),
+      s"sanity: the rendered plan should still show the answer's one-task sort:\n$join")
     // statements ride the same two-level pruning: the quantile
     // statement's fact scan must carry metric AND ts_day inside
     // PartitionFilters (its oracle checks only the answer, which is

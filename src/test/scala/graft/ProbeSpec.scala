@@ -22,6 +22,26 @@ class ProbeSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("== Physical Plan =="))
   }
 
+  test("entries --collect: the timed action is collect(), with the rows count() reports") {
+    // the action of each job's result stage: `JOB <entry> id=<n> <action> at …`
+    def run(collect: Boolean): (Probe.EntryRun, Seq[String]) = {
+      val out = new java.io.ByteArrayOutputStream
+      val Seq(r) = Console.withOut(out) {
+        Probe.entries(spark, SparkTestBase.Sf0001, Seq("ts_select_where_in"),
+          jobLines = true, collect = collect)
+      }
+      (r, out.toString("UTF-8").linesIterator
+        .filter(_.startsWith("JOB ")).map(_.split(" ")(3)).toSeq)
+    }
+    // collect first: the warm count run then submits no collect of its
+    // own (the engine's catalog snapshot ran in the first run)
+    val (collected, collectActions) = run(collect = true)
+    val (counted, countActions) = run(collect = false)
+    assert(counted.rows > 0 && collected.rows === counted.rows)
+    assert(collectActions.lastOption === Some("collect"), collectActions)
+    assert(!countActions.contains("collect"), countActions)
+  }
+
   test("entries --jobs: one JOB census line per submitted job, naming its result stage and first graft frame") {
     val out = new java.io.ByteArrayOutputStream
     val Seq(run) = Console.withOut(out) {

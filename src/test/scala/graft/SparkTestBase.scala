@@ -64,6 +64,19 @@ trait SparkTestBase {
     jobs.get
   }
 
+  /** Run `body` with one session setting changed, restoring (or
+    * unsetting) it afterwards. */
+  def withSessionConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Spark's one-task read size: answers estimated at or below it sort
+    * in one task (`Engine`'s ordering gate). */
+  val MaxPartitionBytes = "spark.sql.files.maxPartitionBytes"
+
   /** The file scans of a frame's pre-AQE physical plan. */
   def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
     df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
