@@ -228,7 +228,9 @@ final class Engine(val ctx: TsdbContext,
     * would. */
   private lazy val localCatalog: Option[DataFrame] = {
     val bound = math.max(0L, math.min(Engine.MaxLocalSeries, maxBroadcastSeries))
-    val rows = ctx.series.limit(bound.toInt + 1).collect()
+    // one task reads the catalog: a limit over several partitions
+    // collects incrementally, one job per partition it reaches
+    val rows = ctx.series.coalesce(1).limit(bound.toInt + 1).collect()
     if (rows.length > bound) None
     else Some(ctx.spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       ctx.series.schema))

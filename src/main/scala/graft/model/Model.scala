@@ -218,7 +218,7 @@ object TsdbContext {
       col(valueCol).cast(DoubleType).as("value"))
 
     TsdbContext(spark, catalog, samples, spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TsdbSchema.events))
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), TsdbSchema.events))
   }
 
   /** Normalize a parquet-sourced timestamp column to the engine's Long

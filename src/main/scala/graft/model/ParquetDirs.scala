@@ -56,6 +56,14 @@ private[graft] object ParquetDirs {
     dirs.flatMap(schemaFile(spark, _)).minByOption(_.getPath.toString)
       .flatMap(ParquetFooters.schemaOf(spark, _))
 
+  /** The rows `spark.read.parquet(dir).count()` would count, summed
+    * from the data files' footers on the driver: the files that read
+    * would scan, listed by the same rule as [[schemaOf]]'s (a sink
+    * root's committed files, else every non-hidden, non-empty file
+    * under `dir`). No Spark job; 0 when there is no data file. */
+  def rowCount(spark: SparkSession, dir: String): Long =
+    dataFiles(spark, dir).map(ParquetFooters.rowCount(spark, _)).sum
+
   private def readFrom(spark: SparkSession, reader: DataFrameReader,
       dirs: Seq[String]): DataFrame =
     schemaOf(spark, dirs: _*) match {
@@ -76,6 +84,18 @@ private[graft] object ParquetDirs {
         if (st.isDirectory) firstDataFile(fs, p)
         else Some(st).filter(_.getLen > 0)
       }
+    }
+
+  private def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] =
+    if (ParquetFooters.isSinkRoot(spark, dir))
+      ParquetFooters.committedFiles(spark, dir).filter(_.getLen > 0)
+    else {
+      val (fs, p) = HadoopFiles.hfs(spark.sparkContext.hadoopConfiguration, dir)
+      def walk(st: FileStatus): Seq[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+          .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+        else Seq(st).filter(_.getLen > 0)
+      if (fs.exists(p)) walk(fs.getFileStatus(p)) else Nil
     }
 
   /** Depth-first in full-path order: a directory sorts as its name

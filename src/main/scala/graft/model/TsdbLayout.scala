@@ -416,21 +416,23 @@ object TsdbLayout {
     * @return number of partition directories rewritten. */
   def upsertSamples(spark: SparkSession, path: String, late: DataFrame,
       series: DataFrame): Int = {
-    val lateKeyed = keyed(late, series).select(Samples.cols.map(col): _*)
-    val affected = lateKeyed.select("metric", "ts_day").distinct()
-      .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
+    // the deduplicated late batch, derived ONCE and held on the driver:
+    // it is small by definition (the anti-join below broadcasts it),
+    // and the affected partitions, the replaced keys and the union all
+    // read it. Duplicates inside the late batch resolve by max value
+    val (lateDedup, affected) = {
+      val df = keyed(late, series)
+        .groupBy("series_id", "ts", "metric", "ts_day")
+        .agg(max(col("value")).as("value"))
+        .select(Samples.cols.map(col): _*)
+      val rows = df.collect()
+      (spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
+        rows.map(r => (r.getAs[String]("metric"),
+          r.getAs[Number]("ts_day").longValue)).distinct)
+    }
     if (affected.isEmpty) return 0
     requireNotL0Owned(spark, path, Samples, affected, "upsertSamples")
     val existing = readSamples(spark, path).where(dayPred(affected))
-      .select(Samples.cols.map(col): _*)
-    // replace ONLY keys the late batch names: an anti-join (late keys
-    // broadcast — the batch is small by definition) keeps every other
-    // on-disk row byte-for-byte, INCLUDING pre-existing duplicate-ts
-    // rows a whole-slice dedup would silently collapse. Duplicates
-    // inside the late batch itself resolve by max value.
-    val lateDedup = lateKeyed
-      .groupBy("series_id", "ts", "metric", "ts_day")
-      .agg(max(col("value")).as("value"))
       .select(Samples.cols.map(col): _*)
     // a DATABASE's samples layout (an index catalog with canonical
     // owned entries sits beside it): record the touched partitions so
@@ -450,8 +452,12 @@ object TsdbLayout {
       if (ownedCanonical)
         recordIndexDirty(spark, parent.toString, affected.toSeq)
     }
+    // replace ONLY keys the late batch names: an anti-join (late keys
+    // broadcast; unique, since the batch is grouped by them) keeps
+    // every other on-disk row byte-for-byte, INCLUDING pre-existing
+    // duplicate-ts rows a whole-slice dedup would silently collapse
     val merged = existing
-      .join(broadcast(lateDedup.select("series_id", "ts").distinct()),
+      .join(broadcast(lateDedup.select("series_id", "ts")),
         Seq("series_id", "ts"), "left_anti")
       .unionByName(lateDedup)
       .localCheckpoint()
@@ -1049,9 +1055,10 @@ object TsdbLayout {
         Seq("series_id"), "left_anti")
       .select(CatalogCols.map(col): _*)
     fresh.write.mode("overwrite").parquet(staging)
-    val staged = ParquetDirs.read(spark, staging)
-    val n = staged.count()
-    if (n > 0) staged.write.mode("append").parquet(basePath)
+    // the staged count comes from the footers just written, not from a
+    // re-read of the staging directory
+    val n = ParquetDirs.rowCount(spark, staging)
+    if (n > 0) ParquetDirs.read(spark, staging).write.mode("append").parquet(basePath)
     deleteRecursive(hconf(spark), staging)
     n
   }
@@ -1247,7 +1254,7 @@ object TsdbLayout {
         jl(regs.join(persistedIds, Seq("series_id"), "left_anti").count()))
     }
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
+      java.util.Arrays.asList(rows.toSeq: _*),
       StructType(Seq(
         StructField("half", StringType), StructField("tier", StringType),
         StructField("metric", StringType), StructField("min_day", LongType),
@@ -1339,7 +1346,7 @@ object TsdbLayout {
           else Nil)
       else Nil) ++
       Tier.Facts.map(t => Row(s"stragglers_${t.batchSub}",
-        l0Stragglers(spark, dir, t).count())) ++
+        stragglerCount(spark, dir, t))) ++
       Seq(Row("index_stale", indexDirtyPairs(spark, dir).size.toLong)) ++
       (if (hasCorpus)
         graft.pipeline.CorpusStore.health(spark, corpusDir)
@@ -1350,7 +1357,7 @@ object TsdbLayout {
           .map { case (c, n) => Row(c, n) }
       else Nil)
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
+      java.util.Arrays.asList(rows: _*),
       StructType(Seq(StructField("step", StringType),
         StructField("n", LongType))))
   }
@@ -1387,7 +1394,7 @@ object TsdbLayout {
     import org.apache.spark.sql.types._
     val counts = scala.collection.mutable.ListBuffer.from(
       Tier.Facts.map(t =>
-        s"${t.batchSub}_stragglers" -> l0Stragglers(spark, dir, t).count()))
+        s"${t.batchSub}_stragglers" -> stragglerCount(spark, dir, t)))
     counts ++= Seq(
       "catalog_unfolded" -> readCatalogL0(spark, dir).fold(0L)(cl0 =>
         cl0.select("series_id").distinct()
@@ -1422,7 +1429,7 @@ object TsdbLayout {
       Row(c, if (n == 0) "ok" else "alert", n)
     }
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
+      java.util.Arrays.asList(rows.toSeq: _*),
       StructType(Seq(StructField("component", StringType),
         StructField("status", StringType), StructField("n", LongType))))
   }
@@ -1457,23 +1464,32 @@ object TsdbLayout {
     * or nothing straggles. */
   def l0Stragglers(spark: SparkSession, dir: String,
       tier: FactTier = Samples): DataFrame =
-    tierStragglers(spark, dir, tier)
-
-  /** `l0Override`: restrict the check to ONE root's committed frame —
-    * the per-epoch retire guard asks "does THIS root hold a row's only
-    * copy", not "does any live root" (a sibling epoch's stragglers
-    * must not block retiring a clean one). None = the whole tier. */
-  private def tierStragglers(spark: SparkSession, dir: String,
-      tier: FactTier, l0Override: Option[DataFrame] = None): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    tierStragglers(spark, dir, tier).getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("metric",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("ts_day",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType))))
+          org.apache.spark.sql.types.LongType)))))
+
+  /** The number of [[l0Stragglers]] partitions: the tick's and the
+    * health check's reading. No Spark job when the driver already knows
+    * that nothing straggles (an absent tier, no below-watermark day). */
+  private def stragglerCount(spark: SparkSession, dir: String,
+      tier: FactTier): Long =
+    tierStragglers(spark, dir, tier).fold(0L)(_.count())
+
+  /** [[l0Stragglers]], or None when the driver already knows that
+    * nothing straggles. `l0Override`: restrict the check to ONE root's
+    * committed frame — the per-epoch retire guard asks "does THIS root
+    * hold a row's only copy", not "does any live root" (a sibling
+    * epoch's stragglers must not block retiring a clean one). None =
+    * the whole tier. */
+  private def tierStragglers(spark: SparkSession, dir: String,
+      tier: FactTier, l0Override: Option[DataFrame] = None)
+      : Option[DataFrame] = {
     def counted(df: DataFrame): DataFrame = df
       // partition-inferred ts_day reads as Int; pin the Long the
       // empty branch declares so pollers can append/union frames
@@ -1481,7 +1497,7 @@ object TsdbLayout {
       .groupBy(col("metric"), col("ts_day").cast("long").as("ts_day"))
       .agg(count(org.apache.spark.sql.functions.lit(1)).as("n"))
     l0Override.orElse(readTierL0(spark, dir, tier)) match {
-      case None => empty
+      case None => None
       case Some(l0) =>
         val l0c = l0.select(tier.cols.map(col): _*)
         val batchRaw = ParquetDirs.read(spark, s"$dir/${tier.batchSub}")
@@ -1491,7 +1507,7 @@ object TsdbLayout {
             l0Watermark(spark, dir, tier))
           val days = below.select("metric", "ts_day").distinct()
             .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
-          if (days.isEmpty) return empty
+          if (days.isEmpty) return None
           // the anti-join right side: day-pruned on a laid-out batch;
           // a FLAT batch (the empty-events write form) has no
           // partitions to prune but carries the row-key columns
@@ -1499,7 +1515,7 @@ object TsdbLayout {
             if (batchLaid) batchRaw.where(dayPred(days))
               .select(tier.rowKey.map(col): _*)
             else batchRaw.select(tier.rowKey.map(col): _*)
-          counted(below.join(batchRows, tier.rowKey, "left_anti"))
+          Some(counted(below.join(batchRows, tier.rowKey, "left_anti")))
         } else {
           // pre-first-compaction overlap detector: any (metric, day)
           // both tiers hold double-reads in the union until the first
@@ -1508,7 +1524,7 @@ object TsdbLayout {
           // metric column to compare).
           val days = l0c.select("metric", "ts_day").distinct()
             .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
-          if (days.isEmpty) return empty
+          if (days.isEmpty) return None
           val overlap: Seq[(String, Long)] =
             if (batchLaid) {
               val held = batchRaw.where(dayPred(days))
@@ -1525,8 +1541,8 @@ object TsdbLayout {
                 .map(_.getAs[Number](0).longValue).toSet
               days.filter(d => held(d._2)).toSeq
             }
-          if (overlap.isEmpty) empty
-          else counted(l0c.where(dayPred(overlap)))
+          if (overlap.isEmpty) None
+          else Some(counted(l0c.where(dayPred(overlap))))
         }
     }
   }
@@ -1714,8 +1730,8 @@ object TsdbLayout {
       // this root's stragglers refuse even if the union looks healthy)
       val strag = tierStragglers(spark, dir, tier,
           l0Override = Some(l0.select(tier.cols.map(col): _*)))
-        .select("ts_day").limit(6).collect()
-        .map(_.getAs[Number](0).longValue).distinct
+        .fold(Array.empty[Long])(_.select("ts_day").limit(6).collect()
+          .map(_.getAs[Number](0).longValue).distinct)
       require(strag.isEmpty,
         s"retire: ingest root $l0Path holds straggler rows in day(s) " +
           s"${strag.mkString(", ")} whose only copy lives here — " +

@@ -150,7 +150,17 @@ object CorpusStore {
     * [[graft.model.IndexCatalog]] rule — never a session conf) makes a
     * crashed re-run replace its own half-written partition instead of
     * appending a duplicate. An empty batch writes nothing — consistent
-    * absence on all three sides. */
+    * absence on all three sides.
+    *
+    * The batch is cached once for the three writes, and the RE-CACHE
+    * RULE orders them: while a cached frame is still needed, never
+    * write a path its lineage reads. Every Spark file write re-caches
+    * (clears) each cached plan that reads its output path, and an
+    * accepted batch's admission lineage reads the hashes index (the
+    * id probe of [[applyAccept]]), so the hashes write goes LAST: an
+    * earlier one made the bands write re-run the staged read, the
+    * admission and the id probe. Docs, bands, hashes is also the
+    * takedown's order, "the hashes lookup last". */
   private def writeBatch(spark: SparkSession, dir: String, bid: String,
       docsBatch: DataFrame, r: Recipe, alsoDocs: Boolean): Unit = {
     // ONE batch computation for the three writes: without the cache,
@@ -166,8 +176,8 @@ object CorpusStore {
           .write.option("partitionOverwriteMode", "dynamic")
           .partitionBy(BatchCol).mode("overwrite").parquet(path)
       if (alsoDocs) dyn(clean, docsPath(dir))
-      dyn(hashes, hashesPath(dir))
       dyn(bandRows, bandsPath(dir))
+      dyn(hashes, hashesPath(dir))
     } finally clean.unpersist(false)
   }
 
@@ -379,26 +389,21 @@ object CorpusStore {
   /** One accepted batch lands: docs + index partitions under the
     * batch's identity ([[StagedStore.acceptBatchId]]), after the
     * tombstone prologue ([[StagedStore.admitted]]). Ids the index
-    * already covers under ANOTHER batch drop first (an operator
-    * staging the same docs twice must not duplicate the corpus) — a
-    * crashed re-run of THIS batch keeps its own rows because the
-    * filter excludes its own partition. */
+    * already covers under ANOTHER batch drop first
+    * ([[StagedStore.notHeldElsewhere]]: an operator staging the same
+    * docs twice must not duplicate the corpus) — a crashed re-run of
+    * THIS batch keeps its own rows because the probe excludes its own
+    * partition. */
   private def applyAccept(spark: SparkSession, dir: String, record: String,
       staged: DataFrame, r: Recipe): Unit = {
     val bid = StagedStore.acceptBatchId(record)
     val base = StagedStore.admitted(spark, dir, record, staged, r.idCol)
-    // broadcast-probe the hashes index by id (index-sized scan of two
-    // skinny columns, batch-bounded result) — never a corpus shuffle,
-    // and never a driver-side id list: the dup frame is batch-bounded
-    // by construction, so it broadcasts into an anti-join instead of
-    // becoming a million-literal In expression on a full re-stage
-    val stagedIds = base.select(col(r.idCol).as("cid")).distinct()
-    val dup = ParquetDirs.read(spark, hashesPath(dir))
-      .where(col(BatchCol) =!= bid)
-      .join(broadcast(stagedIds), "cid")
-      .select(col("cid").as(r.idCol)).distinct()
-    val fresh = base.join(broadcast(dup), Seq(r.idCol), "left_anti")
-    writeBatch(spark, dir, bid, fresh, r, alsoDocs = true)
+    // the held ids come from the hashes index (an index-sized scan of
+    // two skinny columns, batch-bounded result) — never a corpus shuffle
+    val held = ParquetDirs.read(spark, hashesPath(dir))
+      .where(col(BatchCol) =!= bid).select(col("cid").as(r.idCol))
+    writeBatch(spark, dir, bid,
+      StagedStore.notHeldElsewhere(base, held, r.idCol), r, alsoDocs = true)
   }
 
   /** One takedown lands: the `__batch` partitions holding the ids are

@@ -777,38 +777,47 @@ object Dedup {
     * NEVER shuffled: the batch's content hashes, band keys and shingle
     * sets all broadcast (an ingest batch is bounded by design), so every
     * corpus participation is a broadcast-hash-join probe on its own
-    * scan. Only band-matched rows survive, so everything downstream (the
-    * (bid, cid) dedup, Jaccard, min-reduction) is candidate-sized. */
+    * scan. Only hash- and band-matched rows survive, so everything
+    * downstream is candidate-sized: the exact matches and the verified
+    * band matches reduce in ONE group-by on the batch id (the minimum
+    * over a pair's repeated band matches is the minimum over the
+    * distinct pairs), and that batch-bounded map broadcasts into a left
+    * join on the batch's ids, which keeps the batch's row multiplicity. */
   private def probeCorpusSide(
       corpusHashes: DataFrame /* (cid, th) */,
       corpusBandRows: DataFrame /* (cid, cset, bk) */,
       batch: DataFrame, idCol: String, textCol: String,
       k: Int, numPerm: Int, bands: Int, threshold: Double): DataFrame = {
-    // exact: min corpus id per batch content hash
+    // one row shape for both kinds of match: (id, exact_cid, near_cid)
+    val (exactT, nearT) =
+      (corpusHashes.schema("cid").dataType, corpusBandRows.schema("cid").dataType)
+    // exact: corpus ids sharing a batch document's content hash
     val bh = batch.select(col(idCol).as("id"), md5(col(textCol)).as("th"))
-    val exactDup = corpusHashes.join(broadcast(bh), "th")
-      .groupBy("id").agg(min(col("cid")).as("exact_dup_of"))
+    val exact = corpusHashes.join(broadcast(bh), "th")
+      .select(col("id"), col("cid").as("exact_cid"),
+        lit(null).cast(nearT).as("near_cid"))
     // the batch signature (bounded by design) feeds two consumers — its
     // band keys and its verification sets, both broadcast — so cache the
     // skinny per-doc frame once
     val bsig = ScopedCache.cache(minhashSignature(batch, idCol, textCol, k, numPerm))
     val bb = bsig.select(col("id").as("bid"),
       explode(array(bandCols(numPerm, bands): _*)).as("bk"))
-    val cand = corpusBandRows.join(broadcast(bb), "bk")
-      .groupBy("bid", "cid").agg(first(col("cset")).as("cset"))
-    // exact-Jaccard verify on the signature sets: |A∩B| / |A∪B| over the
-    // distinct-shingle hash arrays (≡ c/(na+nb−c), the oracle's form)
-    val nearDup = cand
+    // near: band matches verified by exact Jaccard on the signature
+    // sets: |A∩B| / |A∪B| over the distinct-shingle hash arrays
+    // (≡ c/(na+nb−c), the oracle's form)
+    val near = corpusBandRows.join(broadcast(bb), "bk")
       .join(broadcast(bsig.select(col("id").as("bid"), col("set").as("bset"))),
         "bid")
       .where(size(array_intersect(col("bset"), col("cset"))).cast("double") /
         size(array_union(col("bset"), col("cset"))) >= threshold)
-      .groupBy(col("bid").as("id")).agg(min(col("cid")).as("near_dup_of"))
-    // result assembly: both dup maps are batch-bounded — broadcast them
-    // so the assembly never shuffles either
+      .select(col("bid").as("id"), lit(null).cast(exactT).as("exact_cid"),
+        col("cid").as("near_cid"))
+    val dupOf = exact.unionByName(near)
+      .groupBy("id")
+      .agg(min(col("exact_cid")).as("exact_dup_of"),
+        min(col("near_cid")).as("near_dup_of"))
     batch.select(col(idCol).as("id"))
-      .join(broadcast(exactDup), Seq("id"), "left")
-      .join(broadcast(nearDup), Seq("id"), "left")
+      .join(broadcast(dupOf), Seq("id"), "left")
       .select(col("id"), col("exact_dup_of"), col("near_dup_of"),
         when(col("exact_dup_of").isNotNull, lit("exact"))
           .when(col("near_dup_of").isNotNull, lit("near"))

@@ -165,15 +165,26 @@ object EmbeddingStore {
     * every query path uses) against the CURRENT epoch's codebook;
     * when the recipe carries PQ, the batch's codes are computed from
     * the stored sub-codebooks and ride as the [[PqCol]] array. An
-    * empty batch writes nothing. */
+    * empty batch writes nothing.
+    *
+    * The assignment is cached for its two writes, and the RE-CACHE
+    * RULE orders them: while a cached frame is still needed, never
+    * write a path its lineage reads. Every Spark file write re-caches
+    * (clears) each cached plan that reads its output path, and an
+    * accepted batch's admission lineage reads the data path (the id
+    * probe of [[applyAccept]]), so the drift stats are written FIRST
+    * and the data rows last: the other order re-ran the admission and
+    * the cell assignment for the stats. */
   private def writeBatch(spark: SparkSession, dir: String, r: Recipe,
       bid: String, batch: DataFrame): Unit = {
     val centers = Similarity.readCodebook(spark, codebookPath(dir, r))
     val clean = batch.select(col(r.idCol), col(r.embCol))
-    // cached for the two consumers (data rows, drift stats): the
+    // cached for the two consumers (drift stats, data rows): the
     // assignment is batch-sized by the accept contract
     val asg = ScopedCache.cache(
       Similarity.assignCellsWithDist(centers, clean, r.idCol, r.embCol))
+    writeStats(spark, dir, r, bid,
+      asg.select(col(CellCol), col("__d")))
     val rows =
       if (r.m.isEmpty) asg.drop("__d")
       else {
@@ -191,8 +202,6 @@ object EmbeddingStore {
       .write.option("partitionOverwriteMode", "dynamic")
       .partitionBy(CellCol, BatchCol).mode("overwrite")
       .parquet(dataPath(dir, r))
-    writeStats(spark, dir, r, bid,
-      asg.select(col(CellCol), col("__d")))
     ScopedCache.release()
   }
 
@@ -400,22 +409,19 @@ object EmbeddingStore {
     * (streamTag, micro-batch) partition, so redelivery re-overwrites
     * itself); ids the index already covers under ANOTHER batch drop
     * first (re-staging must not duplicate), via a skinny id-column
-    * probe of the index, after the tombstone prologue
-    * ([[StagedStore.admitted]]). */
+    * probe of the index ([[StagedStore.notHeldElsewhere]]), after the
+    * tombstone prologue ([[StagedStore.admitted]]). */
   private def applyAccept(spark: SparkSession, dir: String, r: Recipe,
       record: String, staged: DataFrame): Unit = {
     val bid = StagedStore.acceptBatchId(record)
     val base = StagedStore.admitted(spark, dir, record, staged, r.idCol)
-    val stagedIds = base.select(col(r.idCol)).distinct()
-    val dup = ParquetDirs.read(spark, dataPath(dir, r))
-      .where(col(BatchCol) =!= bid)
-      .join(broadcast(stagedIds), r.idCol)
-      .select(col(r.idCol)).distinct()
+    val held = ParquetDirs.read(spark, dataPath(dir, r))
+      .where(col(BatchCol) =!= bid).select(col(r.idCol))
     // no isEmpty pre-check: writeBatch's dynamic-overwrite write of an
     // empty frame touches no partition (the documented empty-batch
     // no-op), so probing first just re-runs the anti-join
     writeBatch(spark, dir, r, bid,
-      base.join(broadcast(dup), Seq(r.idCol), "left_anti"))
+      StagedStore.notHeldElsewhere(base, held, r.idCol))
   }
 
   /** The STREAMING accept ([[graft.streaming.TsdbStream

@@ -161,7 +161,7 @@ private[pipeline] object StagedStore {
     * sequence (never an in-place rewrite) — routine accepts with no
     * tombstoned id skip the log entirely. Returns the rows to admit;
     * each store then drops the ids it already holds under another
-    * batch and writes. */
+    * batch ([[notHeldElsewhere]]) and writes. */
   def admitted(spark: SparkSession, dir: String, record: String,
       staged: DataFrame, idCol: String): DataFrame =
     effectiveTombstones(spark, dir, idCol) match {
@@ -175,6 +175,23 @@ private[pipeline] object StagedStore {
         staged
       case None => staged
     }
+
+  /** An accept's second admission step, the same for both stores: drop
+    * the rows of `admitted` whose id the store already holds under
+    * ANOTHER batch, so staging the same rows twice never duplicates
+    * them, while a crashed re-run of this batch keeps its own rows.
+    * `heldElsewhere` is the store's id column read with the accepting
+    * batch's own partition excluded. The held ids are left-semi probed
+    * against the broadcast admitted ids (batch-bounded), and the
+    * batch-bounded result broadcasts into a left-anti join: no
+    * `distinct`, so neither side shuffles, and never a driver-side id
+    * list (a full re-stage would make it a million-literal `In`). */
+  def notHeldElsewhere(admitted: DataFrame, heldElsewhere: DataFrame,
+      idCol: String): DataFrame = {
+    val held = heldElsewhere
+      .join(broadcast(admitted.select(col(idCol))), Seq(idCol), "left_semi")
+    admitted.join(broadcast(held), Seq(idCol), "left_anti")
+  }
 
   /** A takedown's prologue, the same for both stores: collect the
     * staged ids (request-sized), re-check would-empty against the store

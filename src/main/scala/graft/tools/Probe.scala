@@ -28,6 +28,7 @@ import graft.pipeline.{CorpusStore, Dedup, EmbeddingStore, Similarity}
   * runMain graft.tools.Probe storefiles <sfDir>
   * runMain graft.tools.Probe drift      <sfDir>
   * runMain graft.tools.Probe qserve     <sfDir> [reps]
+  * runMain graft.tools.Probe lifecycle  [--jobs]
   * }}}
   *
   * The session runs on `local[SPARK_GRAFT_CPUS]` (default 32). Probes
@@ -69,9 +70,10 @@ object Probe {
       case "storefiles" => storefiles(_, a.head)
       case "drift" => drift(_, a.head)
       case "qserve" => qserve(_, a.head, a.lift(1).map(_.toInt).getOrElse(3))
+      case "lifecycle" => lifecycle(_, jobLines = a.contains("--jobs"))
       case other => throw new IllegalArgumentException(
         s"unknown probe '$other': entries | replica | l0day | rebuild | " +
-          "corpus | emb | interleave | storefiles | drift | qserve")
+          "corpus | emb | interleave | storefiles | drift | qserve | lifecycle")
     }
     val spark = TsdbContext.localSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -117,11 +119,48 @@ object Probe {
   def entries(spark: SparkSession, sfDir: String, names: Seq[String],
       plans: Option[(String, String)] = None,
       jobLines: Boolean = false, collect: Boolean = false): Seq[EntryRun] = {
-    val jobs, stages, tasks, sw, sr = new AtomicLong
-    val started =
+    plans.foreach(p =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p._1)))
+    val census = new Census(spark, jobLines)
+    census.attached(names.map { name =>
+      val fn = SparkEntry.queries(name)
+      val (n, seconds) = census.window(name) {
+        try {
+          val (df, tBuild) = wall(fn(spark, sfDir))
+          plans.foreach { case (outDir, suffix) =>
+            val file = s"$outDir/${name}_$suffix.txt"
+            java.nio.file.Files.writeString(java.nio.file.Paths.get(file),
+              df.queryExecution.explainString(
+                org.apache.spark.sql.execution.FormattedMode))
+            println(s"PLANDUMP wrote $file")
+          }
+          val (n, tAct) =
+            wall(if (collect) df.collect().length.toLong else df.count())
+          (n, tBuild + tAct)
+        } finally ScopedCache.release()
+      }
+      val r = EntryRun(name, seconds, n, census.jobs.get, census.stages.get,
+        census.tasks.get, census.shuffleWrite.get, census.shuffleRead.get)
+      println(f"ENTRY $name%-28s jobs=${r.jobs}%4d " +
+        f"stages=${r.stages}%4d tasks=${r.tasks}%6d " +
+        f"shufW=${r.shuffleWrite}%10d shufR=${r.shuffleRead}%10d " +
+        f"${r.seconds}%7.2f s (${r.rows} rows)")
+      r
+    })
+  }
+
+  /** Counts the Spark work of one measured window: jobs, stages, tasks
+    * and shuffle bytes, and with `jobLines` each job's [[jobLine]].
+    * Listener events arrive asynchronously: the bus is drained before
+    * and after each window, outside the caller's timing, so a window's
+    * counters hold exactly its own jobs. */
+  private final class Census(spark: SparkSession, jobLines: Boolean) {
+    val jobs, stages, tasks, shuffleWrite, shuffleRead = new AtomicLong
+    private val started =
       new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
-    val sqlDetails = new java.util.concurrent.ConcurrentHashMap[Long, String]
-    val listener = new SparkListener {
+    private val sqlDetails =
+      new java.util.concurrent.ConcurrentHashMap[Long, String]
+    private val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
         if (jobLines) started.add(e)
@@ -137,47 +176,136 @@ object Probe {
         tasks.addAndGet(e.stageInfo.numTasks.toLong)
         val m = e.stageInfo.taskMetrics
         if (m != null) {
-          sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         }
       }
     }
-    def drain(): Unit = org.apache.spark.sql.graftbridge.Bridge
+    private def drain(): Unit = org.apache.spark.sql.graftbridge.Bridge
       .drainListenerBus(spark.sparkContext)
-    plans.foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p._1)))
-    spark.sparkContext.addSparkListener(listener)
-    try names.map { name =>
-      val fn = SparkEntry.queries(name)
+
+    /** Evaluate `body` with the listener registered. */
+    def attached[A](body: => A): A = {
+      spark.sparkContext.addSparkListener(listener)
+      try body finally spark.sparkContext.removeSparkListener(listener)
+    }
+
+    /** Run `body` as one window: the counters restart at zero, and
+      * after it each of its jobs prints as a [[jobLine]] of `label`. */
+    def window[A](label: String)(body: => A): A = {
       drain()
-      Seq(jobs, stages, tasks, sw, sr).foreach(_.set(0))
+      Seq(jobs, stages, tasks, shuffleWrite, shuffleRead).foreach(_.set(0))
       started.clear(); sqlDetails.clear()
-      val (n, seconds) = try {
-        val (df, tBuild) = wall(fn(spark, sfDir))
-        plans.foreach { case (outDir, suffix) =>
-          val file = s"$outDir/${name}_$suffix.txt"
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(file),
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
-          println(s"PLANDUMP wrote $file")
-        }
-        val (n, tAct) =
-          wall(if (collect) df.collect().length.toLong else df.count())
-        (n, tBuild + tAct)
-      } finally ScopedCache.release()
+      val a = body
       drain()
-      val r = EntryRun(name, seconds, n, jobs.get, stages.get, tasks.get,
-        sw.get, sr.get)
       started.toArray(Array.empty[SparkListenerJobStart]).sortBy(_.jobId)
-        .foreach(e => println(jobLine(name, e,
+        .foreach(e => println(jobLine(label, e,
           id => Option(sqlDetails.get(id)))))
-      println(f"ENTRY $name%-28s jobs=${r.jobs}%4d " +
-        f"stages=${r.stages}%4d tasks=${r.tasks}%6d " +
-        f"shufW=${r.shuffleWrite}%10d shufR=${r.shuffleRead}%10d " +
-        f"${r.seconds}%7.2f s (${r.rows} rows)")
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+      a
+    }
   }
+
+  /** The lifecycle op census: run each lifecycle op once, in the
+    * order of one perfbench `lifecycle` pass, on a tiny fixture built
+    * here (6 hosts × 2 metrics, one day of batch history, one streamed
+    * day with two never-seen hosts, a 60-document corpus store), and
+    * print one `OP <op> jobs=<n> stages=<n> tasks=<n>` line per op. The
+    * ops are `fresh` (`Engine.open` + a select over the streamed day),
+    * `dedup` (a `{"dedup"}` statement served from the store), `upsert`
+    * (`upsertSamples` of late corrections), `accept-docs`
+    * (`CorpusStore.acceptBatch`), `compact` (`compactL0` of the streamed
+    * day), `tick` (`maintenanceTick`) and `store-compact`
+    * (`stageCompaction` + `heal`). The fixture set-up and the stream's
+    * ingest are not counted; the streams stop before the first op, so
+    * no trigger runs inside a window. `jobLines = true` also prints
+    * each op's jobs as [[jobLine]]s labelled with the op. Returns the
+    * (op, jobs) pairs. */
+  def lifecycle(spark: SparkSession, jobLines: Boolean = false)
+      : Seq[(String, Long)] = {
+    import spark.implicits._
+    val root = EntryUtil.scratchDir("graft_lifecycle_probe")
+    val (db, corpus) = (s"$root/db", s"$root/corpus")
+    val t0 = EntryUtil.FromNs
+    val hosts = 0 until 6
+    val metrics = Seq("cpu", "mem")
+    val step = 1800L * 1000000000L
+    def value(h: Int, m: Int, t: Long): Double = ((h * 31 + m * 7 + t / step) % 97) / 4.0
+    val history = for (h <- hosts; (m, mi) <- metrics.zipWithIndex;
+                       t <- t0 until t0 + DayNs by step)
+      yield (m, s"h$h", t, value(h, mi, t))
+    TsdbLayout.writeDatabase(TsdbContext.fromWide(spark,
+      history.toDF("metric", "host", "ts", "value"), "metric", Seq("host"),
+      "ts", "value"), db)
+    // the store and the candidates its dedup statements probe: exact
+    // copies, near copies (last word replaced) and new documents
+    def text(i: Int): String =
+      (0 until 40).map(w => s"w${(i * 13 + w * 7) % 101}_${w % 5}").mkString(" ")
+    CorpusStore.create(spark, corpus,
+      (0 until 60).map(i => (i.toLong, text(i))).toDF("id", "text"),
+      "id", "text", k = 3, numPerm = 32, bands = 8)
+    val candidates = (0 until 12).map { c =>
+      val src = text(c * 4)
+      (1000L + c, c % 3 match {
+        case 0 => src
+        case 1 => src.substring(0, src.lastIndexOf(' ')) + " fresh"
+        case _ => text(500 + c)
+      })
+    }.toDF("id", "text")
+    val curation = new graft.engine.Engine(TsdbLayout.openDatabase(spark, db)
+      .copy(documents = Some(candidates), corpusStore = Some(corpus)))
+    // one streamed day (the fleet plus two never-seen hosts), after the
+    // curation engine opened, so its catalog is the persisted one
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[String]
+    val named = graft.sources.OpenTsdb.parseLines(input.toDF())
+      .select("name", "ts", "value")
+    val streams = Seq(
+      graft.streaming.TsdbStream.namedLayoutIngest(named,
+        s"$db/samples_l0", s"$root/ckpt_facts"),
+      graft.streaming.TsdbStream.catalogIngest(named,
+        s"$db/catalog_l0", s"$root/ckpt_catalog"))
+    val day1 = t0 + DayNs
+    input.addData(for (h <- hosts ++ Seq(90, 91); (m, mi) <- metrics.zipWithIndex;
+                       t <- day1 until day1 + DayNs by step)
+      yield s"put $m ${t / 1000000000L} ${value(h, mi, t)} host=h$h")
+    try streams.foreach(_.processAllAvailable())
+    finally streams.foreach(_.stop())
+    val late = curation.ctx.series.where(col("metric") === "cpu")
+      .select(col("series_id")).limit(4).collect().toSeq.flatMap { r =>
+        Seq(0L, 5L).map(k => (r.getLong(0), t0 + k * step, 5000.0 + k))
+      }.toDF("series_id", "ts", "value")
+    val ops: Seq[(String, () => Any)] = Seq(
+      "fresh" -> (() => graft.engine.Engine.open(spark, db).execute(
+        s"""{"select": "cpu", "range": {"from": "${isoOf(day1)}",
+           "to": "${isoOf(day1 + DayNs)}"}}""").collect()),
+      "dedup" -> (() => curation.execute(
+        """{"dedup": {"batch": "id >= 1000 AND id < 1012", "threshold": 0.8,
+           "k": 3, "num-perm": 32, "bands": 8}}""").collect()),
+      "upsert" -> (() => TsdbLayout.upsertSamples(spark, s"$db/samples", late,
+        curation.ctx.series)),
+      "accept-docs" -> (() => CorpusStore.acceptBatch(spark, corpus,
+        (0 until 10).map(j => (2000L + j, text(700 + j))).toDF("id", "text"))),
+      "compact" -> (() => TsdbLayout.compactL0(spark, db, day1 + DayNs)),
+      "tick" -> (() => TsdbLayout.maintenanceTick(spark, db, day1 + DayNs)
+        .collect()),
+      "store-compact" -> (() => {
+        CorpusStore.stageCompaction(spark, corpus)
+        CorpusStore.heal(spark, corpus)
+      }))
+    val census = new Census(spark, jobLines)
+    census.attached(ops.map { case (op, body) =>
+      try census.window(op)(body()) finally ScopedCache.release()
+      println(f"OP $op%-14s jobs=${census.jobs.get}%3d " +
+        f"stages=${census.stages.get}%3d tasks=${census.tasks.get}%4d")
+      op -> census.jobs.get
+    })
+  }
+
+  private def isoOf(ns: Long): String =
+    java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss")
+      .withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.Instant.ofEpochSecond(0L, ns))
 
   /** One job of the census: `JOB <entry> id=<job id> <result-stage
     * name> <first graft.* frame>`. The result stage is the job's last

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.StructType
   * Spark's footer-to-schema conversion (`ParquetFileFormat.readSchema`)
   * is `private[parquet]`, and the streaming sink log it would consult
   * for a sink root lives behind the session's internals. This one-file
-  * subpackage re-exports the three calls a driver-side schema
-  * resolution needs, the same trick as `org.apache.spark.sql.graftbridge`.
+  * subpackage re-exports the calls a driver-side schema resolution (and
+  * row count) needs, the same trick as `org.apache.spark.sql.graftbridge`.
   * No Spark internals are modified. */
 object ParquetFooters {
 
@@ -35,6 +35,14 @@ object ParquetFooters {
       ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, meta)), spark)
     }
   }
+
+  /** One file's row count: the sum of its row groups' counts, read from
+    * its footer on the driver. */
+  def rowCount(spark: SparkSession, file: FileStatus): Long =
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.stream().mapToLong(_.getRowCount).sum()
 
   /** True when `dir` is a streaming file sink's root, i.e. Spark reads
     * it through its `_spark_metadata` log instead of a listing. */

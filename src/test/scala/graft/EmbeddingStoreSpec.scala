@@ -132,6 +132,18 @@ class EmbeddingStoreSpec extends AnyFunSuite with SparkTestBase {
     ScopedCache.release()
   }
 
+  test("job budget: an accept admits its batch once (at most 8 jobs), dropping ids the store holds under another batch") {
+    val dir = store("graft_emb_budget")
+    EmbeddingStore.create(spark, dir, vecsDf(1L to 40L), nlist = 4, iters = 2)
+    // ids 35-40 are already held: they drop, the other 10 land
+    val jobs = jobsOf(EmbeddingStore.acceptBatch(spark, dir, vecsDf(35L to 50L)))
+    assert(jobs <= 8L, s"accept ran $jobs jobs")
+    assert(EmbeddingStore.readVectors(spark, dir).count() === 50L)
+    // the drift stats count every held vector once
+    assert(spark.read.parquet(s"$dir/cells_e0/stats").agg(sum("n")).head()
+      .getLong(0) === 50L)
+  }
+
   test("knnPq serves knnIvfPq's answers from stored codes; the float vectors are never read") {
     val dir = store("graft_emb_pq")
     val corpus = vecsDf(1L to 60L)

@@ -167,6 +167,62 @@ class EquivalenceSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("index dedup probe equals a brute-force Jaccard oracle: band-rich near copies, exact-and-near, repeated batch ids, a cid held by two index batches") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    def words(i: Int): Seq[String] =
+      (0 until 40).map(w => s"w${(i * 17 + w * 5) % 211}_${w % 7}")
+    def text(ws: Seq[String]) = ws.mkString(" ")
+    def nearOf(i: Int) = text(words(i).init :+ s"tail$i")
+    // corpus: plain documents (ids 10-21), plus near copies of words 3
+    // and 4 under SMALLER ids, so their near verdicts differ from the
+    // exact ones
+    val corpus = (0 until 12).map(i => (i + 10L, text(words(i)))) ++
+      Seq(1L -> nearOf(3), 2L -> nearOf(4))
+    val batch = Seq(
+      100L -> nearOf(1),         // near copy of 11 (one word differs)
+      101L -> text(words(3)),    // exact of 13 AND near of 1
+      102L -> nearOf(5),
+      102L -> nearOf(5),         // a repeated batch id: two verdict rows
+      103L -> text(words(4)),    // exact of 14, near of 2; 14 is held twice
+      104L -> text(words(500)),  // new
+      105L -> text(words(7)))    // exact of 17, near of itself
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_oracle").toString
+    graft.pipeline.Dedup.writeCorpusIndex(corpus.toDF("doc_id", "text"), dir,
+      "doc_id", "text")
+    // the compaction window: cid 14's rows under a second index batch
+    def twice(sub: String) = {
+      val idx = spark.read.parquet(s"$dir/$sub")
+      idx.unionByName(idx.where(col("cid") === 14L))
+    }
+    val threshold = 0.8
+    val got = graft.pipeline.Dedup.dedupAgainstIndex(twice("hashes"),
+        twice("bands"), batch.toDF("doc_id", "text"), "doc_id", "text",
+        threshold = threshold)
+      .collect().map(r => (r.getLong(0),
+        Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Long]), r.getString(3)))
+      .toSeq.sortBy(_._1)
+    graft.ScopedCache.release()
+    def shingles(t: String): Set[String] =
+      t.split(" ").sliding(3).map(_.mkString(" ")).toSet
+    val want = batch.map { case (id, t) =>
+      val exact = corpus.filter(_._2 == t).map(_._1).minOption
+      val near = corpus.filter { case (_, c) =>
+        val (a, b) = (shingles(t), shingles(c))
+        (a & b).size.toDouble / (a | b).size >= threshold
+      }.map(_._1).minOption
+      (id, exact, near,
+        if (exact.isDefined) "exact" else if (near.isDefined) "near" else "new")
+    }.sortBy(_._1)
+    assert(got === want)
+    // the fixture covers every case it names
+    assert(want.count(_._1 == 102L) === 2)
+    assert(want.exists(w => w._2.isDefined && w._3.exists(_ != w._2.get)),
+      "a document that is exact of one and near of another")
+    assert(want.map(_._4).toSet === Set("exact", "near", "new"))
+  }
+
   test("asof-join equals a brute-force reference on random duplicate-heavy data") {
     import spark.implicits._
     import graft.query.Ast._

@@ -54,6 +54,18 @@ class ParquetDirsSpec extends AnyFunSuite with SparkTestBase {
     db
   }
 
+  /** Drop a one-row Parquet file of another schema into a sink root,
+    * named to sort before every committed file; the sink log does not
+    * list it. */
+  private def addStrayFile(root: String): Unit = {
+    val stray = tmp("graft_pqdirs_stray")
+    Seq(1L).toDF("stray").coalesce(1).write.mode("overwrite").parquet(stray)
+    val part = new java.io.File(stray).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(root, "a_stray.parquet"))
+  }
+
   test("every database directory form reads with Spark's inferred schema; ts_day stays path-inferred") {
     val full = TsdbContext.fromTestdata(spark, SparkTestBase.Sf0001)
     val db = tmp("graft_pqdirs_db")
@@ -83,12 +95,7 @@ class ParquetDirsSpec extends AnyFunSuite with SparkTestBase {
     // a stray uncommitted file with another schema, sorting before
     // every committed one: Spark reads the root through its log, so
     // the stray file must not decide the schema either
-    val stray = tmp("graft_pqdirs_stray")
-    Seq(1L).toDF("stray").coalesce(1).write.mode("overwrite").parquet(stray)
-    val part = new java.io.File(stray).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(db, "samples_l0", "a_stray.parquet"))
+    addStrayFile(s"$db/samples_l0")
     assertSameSchema(s"$db/samples_l0")
     assert(!ParquetDirs.read(spark, s"$db/samples_l0").columns
       .contains("stray"))
@@ -124,6 +131,26 @@ class ParquetDirsSpec extends AnyFunSuite with SparkTestBase {
       .filterNot(_.startsWith(".")).sortBy(_.split("_")(1)).toSeq
     assert(staged.map(_.take(2)) === Seq("p_", "t_", "c_"))
     staged.foreach(n => assertSameSchema(s"$dir/${CorpusStore.PendingSub}/$n"))
+  }
+
+  test("rowCount: the footers' row count equals Spark's count of the same directory, with no Spark job") {
+    val db = liveDatabase()
+    addStrayFile(s"$db/samples_l0")
+    val store = tmp("graft_pqdirs_count")
+    def docs(ids: Seq[Long]) =
+      ids.map(i => (i, s"w$i w${i % 3} w${i % 5}")).toDF("doc_id", "text")
+    CorpusStore.create(spark, store, docs(1L to 20L), "doc_id", "text")
+    CorpusStore.acceptBatch(spark, store, docs(21L to 30L))
+    val record = CorpusStore.stageBatch(spark, store, docs(31L to 37L))
+    Seq(s"$db/samples", s"$db/series", s"$db/samples_l0", s"$db/catalog_l0",
+        s"$store/docs", s"$store/indexes/bands",
+        s"$store/${CorpusStore.PendingSub}/$record").foreach { dir =>
+      var n = -1L
+      assert(jobsOf { n = ParquetDirs.rowCount(spark, dir) } === 0L, dir)
+      assert(n === spark.read.parquet(dir).count(), dir)
+    }
+    assert(ParquetDirs.rowCount(spark, s"$db/samples_l0") === 96L,
+      "the committed rows only, never the stray file's")
   }
 
   test("job budget: opening a live two-tier database and building a store probe submit no Spark job") {

@@ -60,4 +60,19 @@ class ProbeSpec extends AnyFunSuite with SparkTestBase {
     assert(lines.forall(l => !l.endsWith(" -")),
       s"every job names the program frame that caused it: $lines")
   }
+
+  test("lifecycle --jobs: each lifecycle op runs once and reports its jobs, one JOB line per job") {
+    val out = new java.io.ByteArrayOutputStream
+    val ops = Console.withOut(out)(Probe.lifecycle(spark, jobLines = true))
+    assert(ops.map(_._1) === Seq("fresh", "dedup", "upsert", "accept-docs",
+      "compact", "tick", "store-compact"))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    ops.foreach { case (op, jobs) =>
+      assert(jobs >= 1, op)
+      assert(lines.count(_.startsWith(s"JOB $op id=")).toLong === jobs, op)
+      assert(lines.exists(_.matches(s"OP $op +jobs= *$jobs .*")), op)
+    }
+    // the census of one pass: 44 jobs when this bound was set
+    assert(ops.map(_._2).sum <= 44L, ops)
+  }
 }
