@@ -374,9 +374,11 @@ object TsdbLayout {
     * over what's on disk.
     *
     * Mechanics, in 100 TB terms:
-    *   1. the affected (metric, day) set comes off the late batch — a
-    *      metadata-sized driver list (late batches touch hours-to-days,
-    *      not history);
+    *   1. the late batch is deduplicated once and collected to the
+    *      driver (the anti-join below broadcasts it, so it was
+    *      driver-sized already), and the affected (metric, day) set
+    *      comes off it — a metadata-sized driver list (late batches
+    *      touch hours-to-days, not history);
     *   2. the existing read is partition-pruned to exactly that set, so
     *      the rewrite's input is the affected slice, not the table;
     *   3. the merged slice materializes via localCheckpoint before the

@@ -337,23 +337,21 @@ object CorpusStore {
       // genuinely new out-of-band batch — then re-derives with zero
       // extra jobs (no anti-joins, no lineage checkpoint), paying the
       // admission machinery only when something must actually drop
-      val oobIds = docsB.select(col(r.idCol).as("cid")).distinct()
+      val oobIds = docsB.select(col(r.idCol)).distinct()
       val tomb = StagedStore.effectiveTombstones(spark, dir, r.idCol)
       val anyTomb = tomb.exists(t =>
-        !t.join(broadcast(oobIds.select(col("cid").as(r.idCol))),
-          Seq(r.idCol)).isEmpty)
-      val dup = ParquetDirs.read(spark, hashesPath(dir))
-        .where(col(BatchCol) =!= bid)
-        .join(broadcast(oobIds), "cid")
-        .select(col("cid").as(r.idCol)).distinct()
-      val anyDup = !dup.isEmpty
+        !t.join(broadcast(oobIds), Seq(r.idCol)).isEmpty)
+      val held = ParquetDirs.read(spark, hashesPath(dir))
+        .where(col(BatchCol) =!= bid).select(col("cid").as(r.idCol))
+      val anyDup =
+        !held.join(broadcast(oobIds), Seq(r.idCol), "left_semi").isEmpty
       if (!anyTomb && !anyDup)
         writeBatch(spark, dir, bid, docsB, r, alsoDocs = false)
       else {
         val noTomb =
           if (!anyTomb) docsB
           else docsB.join(broadcast(tomb.get), Seq(r.idCol), "left_anti")
-        val fresh = noTomb.join(broadcast(dup), Seq(r.idCol), "left_anti")
+        val fresh = StagedStore.notHeldElsewhere(noTomb, held, r.idCol)
         // rows dropped → the docs partition itself is rewritten, so
         // sever the read-then-overwrite lineage on it first (the
         // upsert discipline, as in applyTakedown)
